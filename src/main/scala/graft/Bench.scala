@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main — times the HEADLINE queries on SPARK_GRAFT_SF_DIR and
   * prints ONE compact JSON line (driver contract):
@@ -82,27 +81,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // same SPARK_GRAFT_MASTER override as Verify (r14): a local-cluster
-    // bench pass measures the headline with real executor JVMs — task
-    // results, broadcasts and shuffles crossing process boundaries
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val spark = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // sort-based shuffle writer (see GraftSession.shuffleWriterConf):
-      // the bypass writer's per-map-task file fan-out dominated small
-      // local exchanges and never runs at production partition counts
-      .config(GraftSession.shuffleWriterConf._1, GraftSession.shuffleWriterConf._2)
-      // AQE coalesce floor (see GraftSession.aqeCoalesceFloorConf): stop
-      // byte-tiny/CPU-heavy post-shuffle stages from collapsing to 1 task
-      .config(GraftSession.aqeCoalesceFloorConf._1, GraftSession.aqeCoalesceFloorConf._2)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // cores from SPARK_GRAFT_CPUS; SPARK_GRAFT_MASTER=local-cluster[...]
+    // measures the headline with real executor JVMs (see GraftSession.local)
+    val spark = GraftSession.local(appName = "graft-bench")
     // JVM/codegen warmup so the first measured query isn't charged for it
     spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1000)
       .groupBy("l_returnflag").count().collect()

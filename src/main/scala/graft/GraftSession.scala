@@ -2,7 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** SparkSession factory with the settings every entry point shares.
+/** SparkSession factory with the settings every entry point shares. It is
+  * the only session builder in the engine: Bench, Verify, the tools and
+  * the specs all build through `local`, so a number measured through one
+  * entry point holds for the others.
   *
   * - UTC session timezone: the DuckDB oracle compares naive timestamps.
   * - shuffle.partitions sized to cores (local mode), not the 200 default;
@@ -11,52 +14,18 @@ import org.apache.spark.sql.SparkSession
   *   broadcast-join demotion/promotion) is the 100 TB safety net.
   */
 object GraftSession {
-  /** Force the sort-based shuffle writer even for low reduce-partition
-    * counts (r14 optimization round, guide §2.1/§6): with
-    * shuffle.partitions sized to cores (32), every exchange sat under
-    * the default bypassMergeThreshold (200) and took the bypass writer,
-    * which opens R partition files PER MAP TASK — ~1k file creates per
-    * exchange. jstack sampling of the pagerank rounds showed most
-    * executor threads inside FileOutputStream.open0/FileChannelImpl.map0
-    * instead of query work; forcing the sort writer (1 data + 1 index
-    * file per map task) measured pagerank rounds 1.2-1.3 → 0.45-0.58
-    * s/round (PrDebug A/B). At production partition counts (>200) the
-    * bypass writer never fires, so this also makes local runs exercise
-    * the same writer a 100 TB shuffle uses. Writer choice is
-    * semantics-neutral; r15 makes the value env-overridable
-    * (SPARK_GRAFT_SHUFFLE_BYPASS_THRESHOLD) so the trade the judge
-    * flagged (pagerank +49% vs 9 sub-second rows −10-20%) can be A/B'd
-    * over the whole headline without a code edit — the default stays
-    * the measured-geomean winner recorded in OPTIMIZATION_r15.md.
+  /** `cores` (local-mode threads and shuffle partitions) defaults to
+    * `SPARK_GRAFT_CPUS`, else 4.
     */
-  val shuffleWriterConf: (String, String) =
-    ("spark.shuffle.sort.bypassMergeThreshold",
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_BYPASS_THRESHOLD", "1"))
-
-  /** AQE partition-coalescing floor (r15, guide §2.2/§2.5): with
-    * `parallelismFirst` (default true) AQE coalesces a post-shuffle
-    * stage to `max(bytes / defaultParallelism, minPartitionSize)`-sized
-    * partitions, and the stock 1 MB floor collapses byte-tiny
-    * shuffles to ONE task — which serialized every CPU-heavy projection
-    * over a small exchange (the r14 systemic pattern: arima fits, IRLS,
-    * PCA, LSH audits; r15 profiles: e_anomalies' z-score window 283 ms
-    * and w_sessionize's session window 132 ms, each on 1 task under a
-    * ~1.4 MB exchange). 64 KB keeps full parallelism for those stages.
-    * Scale-adaptive by construction: on a 100 TB shuffle,
-    * bytes/parallelism is orders of magnitude above either floor, so
-    * the knob never engages — it only stops local/small-stage
-    * serialization. Env-overridable for A/B.
-    */
-  val aqeCoalesceFloorConf: (String, String) =
-    ("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-      sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64kb"))
-
-  def local(cores: Int = 32, appName: String = "graft"): SparkSession = {
-    // Same SPARK_GRAFT_MASTER override as Verify (r14): lets Stress/Bench
-    // run under local-cluster[...] executor JVMs without a code change.
+  def local(cores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt,
+            appName: String = "graft"): SparkSession = {
+    // SPARK_GRAFT_MASTER=local-cluster[2,16,24576] runs any entry point
+    // with real executor JVMs, so task results, broadcasts and shuffles
+    // cross process boundaries (launch via spark-submit with the packaged
+    // jar so executors can fetch the graft classes). The builder's
+    // .master overrides spark-submit's --master, so the env wins.
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cores]")
-    val spark = SparkSession
-      .builder()
+    val spark = SparkSession.builder()
       .master(master)
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cores.toString)
@@ -65,8 +34,28 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      .config(shuffleWriterConf._1, shuffleWriterConf._2)
-      .config(aqeCoalesceFloorConf._1, aqeCoalesceFloorConf._2)
+      // Force the sort-based shuffle writer even for low reduce-partition
+      // counts: with shuffle.partitions sized to cores, every exchange sat
+      // under the default threshold (200) and took the bypass writer,
+      // which opens R partition files PER MAP TASK. jstack sampling of
+      // the pagerank rounds showed most executor threads in file
+      // open/map instead of query work; the sort writer (1 data + 1 index
+      // file per map task) took pagerank rounds 1.2-1.3 → 0.45-0.58
+      // s/round in r14. At production partition counts (>200) the bypass
+      // writer never fires, so local runs exercise the writer a 100 TB
+      // shuffle uses. The full-headline A/B that kept it: BENCH_LOCAL
+      // §"Shuffle-writer A/B", OPTIMIZATION_r15.md §3.
+      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
+      // AQE coalescing floor: with `parallelismFirst` AQE coalesces a
+      // post-shuffle stage to max(bytes / defaultParallelism,
+      // minPartitionSize), and the stock 1 MB floor collapses byte-tiny
+      // shuffles to ONE task, serializing every CPU-heavy projection over
+      // a small exchange (arima fits, IRLS, PCA, LSH audits, e_anomalies'
+      // z-score window; OPTIMIZATION_r15.md §6). 64 KB keeps full
+      // parallelism for those stages. On a 100 TB shuffle bytes /
+      // parallelism is orders of magnitude above either floor, so the
+      // setting never engages there.
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64kb")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

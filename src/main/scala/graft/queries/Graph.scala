@@ -96,8 +96,8 @@ object Graph {
       val jump = 0.15 / n
       // r15 round-loop driver-overhead cut — AQE-off scope + lazy
       // intermediate cuts with an eager final cut, see
-      // [[graft.Checkpoints.quietLoop]] (PrDebug v3 A/B: 0.40 →
-      // 0.29-0.34 s/round).
+      // [[graft.Checkpoints.quietLoop]] (BENCH_LOCAL §"Round-loop A/B":
+      // 0.40 → 0.29-0.34 s/round).
       val ranks = graft.Checkpoints.quietLoop(s) { lazyCutOk =>
         var r = nodes.select($"src".as("node"), lit(1.0 / n).as("rank")).cutLineage()
         for (i <- 1 to iterations) {

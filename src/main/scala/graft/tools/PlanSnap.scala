@@ -11,8 +11,9 @@ import java.nio.charset.StandardCharsets
   *
   *   sbt "runMain graft.tools.PlanSnap r14 before g_pagerank,j_range_binned"
   *
-  * Data dir comes from SPARK_GRAFT_SF_DIR (default sf0.1 — the bench SF,
-  * so the dumped shapes are the ones the bench times). Iterative queries
+  * Data dir comes from SPARK_GRAFT_SF_DIR (default sf0.1 — the bench SF)
+  * and cores from SPARK_GRAFT_CPUS, as in Bench, so the dumped shapes are
+  * the ones the bench times. Iterative queries
   * (pagerank, textrank, BPE) materialize intermediate rounds while the
   * DataFrame is being BUILT (eager localCheckpoint), so a snap of those
   * runs the query; that is fine — this is an offline evidence tool.
@@ -24,7 +25,7 @@ object PlanSnap {
     val suffix = args(1)
     val names  = args(2).split(',').map(_.trim).filter(_.nonEmpty)
     val sfDir  = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark  = GraftSession.local(32, "plan-snap")
+    val spark  = GraftSession.local(appName = "plan-snap")
     val outDir = Paths.get(s"plans/$round")
     Files.createDirectories(outDir)
     names.foreach { name =>

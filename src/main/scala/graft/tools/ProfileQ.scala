@@ -10,9 +10,10 @@ import scala.collection.mutable
   *
   *   sbt "runMain graft.tools.ProfileQ g_pagerank [passes]"
   *
-  * Methodology matches Bench: SPARK_GRAFT_SF_DIR data dir, local[32],
-  * count() as the action, one untimed warmup pass then `passes` timed
-  * passes (per-pass breakdown printed; min wall reported).
+  * Methodology matches Bench: SPARK_GRAFT_SF_DIR data dir,
+  * SPARK_GRAFT_CPUS cores, count() as the action, one untimed warmup
+  * pass then `passes` timed passes (per-pass breakdown printed; min wall
+  * reported).
   */
 object ProfileQ {
   def main(args: Array[String]): Unit = {
@@ -20,7 +21,7 @@ object ProfileQ {
     val name = args(0)
     val passes = if (args.length > 1) args(1).toInt else 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.local(32, "profile-q")
+    val spark = GraftSession.local(appName = "profile-q")
     val sc = spark.sparkContext
     val fn = SparkEntry.queries.getOrElse(name, sys.error(s"unknown query '$name'"))
 

@@ -107,10 +107,10 @@ object Stress {
       mult = sys.env.getOrElse("SPARK_GRAFT_STRESS_MULT", "10").toInt))
     require(defaultQueries.contains(conf.corpus),
       s"--corpus must be one of ${defaultQueries.keys.mkString("/")}")
-    val spark = GraftSession.local(32, s"graft-stress-${conf.corpus}")
+    val spark = GraftSession.local(appName = s"graft-stress-${conf.corpus}")
     // fleet-emulation knob: a 1000-executor cluster runs a ×100 corpus
-    // with cluster-scaled shuffle.partitions, not this box's 32 — the
-    // override lets the probe measure that granularity directly
+    // with cluster-scaled shuffle.partitions, not this box's core count —
+    // the override lets the probe measure that granularity directly
     conf.shuffleParts.foreach(p => spark.conf.set("spark.sql.shuffle.partitions", p))
     conf.confs.foreach { case (k, v) => spark.conf.set(k, v) }
     import spark.implicits._
