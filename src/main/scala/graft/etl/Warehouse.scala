@@ -3,6 +3,7 @@ package graft.etl
 import graft.syntax._
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Warehouse layer — S6 CSV seed scan, S7 append / S8 overwrite sinks,
   * S9 catalog bootstrap, S10 batch watermark (SURVEY §2.1).
@@ -56,8 +57,9 @@ object Warehouse {
     * side for LeftAnti, so "broadcast the small batch" is not available;
     * a bucketed target makes the existing side shuffle-free instead.
     */
-  def appendDedup(spark: SparkSession, df: DataFrame, path: String, key: String): Unit =
-    dedupFresh(spark, df, path, key).write.mode(SaveMode.Append).parquet(path)
+  def appendDedup(spark: SparkSession, df: DataFrame, path: String, key: String,
+      schema: StructType = new StructType()): Unit =
+    dedupFresh(spark, df, path, key, schema).write.mode(SaveMode.Append).parquet(path)
 
   /** The dedup half of [[appendDedup]], shared with
     * [[ingestBatchAudited]] (one implementation — the NULL-safe-join and
@@ -72,19 +74,27 @@ object Warehouse {
     * detail lines. A caller whose key IS a row key and whose upstream
     * can double-deliver the same row inside one window pre-dedups the
     * batch itself (ZoloWarehouseSpec's square details do exactly that).
+    *
+    * `schema` is the target's schema when the caller already holds it
+    * (the DSv2 catalog read the footers to load the table); empty means
+    * infer it, which costs one footer-read job.
     */
-  private def dedupFresh(spark: SparkSession, df: DataFrame, path: String, key: String): DataFrame =
+  private def dedupFresh(spark: SparkSession, df: DataFrame, path: String, key: String,
+      schema: StructType = new StructType()): DataFrame =
     if (pathExists(spark, path)) {
+      val reader = if (schema.isEmpty) spark.read else spark.read.schema(schema)
       // no distinct(): the anti-join only tests existence — a distinct
       // would pay an extra shuffle of the target's key column per batch
-      val existing = spark.read.parquet(path).select(col(key).as("__existing_key"))
+      val existing = reader.parquet(path).select(col(key).as("__existing_key"))
       df.join(existing, df(key) <=> existing("__existing_key"), "left_anti")
     } else df
 
   /** The ingest commit: batch → [[appendDedup]] → watermark advance.
-    * Single-writer protocol (like the reference's one cron pipeline,
-    * `square_ETL.py:53-56`): the read-check-append in appendDedup is not
-    * safe under CONCURRENT writers to the same table. Crash safety is:
+    * One writer per table (like the reference's one cron pipeline per
+    * source, `square_ETL.py:53-56`): the read-check-append in appendDedup
+    * is not safe under CONCURRENT writers to the SAME table, while
+    * different tables may land at once ([[ZoloPipeline.loadWarehouse]]
+    * writes its nine tables concurrently). Crash safety is:
     * a crash after the data append but before the watermark write replays
     * the same source window on restart, and the anti-join drops every
     * already-landed key — effectively-once end to end

@@ -202,17 +202,33 @@ object ZoloPipeline {
     * (`qb_customers_ETL.py:190`) as a `createOrReplace`. The query half
     * ([[registerAll]]) stays view-based — loads write bytes, queries
     * don't, so the driver's zolo_* hashes are untouched by this path.
+    *
+    * The nine tables land CONCURRENTLY, as the reference's Square,
+    * Shopify and QuickBooks jobs are independent pipelines: each write
+    * runs on its own pool thread against `spark`, and the call returns
+    * once all of them have finished. The rule is one writer per table —
+    * each table keeps its own create/append/replace order and its
+    * `dedupKey` read-check-append, and no two writes here touch the same
+    * table. The load is not atomic across tables, exactly as the serial
+    * sequence was not: a failed write leaves the other tables landed,
+    * and re-running the load keeps facts effectively-once (dedupKey)
+    * while details accumulate. Every failure, including a source whose
+    * plan cannot be built, is collected; the first is rethrown after all
+    * writes have ended, with the rest attached as suppressed.
     */
   def loadWarehouse(spark: SparkSession, root: String, dir: String = fixturesDir,
       ephemeral: Boolean = false): Unit = {
-    val cat = catalogFor(spark, root, ephemeral)
-    val (sqTrans, sqDetails) = SquareEtl.run(spark, s"$dir/square_payments.json")
-    val (shTrans, shDetails) = ShopifyEtl.run(spark, s"$dir/shopify_orders.json")
-    val (qbTrans, qbDetails) = QuickbooksEtl.run(spark, s"$dir/qb_invoices.json")
+    import org.apache.spark.sql.connector.catalog.{Identifier, TableCatalog}
+    import scala.util.Try
+    val cat    = catalogFor(spark, root, ephemeral)
+    val tables = spark.sessionState.catalogManager.catalog(cat).asInstanceOf[TableCatalog]
+    // a path check on the resolved catalog: spark.catalog.tableExists
+    // would load the table and read its parquet footers (one job each)
+    def exists(table: String) = tables.tableExists(Identifier.of(Array("raw"), table))
 
     def appendKeyed(df: DataFrame, table: String, key: String): Unit = {
       val w = df.writeTo(s"$cat.raw.$table").option("dedupKey", key)
-      if (spark.catalog.tableExists(s"$cat.raw.$table")) w.append()
+      if (exists(table)) w.append()
       else w.create() // first load: CTAS; replays afterwards dedup on key
     }
     // detail tables have no single-row key in the reference either, so
@@ -226,22 +242,73 @@ object ZoloPipeline {
     // effectively-once via dedupKey.
     def appendDetails(df: DataFrame, table: String): Unit = {
       val w = df.writeTo(s"$cat.raw.$table")
-      if (spark.catalog.tableExists(s"$cat.raw.$table")) w.append()
+      if (exists(table)) w.append()
       else w.create()
     }
-    appendKeyed(sqTrans, "square_trans", "payment_id")
-    appendKeyed(shTrans, "shopify_trans", "order_id")
-    appendKeyed(qbTrans, "qb_trans", "payment_id") // DocNumber lands as payment_id (QuickbooksEtl)
-    appendDetails(sqDetails, "square_trans_details")
-    appendDetails(shDetails, "shopify_trans_details")
-    appendDetails(qbDetails, "qb_trans_details")
-    // the reference REPLACES the customer dim on every run
-    QbCustomersEtl.run(spark, s"$dir/qb_customers.json")
-      .writeTo(s"$cat.raw.qb_customers").createOrReplace()
-    Warehouse.readItems(spark, s"$dir/items.csv")
-      .writeTo(s"$cat.ref.items").createOrReplace()
-    Warehouse.readCoffeeProfiles(spark, s"$dir/coffee_profiles.csv")
-      .writeTo(s"$cat.ref.coffee_profiles").createOrReplace()
+    // the reference REPLACES the dims on every run
+    def replace(df: DataFrame, table: String): Unit = df.writeTo(s"$cat.$table").createOrReplace()
+
+    // plans are built here, on the caller; a source that cannot be read
+    // fails only the writes that need it
+    val sq = Try(SquareEtl.run(spark, s"$dir/square_payments.json"))
+    val sh = Try(ShopifyEtl.run(spark, s"$dir/shopify_orders.json"))
+    val qb = Try(QuickbooksEtl.run(spark, s"$dir/qb_invoices.json"))
+    landTogether(spark, Seq(
+      "square_trans"          -> sq.map(p => () => appendKeyed(p._1, "square_trans", "payment_id")),
+      "shopify_trans"         -> sh.map(p => () => appendKeyed(p._1, "shopify_trans", "order_id")),
+      // DocNumber lands as payment_id (QuickbooksEtl)
+      "qb_trans"              -> qb.map(p => () => appendKeyed(p._1, "qb_trans", "payment_id")),
+      "square_trans_details"  -> sq.map(p => () => appendDetails(p._2, "square_trans_details")),
+      "shopify_trans_details" -> sh.map(p => () => appendDetails(p._2, "shopify_trans_details")),
+      "qb_trans_details"      -> qb.map(p => () => appendDetails(p._2, "qb_trans_details")),
+      "qb_customers" -> Try(QbCustomersEtl.run(spark, s"$dir/qb_customers.json"))
+        .map(df => () => replace(df, "raw.qb_customers")),
+      "items" -> Try(Warehouse.readItems(spark, s"$dir/items.csv"))
+        .map(df => () => replace(df, "ref.items")),
+      "coffee_profiles" -> Try(Warehouse.readCoffeeProfiles(spark, s"$dir/coffee_profiles.csv"))
+        .map(df => () => replace(df, "ref.coffee_profiles"))
+    ))
+  }
+
+  /** Runs every planned write at once, one thread each, and returns when
+    * all have ended; see [[loadWarehouse]] for the failure contract. The
+    * pool lives only for this call and its threads are created by the
+    * calling thread (each `submit` below starts one), so they inherit its
+    * SparkContext local properties — job tags, job group, scheduler pool
+    * — and the jobs they run are attributed to the caller. A shared
+    * ExecutionContext would run them on threads created by someone else.
+    */
+  private def landTogether(spark: SparkSession,
+      writes: Seq[(String, scala.util.Try[() => Unit])]): Unit = {
+    import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
+    import scala.util.{Failure, Try}
+    val pool = Executors.newFixedThreadPool(writes.size)
+    val outcomes =
+      try {
+        val running = writes.map { case (table, w) =>
+          w.map { write =>
+            val task: Callable[Unit] = () => {
+              Thread.currentThread().setName(s"loadWarehouse-$table")
+              // WarehouseCatalog resolves SparkSession.active
+              SparkSession.setActiveSession(spark)
+              write()
+            }
+            pool.submit(task)
+          }
+        }
+        running.map(_.flatMap { f =>
+          Try(f.get()).recoverWith { case e: ExecutionException => Failure(e.getCause) }
+        })
+      } finally {
+        pool.shutdown()
+        pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+      }
+    // distinct: a source that failed to plan fails its fact and detail write with one exception
+    val failures = outcomes.collect { case Failure(e) => e }.distinct
+    failures.headOption.foreach { first =>
+      failures.tail.foreach(first.addSuppressed)
+      throw first
+    }
   }
 
   /** Resolve a catalog NAME for the requested warehouse root. Spark

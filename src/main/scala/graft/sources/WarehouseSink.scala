@@ -122,7 +122,7 @@ final class WarehouseSinkTable(
   }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new WarehouseWriteBuilder(path, Option(info.options.get("dedupKey")))
+    new WarehouseWriteBuilder(path, Option(info.options.get("dedupKey")), tableSchema)
 }
 
 /** `truncate()` flips the append into a directory overwrite — Catalyst
@@ -130,7 +130,7 @@ final class WarehouseSinkTable(
   * mode("overwrite"), INSERT OVERWRITE, writeTo(...).createOrReplace's
   * replacement write).
   */
-final class WarehouseWriteBuilder(path: String, dedupKey: Option[String])
+final class WarehouseWriteBuilder(path: String, dedupKey: Option[String], tableSchema: StructType)
     extends WriteBuilder
     with SupportsTruncate {
   private var truncateFirst = false
@@ -139,23 +139,28 @@ final class WarehouseWriteBuilder(path: String, dedupKey: Option[String])
 
   override def build(): Write = new V1Write {
     override def toInsertableRelation: InsertableRelation =
-      new WarehouseInsertableRelation(path, truncateFirst, dedupKey)
+      new WarehouseInsertableRelation(path, truncateFirst, dedupKey, tableSchema)
   }
 }
 
 /** The V1 landing: same writers the batch ingest path uses, so the DSv2
   * face and `Warehouse.append`/`overwrite` are byte-equivalent on disk.
+  * `tableSchema` is the schema the table was loaded with; the dedup
+  * anti-join reads the existing keys with it instead of reading the
+  * footers a second time (empty for the format face over an absent
+  * path, where the dedup infers).
   */
 final class WarehouseInsertableRelation(
     path: String,
     truncateFirst: Boolean,
-    dedupKey: Option[String]
+    dedupKey: Option[String],
+    tableSchema: StructType
 ) extends InsertableRelation {
   override def insert(data: DataFrame, overwrite: Boolean): Unit =
     if (truncateFirst || overwrite) Warehouse.overwrite(data, path)
     else
       dedupKey match {
-        case Some(k) => Warehouse.appendDedup(data.sparkSession, data, path, k)
+        case Some(k) => Warehouse.appendDedup(data.sparkSession, data, path, k, tableSchema)
         case None    => Warehouse.append(data, path)
       }
 }

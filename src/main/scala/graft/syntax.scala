@@ -42,7 +42,8 @@ object syntax {
       import org.apache.spark.sql.catalyst.plans.logical._
       val shuffleOp = df.queryExecution.analyzed.collectFirst {
         case p @ (_: Join | _: Aggregate | _: Window | _: Sort |
-                  _: Distinct | _: RepartitionOperation | _: GlobalLimit) => p.nodeName
+                  _: Distinct | _: Deduplicate | _: Intersect | _: Except |
+                  _: RepartitionOperation | _: GlobalLimit) => p.nodeName
       }
       require(shuffleOp.isEmpty,
         s"spreadAcrossCores is for scan-level frames only — lineage contains a " +

@@ -542,7 +542,7 @@ object ChaosProbe {
   def main(args: Array[String]): Unit = {
     val base  = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val mode  = sys.env.getOrElse("SPARK_GRAFT_CHAOS_MODE", "docs")
-    val spark = GraftSession.local(8, "graft-chaos-probe")
+    val spark = GraftSession.local(appName = "graft-chaos-probe")
     if (mode == "execkill") { execKill(spark, base); spark.stop(); return }
     if (mode == "speccount") { specCount(spark, base); spark.stop(); return }
     val checks: Seq[(String, () => Long)] =

@@ -123,6 +123,131 @@ class WarehouseDsv2Spec extends SparkSpec {
       headsA ++ heads.collect().toSet, "fact replay duplicated headers")
   }
 
+  private val loadedTables = Seq(
+    "raw/square_trans", "raw/shopify_trans", "raw/qb_trans",
+    "raw/square_trans_details", "raw/shopify_trans_details", "raw/qb_trans_details",
+    "raw/qb_customers", "ref/items", "ref/coffee_profiles")
+
+  /** The serial reference for one load: the same ETL plans landed one
+    * table after another through the batch helpers the DSv2 face
+    * delegates to (dedup-appended facts, appended details, overwritten
+    * dims).
+    */
+  private def serialLoad(root: String, dir: String): Unit = {
+    import graft.etl.{QbCustomersEtl, QuickbooksEtl, ShopifyEtl, Warehouse}
+    val (sqT, sqD) = SquareEtl.run(spark, s"$dir/square_payments.json")
+    val (shT, shD) = ShopifyEtl.run(spark, s"$dir/shopify_orders.json")
+    val (qbT, qbD) = QuickbooksEtl.run(spark, s"$dir/qb_invoices.json")
+    Warehouse.appendDedup(spark, sqT, s"$root/raw/square_trans", "payment_id")
+    Warehouse.appendDedup(spark, shT, s"$root/raw/shopify_trans", "order_id")
+    Warehouse.appendDedup(spark, qbT, s"$root/raw/qb_trans", "payment_id")
+    Warehouse.append(sqD, s"$root/raw/square_trans_details")
+    Warehouse.append(shD, s"$root/raw/shopify_trans_details")
+    Warehouse.append(qbD, s"$root/raw/qb_trans_details")
+    Warehouse.overwrite(QbCustomersEtl.run(spark, s"$dir/qb_customers.json"), s"$root/raw/qb_customers")
+    Warehouse.overwrite(Warehouse.readItems(spark, s"$dir/items.csv"), s"$root/ref/items")
+    Warehouse.overwrite(Warehouse.readCoffeeProfiles(spark, s"$dir/coffee_profiles.csv"),
+      s"$root/ref/coffee_profiles")
+  }
+
+  test("concurrent load: two windows and a replay match a serial reference load row for row") {
+    val (winA, winB) = splitFixtureWindows()
+    val (root, ref)  = (tmp("zolo-conc"), tmp("zolo-serial"))
+    for (w <- Seq(winA, winB, winA)) {
+      ZoloPipeline.loadWarehouse(spark, root, w)
+      serialLoad(ref, w)
+    }
+    for (t <- loadedTables) {
+      val (got, want) = (spark.read.parquet(s"$root/$t"), spark.read.parquet(s"$ref/$t"))
+      assert(want.count() > 0, s"$t: empty reference")
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty, s"$t differs from the serial load")
+    }
+  }
+
+  /** Tag sets of every Spark job started while `body` runs. */
+  private def jobTagsDuring(body: => Unit): Seq[Set[String]] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Set[String]]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+          .map(_.split(',').filter(_.nonEmpty).toSet).getOrElse(Set.empty))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try body
+    finally {
+      org.apache.spark.GraftBusDrain.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    seen.toArray(Array.empty[Set[String]]).toSeq
+  }
+
+  private def taggedLoad(root: String): Seq[Set[String]] = {
+    val sc = spark.sparkContext
+    jobTagsDuring {
+      sc.addJobTag("zolo-load-under-test")
+      try ZoloPipeline.loadWarehouse(spark, root)
+      finally sc.removeJobTag("zolo-load-under-test")
+    }
+  }
+
+  test("concurrent load: every job carries the caller's job tag") {
+    val root = tmp("zolo-tags")
+    // cold (CTAS) and warm (append/replace) loads
+    for (jobs <- Seq(taggedLoad(root), taggedLoad(root))) {
+      assert(jobs.nonEmpty, "no jobs observed")
+      assert(jobs.forall(_.contains("zolo-load-under-test")),
+        s"${jobs.count(!_.contains("zolo-load-under-test"))} of ${jobs.size} jobs lost the caller's tag")
+    }
+  }
+
+  test("warm load starts at most 25 jobs (no footer reads for existence checks or dedup schemas)") {
+    val root = tmp("zolo-jobs")
+    ZoloPipeline.loadWarehouse(spark, root)
+    val jobs = taggedLoad(root)
+    assert(jobs.size <= 25, s"warm load ran ${jobs.size} jobs")
+  }
+
+  test("concurrent load failure: the first error is rethrown after the other writes land") {
+    import java.nio.file.{Files => F, Paths}
+    def fixturesWithout(missing: String*): String = {
+      val d = tmp("zolo-missing")
+      for (f <- Seq("square_payments.json", "shopify_orders.json", "qb_invoices.json",
+          "qb_customers.json", "items.csv", "coffee_profiles.csv") if !missing.contains(f))
+        F.copy(Paths.get(s"${ZoloPipeline.fixturesDir}/$f"), Paths.get(s"$d/$f"))
+      d
+    }
+    def poolThreads() = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+      .filter(_.getName.startsWith("loadWarehouse-")).toSeq
+
+    val root = tmp("zolo-fail")
+    val e = intercept[Exception](ZoloPipeline.loadWarehouse(spark, root, fixturesWithout("qb_invoices.json")))
+    assert(e.getMessage.contains("qb_invoices.json"), e.getMessage)
+    // thrown only once every other table has landed
+    for (t <- loadedTables.filterNot(_.startsWith("raw/qb_trans")))
+      assert(spark.read.parquet(s"$root/$t").count() > 0, s"$t not landed before the error surfaced")
+    assert(!new java.io.File(s"$root/raw/qb_trans").exists())
+    // the pool is shut down: its threads end (join bounds the exit race)
+    poolThreads().foreach(_.join(10000))
+    assert(poolThreads().forall(!_.isAlive), s"pool threads alive: ${poolThreads().map(_.getName)}")
+
+    // two failing sources: the first in write order is thrown, the other rides as suppressed
+    val e2 = intercept[Exception](ZoloPipeline.loadWarehouse(spark, tmp("zolo-fail2"),
+      fixturesWithout("shopify_orders.json", "qb_invoices.json")))
+    assert(e2.getMessage.contains("shopify_orders.json"), e2.getMessage)
+    assert(e2.getSuppressed.map(_.getMessage).toSeq.exists(_.contains("qb_invoices.json")),
+      e2.getSuppressed.map(_.getMessage).mkString("; "))
+
+    // a write that fails on its pool thread surfaces as its own error too
+    val root3 = tmp("zolo-fail3")
+    F.createDirectories(Paths.get(s"$root3/raw"))
+    F.write(Paths.get(s"$root3/raw/square_trans"), "not parquet".getBytes)
+    val e3 = intercept[Exception](ZoloPipeline.loadWarehouse(spark, root3))
+    assert(!e3.isInstanceOf[java.util.concurrent.ExecutionException], e3.toString)
+    assert(spark.read.parquet(s"$root3/raw/shopify_trans").count() > 0)
+  }
+
   test("SQL-only consumer: CREATE / INSERT / SELECT / INSERT OVERWRITE / DROP via the catalog") {
     val root = tmp("zolo-cat-sql")
     spark.conf.set("spark.sql.catalog.wsql", classOf[WarehouseCatalog].getName)
