@@ -4,27 +4,27 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** The library's `SparkSessionExtensions` entry point — the
-  * deployment-grade registration path:
+/** The library's `SparkSessionExtensions` entry point and the only way
+  * its SQL functions and planner rules reach a session. It injects the
+  * native expressions of [[graft.functions.GraftFunctions.builders]]
+  * into the function registry, the [[graft.plans.TopKStrategy]] planner
+  * strategy and the conf-gated [[graft.plans.TopKRewrite]] optimizer
+  * rule. `GraftSession.local` installs it on every session it builds;
+  * a session built elsewhere gets it through
   *
   * {{{
   * spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   * }}}
   *
-  * makes the native expressions (`hamming64`, `cosine64`) available to
-  * every session — SQL and Column API, no per-session `register()` — and
-  * installs the [[graft.plans.TopKStrategy]] planner strategy so the
-  * bounded-heap per-key top-k operator plans without touching
-  * `spark.experimental`. The programmatic paths
-  * ([[graft.functions.GraftFunctions.register]], [[graft.plans.TopK.perKey]])
-  * remain for embedded use; both routes produce identical plans.
+  * Extensions apply when a session is created, and carry over to its
+  * `newSession()` and `cloneSession()` (streaming micro-batches).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     // the COMPLETE function surface, from the same builder list the
-    // programmatic register() consumes — extensions-deployed sessions
-    // and embedded sessions can never see different function sets
+    // Column functions build from — SQL and the Column API can never
+    // see different function sets
     graft.functions.GraftFunctions.builders.foreach { case (name, cls, builder) =>
       ext.injectFunction(
         (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder)

@@ -12,6 +12,9 @@ import org.apache.spark.sql.SparkSession
   *   on a real cluster AQE coalesces post-shuffle partitions anyway.
   * - AQE on: runtime re-plan (skew-join splitting, shuffle coalescing,
   *   broadcast-join demotion/promotion) is the 100 TB safety net.
+  * - [[GraftExtensions]] installed: the SQL functions and the top-k
+  *   planner rules are in every session it builds, and in their
+  *   `newSession()`s, so query code never registers anything.
   */
 object GraftSession {
   /** `cores` (local-mode threads and shuffle partitions) defaults to
@@ -28,6 +31,7 @@ object GraftSession {
     val spark = SparkSession.builder()
       .master(master)
       .appName(appName)
+      .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

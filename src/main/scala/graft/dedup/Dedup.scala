@@ -218,7 +218,6 @@ object Dedup {
     * ⇒ at least one of 4 segments equal), verify exact Hamming distance.
     */
   def simhashPairs(docs: DataFrame, maxHamming: Int, sigDump: Option[String] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // same boundary-oracle dump option as [[minhashPairs]]
     val (sh, cleanup): (DataFrame, () => Unit) = sigDump match {
       case Some(path) =>
@@ -472,9 +471,8 @@ object Dedup {
     //    consistent global order" is a valid prefix filter; (df asc,
     //    hash asc) just keeps the rare-token concentration that makes it
     //    cheap.
-    graft.functions.GraftFunctions.register(s)
     // localCheckpoint, not persist (r11 review): dedup_containment builds
-    // the IDENTICAL canonical plan (shingles3 is a registered native
+    // the IDENTICAL canonical plan (shingles3 is a native Catalyst
     // expression, so unlike udf{} lambdas the two queries' persists
     // canonicalize equal and share one CacheManager entry) — the first
     // finisher's unpersist would race the sibling mid-materialization
@@ -620,7 +618,6 @@ object Dedup {
     // xxhash64(tok) through the shuffles/join (lossless — see the
     // candidate-verification argument there; verification below is the
     // exact array_intersect on the full shingle sets)
-    graft.functions.GraftFunctions.register(input.sparkSession)
     // localCheckpoint, not persist (r11 review): plan-identical to
     // dedupPpjoinPairs' shingled frame — see the race note there.
     val docs = input
@@ -737,7 +734,6 @@ object Dedup {
     * batch [[minhashPairs]] path, same as before.
     */
   val sqlLshPairs: Q = (s, d) => {
-    graft.functions.GraftFunctions.register(s)
     s.sql(
       s"""WITH sigs AS (
          |  SELECT doc_id, minhash_sig(text) AS sig
@@ -879,7 +875,6 @@ object Dedup {
     * fold order matches DuckDB's sequential list_dot_product).
     */
   val dedupEmbeddingCosine: Q = (s, d) => {
-    graft.functions.GraftFunctions.register(s)
     val e = Tables
       .embeddings(s, d)
       .filter($"vec_id" % 50 === 0)

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -37,10 +37,10 @@ object GraftFunctions {
   }
 
   /** The COMPLETE function surface as (name, expression class, builder)
-    * — the single source both registration routes consume
-    * ([[register]] for embedded sessions, [[graft.GraftExtensions]] for
-    * `spark.sql.extensions` deployments), so the two faces can never
-    * offer different function sets.
+    * — the single source of both faces: [[graft.GraftExtensions]] injects
+    * it into every session (`GraftSession.local` installs the extension)
+    * for SQL, and the Column functions below build from the same entries,
+    * so the two faces can never offer different function sets.
     */
   val builders: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
     ("hamming64", classOf[Hamming64], binary("hamming64", Hamming64.apply) _),
@@ -72,19 +72,6 @@ object GraftFunctions {
     ("vector_ok", classOf[VectorOk], binary("vector_ok", VectorOk.apply) _)
   )
 
-  /** Idempotent: queries call this at build time, many per session —
-    * replacing an already-registered function logs a WARN per call (r5
-    * bench tails were full of them), so registration happens only once
-    * per session.
-    */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (name, _, b) =>
-      if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
-        reg.createOrReplaceTempFunction(name, b, "built-in")
-    }
-  }
-
   /** Builder for 1-or-2-arity functions: the second argument defaults to
     * the engine's constant (minhash_sig → 16 permutations, forecast_ses
     * → α=0.6) when omitted in SQL.
@@ -109,51 +96,38 @@ object GraftFunctions {
     f(exprs(0))
   }
 
-  /** Column surface (requires [[register]] on the session first). */
-  def hamming64(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function("hamming64", a, b)
-  def cosine64(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function("cosine64", a, b)
-  def dot64(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function("dot64", a, b)
-  def bigrams(text: Column): Column =
-    org.apache.spark.sql.functions.call_function("bigrams", text)
-  def minhashSig(text: Column, k: Column): Column =
-    org.apache.spark.sql.functions.call_function("minhash_sig", text, k)
-  def simhash64(text: Column): Column =
-    org.apache.spark.sql.functions.call_function("simhash64", text)
-  def shingles3(text: Column): Column =
-    org.apache.spark.sql.functions.call_function("shingles3", text)
-  def tokenCount(text: Column): Column =
-    org.apache.spark.sql.functions.call_function("token_count", text)
-  def normalizeText(text: Column): Column =
-    org.apache.spark.sql.functions.call_function("normalize_text", text)
-  def docFingerprint(text: Column): Column =
-    org.apache.spark.sql.functions.call_function("doc_fingerprint", text)
-  def winnowFps(text: Column): Column =
-    org.apache.spark.sql.functions.call_function("winnow_fps", text)
-  def langId(text: Column): Column =
-    org.apache.spark.sql.functions.call_function("lang_id", text)
-  def qualityScore(text: Column): Column =
-    org.apache.spark.sql.functions.call_function("quality_score", text)
-  def jaccardShingles(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function("jaccard_shingles", a, b)
-  def forecastSes(series: Column, alpha: Column): Column =
-    org.apache.spark.sql.functions.call_function("forecast_ses", series, alpha)
-  def forecastHolt(series: Column): Column =
-    org.apache.spark.sql.functions.call_function("forecast_holt", series)
-  def forecastArima(series: Column): Column =
-    org.apache.spark.sql.functions.call_function("forecast_arima", series)
-  def forecastHw(series: Column, period: Column): Column =
-    org.apache.spark.sql.functions.call_function("forecast_hw", series, period)
-  def forecastCroston(series: Column): Column =
-    org.apache.spark.sql.functions.call_function("forecast_croston", series)
-  def minhashEst(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function("minhash_est", a, b)
-  def zvalue16(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function("zvalue16", a, b)
-  def vectorOk(vec: Column, dim: Column): Column =
-    org.apache.spark.sql.functions.call_function("vector_ok", vec, dim)
+  private val builderOf: Map[String, Seq[Expression] => Expression] =
+    builders.map { case (name, _, b) => name -> b }.toMap
+
+  /** Column surface: each function builds its expression straight from
+    * its [[builders]] entry, with no function-registry lookup, so it
+    * works on any session and names its column as the SQL face does.
+    */
+  private def call(name: String, args: Column*): Column =
+    GraftSqlBridge.column(builderOf(name)(args.map(GraftSqlBridge.expression)))
+
+  def hamming64(a: Column, b: Column): Column = call("hamming64", a, b)
+  def cosine64(a: Column, b: Column): Column = call("cosine64", a, b)
+  def dot64(a: Column, b: Column): Column = call("dot64", a, b)
+  def bigrams(text: Column): Column = call("bigrams", text)
+  def minhashSig(text: Column, k: Column): Column = call("minhash_sig", text, k)
+  def simhash64(text: Column): Column = call("simhash64", text)
+  def shingles3(text: Column): Column = call("shingles3", text)
+  def tokenCount(text: Column): Column = call("token_count", text)
+  def normalizeText(text: Column): Column = call("normalize_text", text)
+  def docFingerprint(text: Column): Column = call("doc_fingerprint", text)
+  def winnowFps(text: Column): Column = call("winnow_fps", text)
+  def langId(text: Column): Column = call("lang_id", text)
+  def qualityScore(text: Column): Column = call("quality_score", text)
+  def jaccardShingles(a: Column, b: Column): Column = call("jaccard_shingles", a, b)
+  def forecastSes(series: Column, alpha: Column): Column = call("forecast_ses", series, alpha)
+  def forecastHolt(series: Column): Column = call("forecast_holt", series)
+  def forecastArima(series: Column): Column = call("forecast_arima", series)
+  def forecastHw(series: Column, period: Column): Column = call("forecast_hw", series, period)
+  def forecastCroston(series: Column): Column = call("forecast_croston", series)
+  def minhashEst(a: Column, b: Column): Column = call("minhash_est", a, b)
+  def zvalue16(a: Column, b: Column): Column = call("zvalue16", a, b)
+  def vectorOk(vec: Column, dim: Column): Column = call("vector_ok", vec, dim)
 }
 
 /** Hamming distance between two 64-bit signatures. ExpectsInputTypes so a

@@ -78,7 +78,6 @@ object SqlSurfaceQueries {
     // newline / double-space separators. Runs every driver sweep — the
     // adversarial surface is gate-checked, not only spec-checked.
     "sql_fuzz_parity" -> ((s, _) => {
-      GraftFunctions.register(s)
       val frags = fuzzFrags.map(f => s"'${f.replace("'", "''")}'").mkString(", ")
       def h(pfx: String, over: String = "i") =
         s"CAST(conv(substring(md5(CAST(concat_ws('|','$pfx',$over) AS BINARY)),1,12),16,10) AS BIGINT)"
@@ -112,7 +111,6 @@ object SqlSurfaceQueries {
            |FROM built ORDER BY i""".stripMargin)
     }),
     "sql_text_stats" -> ((s, d) => {
-      GraftFunctions.register(s)
       s.sql(
         s"""SELECT doc_id,
            |  token_count(text) AS n_tokens,
@@ -129,7 +127,6 @@ object SqlSurfaceQueries {
     // The sequential-IEEE fold is the same arithmetic the m_ses_forecast
     // oracle replays with list_reduce, so the hash gate is exact.
     "sql_ses_by_profile" -> ((s, d) => {
-      GraftFunctions.register(s)
       s.sql(
         s"""SELECT profile_name,
            |  forecast_ses(transform(array_sort(collect_list(struct(week_date, weight))),
@@ -174,7 +171,6 @@ object SqlSurfaceQueries {
     // across cores. Same rows, same fold per profile, same result
     // (oracle/golden unchanged).
     "sql_arima_auto" -> ((s, d) => {
-      GraftFunctions.register(s)
       val spread = s.sparkContext.defaultParallelism
       s.sql(
         s"""SELECT profile_name, f.best_config, f.mse, f.prediction,
@@ -202,7 +198,6 @@ object SqlSurfaceQueries {
     // m_hw_fixed's whole chain (rollup, spine gap-fill, seasonal fold)
     // as one SQL statement; same oracle pins it
     "sql_hw_by_profile" -> ((s, d) => {
-      GraftFunctions.register(s)
       s.sql(
         s"""WITH ${gapfilledSeriesCte(d)},
            |fitted AS (SELECT profile_name, forecast_hw(xs) AS f FROM series)
@@ -217,7 +212,6 @@ object SqlSurfaceQueries {
     // Croston's intermittent-demand method over the same gap-filled
     // series — m_croston's chain as one SQL statement
     "sql_croston_by_profile" -> ((s, d) => {
-      GraftFunctions.register(s)
       s.sql(
         s"""WITH ${gapfilledSeriesCte(d)},
            |fitted AS (SELECT profile_name, forecast_croston(xs) AS f FROM series)
@@ -236,7 +230,6 @@ object SqlSurfaceQueries {
     // DataFrame path; the broadcast hint keeps the corpus scan map-only
     // exactly like the library query's broadcast(probes).
     "sql_ann_topk" -> ((s, d) => {
-      GraftFunctions.register(s)
       s.sql(
         s"""WITH e AS (
            |  SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS v

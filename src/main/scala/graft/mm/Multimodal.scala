@@ -564,7 +564,6 @@ object Multimodal {
       id: String,
       outA: String,
       outB: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val segs = hashes.select(
       col(id),
       $"ahash",

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, EqualTo, ExprId, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal, RowNumber, SortOrder, UnsafeProjection, WindowExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
@@ -225,18 +225,11 @@ object TopKRewrite extends Rule[LogicalPlan] {
   }
 }
 
+/** The Column-API face of the bounded-heap operator. The planner
+  * strategy and the rewrite rule reach a session only through
+  * [[graft.GraftExtensions]], which `GraftSession.local` installs.
+  */
 object TopK {
-
-  def install(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKStrategy
-    // the rewrite rule is conf-gated (default off), so installing it is
-    // inert until a session opts in via TopKRewrite.confKey
-    if (!spark.experimental.extraOptimizations.contains(TopKRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ TopKRewrite
-  }
 
   /** Per-key top-k of `df` under the caller-supplied ordering. Every
     * ordering column MUST carry an explicit direction (`.asc`/`.desc`) —
@@ -252,10 +245,14 @@ object TopK {
       "TopK.perKey: keys must be non-empty — for GLOBAL top-k use orderBy(...).limit(k)")
     require(k >= 1, s"TopK.perKey: k must be >= 1, got $k")
     val spark = df.sparkSession
-    install(spark)
-    val part = keys.map(c => GraftSqlBridge.expr(spark, c))
+    // without the strategy the planner only fails at execution, with
+    // "No plan for TopKPerKey"
+    require(spark.sessionState.planner.extraPlanningStrategies.contains(TopKStrategy),
+      "TopK.perKey: this session has no TopKStrategy — build it with " +
+        "GraftSession.local or set spark.sql.extensions=graft.GraftExtensions")
+    val part = keys.map(GraftSqlBridge.expression)
     val ord = ordering.map { c =>
-      GraftSqlBridge.expr(spark, c) match {
+      GraftSqlBridge.expression(c) match {
         case so: SortOrder => so
         case e =>
           throw new IllegalArgumentException(

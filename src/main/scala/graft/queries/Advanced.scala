@@ -753,10 +753,12 @@ object Advanced {
       // Spark's sqrt yields NaN while DuckDB ERRORS, crashing the oracle
       // (r3 self-review)
       .filter($"var_v" > 0)
-      .select($"event_type", $"mean_v", $"var_v")
+      .select($"event_type".as("m_type"), $"mean_v", $"var_v")
+    // null-safe: NULL-typed events form one group, as in the oracle's
+    // PARTITION BY event_type; still a broadcast hash join
     Tables
       .events(s, d)
-      .join(broadcast(moments), Seq("event_type"))
+      .join(broadcast(moments), $"event_type" <=> $"m_type")
       .withColumn("z", ($"value" - $"mean_v") / sqrt($"var_v"))
       .filter(abs($"z") > 3.0)
       .select($"event_id", $"event_type", $"value", round($"z", 6).as("z_score"))

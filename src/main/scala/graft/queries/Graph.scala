@@ -259,7 +259,7 @@ object Graph {
                   // within noise; correctness FP-independent)
                   numBits = math.min(math.max(edgeCount * 5L, 1L << 20), maxBits)))
               def pruned(cand: DataFrame) = bloomOpt.fold(cand)(b =>
-                cand.filter(RuntimeFilter.mightContain(spark, b, pairKey)))
+                cand.filter(RuntimeFilter.mightContain(b, pairKey)))
               if (passes == 1)
                 pruned(candOf(de)).join(closing, Seq("x", "y"), "left_semi").count()
               else {

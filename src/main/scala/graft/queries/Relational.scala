@@ -435,7 +435,6 @@ object Relational {
     * on/off row equality.
     */
   val oTopkSqlRewrite: Q = (s, d) => {
-    graft.plans.TopK.install(s)
     s.conf.set(graft.plans.TopKRewrite.confKey, "true")
     try
       s.sql(

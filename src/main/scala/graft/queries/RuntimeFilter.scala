@@ -58,8 +58,7 @@ object RuntimeFilter {
     * for the spec; the default sizes ~1% FP at `expectedKeys`.
     */
   def buildBloom(df: DataFrame, key: Column, expectedKeys: Long, numBits: Long): Array[Byte] = {
-    val s = df.sparkSession
-    val hashed = GraftSqlBridge.expr(s, xxhash64(key))
+    val hashed = GraftSqlBridge.expression(xxhash64(key))
     val agg = new BloomFilterAggregate(
       hashed,
       Literal(expectedKeys),
@@ -70,13 +69,13 @@ object RuntimeFilter {
   }
 
   /** `might_contain(bloom, xxhash64(key))` as a pushable scan predicate. */
-  def mightContain(s: SparkSession, bloom: Array[Byte], key: Column): Column =
+  def mightContain(bloom: Array[Byte], key: Column): Column =
     GraftSqlBridge.column(
       BloomFilterMightContain(
         Literal(bloom, BinaryType),
         // seed 42 — the same default as the `xxhash64` function used on
         // the build side, so probe and build hash identically
-        new XxHash64(Seq(GraftSqlBridge.expr(s, key)))
+        new XxHash64(Seq(GraftSqlBridge.expression(key)))
       )
     )
 
@@ -85,7 +84,7 @@ object RuntimeFilter {
     */
   def prunedFact(s: SparkSession, dir: String, bloom: Array[Byte]): DataFrame =
     Tables.lineitem(s, dir)
-      .filter(mightContain(s, bloom, $"l_orderkey"))
+      .filter(mightContain(bloom, $"l_orderkey"))
 
   /** Revenue by priority over the urgent-H2-1997 slice, fact scan pruned
     * by the runtime bloom. Result == the plain join (oracle): the final
@@ -125,7 +124,7 @@ object RuntimeFilter {
     val batch  = docs.filter($"doc_id" % 2 === 1)
     val bloom  = buildBloom(corpus, $"fp", expectedKeys = 1 << 16, numBits = numBits)
     batch
-      .filter(mightContain(s, bloom, $"fp"))
+      .filter(mightContain(bloom, $"fp"))
       .join(corpus.select($"fp"), Seq("fp"), "left_semi")
       .select($"doc_id", $"fp")
       .orderBy($"doc_id")

@@ -200,7 +200,6 @@ object HierIvf {
       coarseDump: Option[String] = None,
       fineDump: Option[String] = None
   ): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e              = Tables.embeddings(s, d).select($"vec_id", asDouble($"embedding").as("v"))
     val (coarse, fine) = trainCentroidsHier(s, e, kc, kf, iters = 3)
     coarseDump.foreach { p =>
@@ -262,7 +261,6 @@ object HierIvf {
       iters: Int,
       sampleCap: Int = -1
   ): (Array[Array[Double]], Array[Array[Array[Double]]]) = {
-    graft.functions.GraftFunctions.register(s)
     val (coarse, fine) = trainCentroidsHier(s, e, kc, kf, iters, sampleCap)
     val bcC = s.sparkContext.broadcast(coarse)
     val bcF = s.sparkContext.broadcast(fine)

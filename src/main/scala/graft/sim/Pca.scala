@@ -205,7 +205,6 @@ object Pca {
 
   /** pc1 score per vector — the driver query. */
   def pcaProject(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val (mu, ev) = pcaComponents(s, d)
     val muLit    = array(scala.collection.immutable.ArraySeq.unsafeWrapArray(mu.map(lit)): _*)
     val evLit    = array(scala.collection.immutable.ArraySeq.unsafeWrapArray(ev.map(lit)): _*)
@@ -228,7 +227,6 @@ object Pca {
     * products per row, no shuffle.
     */
   def pca2Project(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val (mu, ev1, ev2) = pcaComponents2(s, d)
     val muLit  = array(scala.collection.immutable.ArraySeq.unsafeWrapArray(mu.map(lit)): _*)
     val ev1Lit = array(scala.collection.immutable.ArraySeq.unsafeWrapArray(ev1.map(lit)): _*)

@@ -46,7 +46,6 @@ object Similarity {
     * deterministic cross-engine.
     */
   def bruteForceTopK(s: SparkSession, d: String, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = Tables.embeddings(s, d).select($"vec_id", asDouble($"embedding").as("v"))
     val probes = e.filter($"vec_id" < 10)
       .select($"vec_id".as("probe_id"), $"v".as("pv"))
@@ -254,7 +253,6 @@ object Similarity {
       val wCoarse = math.max(2, math.ceil(nprobe.toDouble / kf).toInt + 1)
       return HierIvf.ivfHierTopK(s, d, k, kc, kf, nprobe, wCoarse)
     }
-    graft.functions.GraftFunctions.register(s)
     val e = Tables.embeddings(s, d).select($"vec_id", asDouble($"embedding").as("v"))
     val cents = trainCentroids(s, e, nCells, iters = 3)
     // boundary-oracle dump (judge r3 #7): the trained centroids become a
@@ -319,7 +317,6 @@ object Similarity {
       nprobe: Int,
       centsDump: Option[String] = None
   ): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e     = Tables.embeddings(s, d).select($"vec_id", asDouble($"embedding").as("v"))
     val cents = trainCentroids(s, e, nCells, iters = 3)
     centsDump.foreach { p =>
@@ -353,7 +350,6 @@ object Similarity {
     * the custom SparkPlan row-for-row.
     */
   def bruteForceTopKNative(s: SparkSession, d: String, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = Tables.embeddings(s, d).select($"vec_id", asDouble($"embedding").as("v"))
     val probes = e.filter($"vec_id" < 10)
       .select($"vec_id".as("probe_id"), $"v".as("pv"))
@@ -385,7 +381,6 @@ object Similarity {
     * differs from cosine's.
     */
   def mipsTopK(s: SparkSession, d: String, k: Int, shortlist: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val dot = graft.functions.GraftFunctions.dot64 _
     val raw = Tables.embeddings(s, d).select($"vec_id", asDouble($"embedding").as("u"))
     val e = raw.select(
@@ -500,7 +495,6 @@ object Similarity {
       val (_, fine) = HierIvf.writeIvfIndexHierFor(s, e, path, kc, kf, iters)
       return fine.flatten
     }
-    graft.functions.GraftFunctions.register(s)
     val cents = trainCentroids(s, e, nCells, iters)
     val bc = s.sparkContext.broadcast(cents)
     val assignCell = udf { (v: Seq[Double]) => nearestCell(bc.value, v) }
@@ -521,7 +515,6 @@ object Similarity {
       k: Int,
       nprobe: Int
   ): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val cells = probeCellsArr(cents, probe, nprobe)
     val idx = s.read.parquet(indexPath).filter($"cell_id".isin(cells: _*))
     val pv  = typedlit(probe.toSeq)
@@ -571,7 +564,6 @@ object Similarity {
       nprobe: Int,
       maxBatch: Long = maxProbeBatch
   ): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val bc = s.sparkContext.broadcast(cents)
     val cellsUdf = udf { (v: Seq[Double]) => probeCells(bc.value, v, nprobe) }
     val probeCellsDf = probes
@@ -640,7 +632,6 @@ object Similarity {
       path: String,
       cents: Array[Array[Double]]
   ): Unit = {
-    graft.functions.GraftFunctions.register(s)
     val bc = s.sparkContext.broadcast(cents)
     val assignCell = udf { (v: Seq[Double]) => nearestCell(bc.value, v) }
     e.withColumn("cell_id", assignCell($"v"))
@@ -686,7 +677,6 @@ object Similarity {
     * on append (the operational argument for SRP over IVF).
     */
   def srpTopK(s: SparkSession, d: String, k: Int, sigDump: Option[String] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = Tables.embeddings(s, d).select($"vec_id", asDouble($"embedding").as("v"))
     // planes span the observed embedding width (sampled from one row —
     // the corpus is fixed-width); empty corpus → dim 0 → empty result,
@@ -755,7 +745,6 @@ object Similarity {
     * broadcast-probes single-scan shape as brute-force top-k.
     */
   def rangeSearch(s: SparkSession, d: String, tau: Double): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = Tables.embeddings(s, d).select($"vec_id", asDouble($"embedding").as("v"))
     val probes = e.filter($"vec_id" < 10)
       .select($"vec_id".as("probe_id"), $"v".as("pv"))
@@ -792,7 +781,6 @@ object Similarity {
       tau: Double,
       centsDump: Option[String] = None
   ): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e     = Tables.embeddings(s, d).select($"vec_id", asDouble($"embedding").as("v"))
     val cents = trainCentroids(s, e, nCells, iters = 3)
     centsDump.foreach { p =>
@@ -1025,7 +1013,6 @@ object Similarity {
       prefixDim: Int = mkPrefixDim,
       shortlist: Int = mkShortlist
   ): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = Tables.embeddings(s, d).select($"vec_id", asDouble($"embedding").as("v"))
     // coarse: prefix-slice cosine, map-only against broadcast probes
     val pr = e
@@ -1115,7 +1102,6 @@ object Similarity {
     * (filter ≠ label, rank rounded cosine) are unchanged.
     */
   def hardNegatives(s: SparkSession, d: String, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = Tables.embeddings(s, d)
       .select($"vec_id", $"label", asDouble($"embedding").as("v"))
     val anchors = e.filter($"vec_id" < annProbeCut)
@@ -1147,7 +1133,6 @@ object Similarity {
     * confusion matrix is one (true, pred) count aggregate.
     */
   val ncmConfusion: Q = (s, d) => {
-    graft.functions.GraftFunctions.register(s)
     val e = Tables.embeddings(s, d)
       .select($"vec_id", $"label", asDouble($"embedding").as("v"))
     val cents = e

@@ -956,7 +956,7 @@ object StreamQueries {
       .option("pathGlobFilter", embGlob)
       .parquet(embPath)
       .filter($"vec_id" < 10)
-      .filter(graft.tables.Tables.vectorContract(s, $"embedding", dim))
+      .filter(graft.tables.Tables.vectorContract($"embedding", dim))
       .select($"vec_id".as("probe_id"),
         transform($"embedding", x => x.cast("double")).as("pv"))
     val q = probes.writeStream
@@ -998,7 +998,6 @@ object StreamQueries {
     * scoring, which the DuckDB oracle replays term by term.
     */
   val streamIngestGate: Q = (s, d) => {
-    graft.functions.GraftFunctions.register(s)
     val ck = java.nio.file.Files.createTempDirectory("graft-sgate-ck").toString
     val docsSchema = graft.tables.Tables.documents(s, d).schema
     val (docsPath, docsGlob) = tableStreamSource(d, "documents")

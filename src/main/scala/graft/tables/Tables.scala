@@ -153,19 +153,16 @@ object Tables {
     */
   def embeddings(s: SparkSession, d: String): DataFrame = {
     val dim = embeddingDim(s, d)
-    embeddingsRaw(s, d).where(vectorContract(s, org.apache.spark.sql.functions.col("embedding"), dim))
+    embeddingsRaw(s, d).where(vectorContract(org.apache.spark.sql.functions.col("embedding"), dim))
   }
 
   /** The contract predicate itself, reusable wherever vectors arrive
     * OUTSIDE the [[embeddings]] scan — e.g. the streaming ANN serving
     * path, whose probe stream reads raw and must reject malformed probe
     * requests the way any serving endpoint does (chaos probe r11 round
-    * 6: a null probe vector NPE'd the probe-cell router). Takes the
-    * session because `vector_ok` resolves through the function registry
-    * (idempotent registration, same as every GraftFunctions consumer).
+    * 6: a null probe vector NPE'd the probe-cell router). A plain
+    * Column: `vector_ok` builds its expression without a session.
     */
-  def vectorContract(s: SparkSession, vec: org.apache.spark.sql.Column, dim: Int): org.apache.spark.sql.Column = {
-    graft.functions.GraftFunctions.register(s)
+  def vectorContract(vec: org.apache.spark.sql.Column, dim: Int): org.apache.spark.sql.Column =
     graft.functions.GraftFunctions.vectorOk(vec, org.apache.spark.sql.functions.lit(dim))
-  }
 }

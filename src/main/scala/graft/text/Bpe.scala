@@ -152,12 +152,10 @@ object Bpe {
     // stages and ran extra stage-materialization jobs per round, pure
     // driver overhead that does not shrink with cluster size (the r15
     // text_bpe_encode profile: 38 one-task jobs, 30-200 ms scheduling
-    // gap each, work 3-40 ms). Plans and results are unchanged — AQE is
-    // restored after the loop, before the corpus-sized encode/consumer
-    // query runs.
-    val prevAqe = s.conf.get("spark.sql.adaptive.enabled", "true")
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    // gap each, work 3-40 ms). The rounds run in the shared AQE-off loop
+    // scope, which restores AQE before the corpus-sized encode/consumer
+    // query runs; plans and results are unchanged.
+    graft.Checkpoints.quietLoop(s) { _ =>
       val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
       val out    = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
       (1 to bpeMerges).foreach { r =>
@@ -182,7 +180,7 @@ object Bpe {
       }
       out.toSeq
       // checkpoint blocks reclaimed by the ContextCleaner once wf is unreferenced
-    } finally s.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    }
   }
 
   /** Driver query: the learned merge table. */

@@ -119,7 +119,6 @@ object Retrieval {
     * so fusion is a join of two tiny tables regardless of corpus size.
     */
   val rrfFusion: Q = (s, d) => {
-    graft.functions.GraftFunctions.register(s)
     val (bmScores, release) = bm25Scores(s, d)
     val bmRanks = bmScores
       .withColumn("r", row_number().over(

@@ -123,7 +123,6 @@ object TextAnalysis {
     // the native `lang_id` expression (SqlLibrary.LangId) wraps the same
     // [[NgramLangId.classify]] kernel — codegen'd, so the scan stays in
     // whole-stage codegen (r10: replaced the interpreted Scala UDF)
-    graft.functions.GraftFunctions.register(s)
     Tables
       .documents(s, d)
       .select($"doc_id", $"lang".as("labeled_lang"),
@@ -776,7 +775,6 @@ object TextAnalysis {
     // String/UTF8String round trip per row. WordBigrams slices bigrams
     // directly out of the source bytes, byte-identical to
     // split(" ", -1) + " ".join (trailing empties kept).
-    graft.functions.GraftFunctions.register(s)
     val bigrams = Tables
       .documents(s, d)
       .select($"lang", explode(graft.functions.GraftFunctions.bigrams($"text")).as("bigram"))
@@ -1298,7 +1296,6 @@ object TextAnalysis {
     * DECIMAL(38,0) (Spark) / HUGEINT (DuckDB) before dividing.
     */
   val textPmiPairs: Q = (s, d) => {
-    graft.functions.GraftFunctions.register(s)
     val c = Tables
       .documents(s, d)
       .select(explode(graft.functions.GraftFunctions.bigrams($"text")).as("bigram"))
@@ -1357,7 +1354,6 @@ object TextAnalysis {
     * pruned); per-doc aggregation partial-aggs map-side.
     */
   val textPerplexity: Q = (s, d) => {
-    graft.functions.GraftFunctions.register(s)
     val bg = Tables
       .documents(s, d)
       .select($"doc_id", explode(graft.functions.GraftFunctions.bigrams($"text")).as("bigram"))
@@ -1413,7 +1409,6 @@ object TextAnalysis {
     * compares the exact decimal sum against zero.
     */
   val textDsir: Q = (s, d) => {
-    graft.functions.GraftFunctions.register(s)
     val isTarget = $"source".isin("src0", "src1", "src2", "src3")
     val bg = Tables
       .documents(s, d)
@@ -1563,7 +1558,6 @@ object TextAnalysis {
     * cost vocab-edge joins, not corpus scans.
     */
   val textTextrank: Q = (s, d) => {
-    graft.functions.GraftFunctions.register(s)
     val e0 = Tables
       .documents(s, d)
       .select(explode(graft.functions.GraftFunctions.bigrams($"text")).as("bigram"))

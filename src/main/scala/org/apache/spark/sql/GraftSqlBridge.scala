@@ -2,17 +2,20 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Minimal private[sql] bridge: wrap a custom LogicalPlan into a
-  * DataFrame. This is the standard extension-library pattern (Spark's
-  * own connectors do the same); nothing else from the private surface is
-  * used.
+/** Minimal private[sql] bridge between Columns/DataFrames and the
+  * Catalyst trees under them. This is the standard extension-library
+  * pattern (Spark's own connectors do the same).
   */
 object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  def expr(spark: SparkSession, c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
-    spark.asInstanceOf[classic.SparkSession].expression(c)
+  /** The Catalyst expression under a Column, converted eagerly (so a
+    * caller can match on it, e.g. a SortOrder) and without a session:
+    * the converter reads the active `SQLConf`.
+    */
+  def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
+    classic.ColumnNodeToExpressionConverter(c.node)
 
   def logicalPlan(df: DataFrame): LogicalPlan =
     df.asInstanceOf[classic.Dataset[Row]].logicalPlan

@@ -3,12 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** GraftExtensions is the conf-driven registration path — a session built
-  * with `spark.sql.extensions=graft.GraftExtensions` must expose the
-  * native expressions in SQL with no register() call, and carry the TopK
-  * planner strategy. (Extensions apply only at session CREATION, so this
-  * spec stops the shared test session and builds a fresh one; later
-  * suites recreate theirs via getOrCreate.)
+/** GraftExtensions through `spark.sql.extensions`, the route for sessions
+  * not built by `GraftSession.local` — a session built with
+  * `spark.sql.extensions=graft.GraftExtensions` must expose the native
+  * expressions in SQL and carry the TopK planner strategy. (Extensions
+  * apply only at session CREATION, so this spec stops the shared test
+  * session and builds a fresh one; later suites recreate theirs via
+  * getOrCreate.)
   */
 class ExtensionsSpec extends AnyFunSuite {
 

@@ -39,17 +39,37 @@ class GraftSessionSpec extends AnyFunSuite {
     }
   }
 
-  test("src/main has exactly one SparkSession builder, in GraftSession.scala") {
-    // forked tests run with cwd = the project base (FunctionCoverageSpec)
-    val base = Paths.get(sys.props("user.dir"), "src/main/scala")
-    val builder = """SparkSession\s*\.\s*builder\s*\(\s*\)""".r
-    val sites = Files.walk(base).iterator().asScala
+  // forked tests run with cwd = the project base (FunctionCoverageSpec)
+  private lazy val mainSources: Seq[(String, String)] =
+    Files.walk(Paths.get(sys.props("user.dir"), "src/main/scala")).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
-      .flatMap { p =>
-        val src = new String(Files.readAllBytes(p), java.nio.charset.StandardCharsets.UTF_8)
-        builder.findAllIn(src).map(_ => p.getFileName.toString)
-      }.toSeq
+      .map(p => p.getFileName.toString ->
+        new String(Files.readAllBytes(p), java.nio.charset.StandardCharsets.UTF_8))
+      .toSeq
+
+  test("src/main has exactly one SparkSession builder, in GraftSession.scala") {
+    val builder = """SparkSession\s*\.\s*builder\s*\(\s*\)""".r
+    val sites = mainSources.flatMap { case (f, src) => builder.findAllIn(src).map(_ => f) }
     assert(sites == Seq("GraftSession.scala"), s"builder call sites: $sites")
+  }
+
+  test("src/main has one registration route: the factory's GraftExtensions") {
+    // functions and planner rules reach a session only through the
+    // extension; a second route would let a query depend on which
+    // session happened to run it
+    val secondRoutes = Seq(
+      """createOrReplaceTempFunction""".r,
+      """GraftFunctions\s*\.\s*register\b""".r,
+      """TopK\s*\.\s*install\b""".r,
+      """experimental\s*\.\s*extra(Strategies|Optimizations)\s*[+:]*=(?!=)""".r)
+    val sites = for {
+      (f, src) <- mainSources
+      re       <- secondRoutes
+      m        <- re.findAllIn(src)
+    } yield s"$f: $m"
+    assert(sites.isEmpty, s"second registration routes: $sites")
+    val factory = mainSources.collectFirst { case ("GraftSession.scala", src) => src }.get
+    assert(factory.contains(".withExtensions(new GraftExtensions)"))
   }
 
   test("Verify.main rejects a wrong argument count before building a session") {

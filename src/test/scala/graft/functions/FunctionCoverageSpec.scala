@@ -7,13 +7,13 @@ import scala.jdk.CollectionConverters._
 
 /** Registry ⊆ tested-surface gate (judge r11 next-round #8): every SQL
   * function registered through GraftFunctions.builders must be (a)
-  * resolvable by name in a live session — the extensions path and the
-  * programmatic path register from the same list, so one session
-  * suffices — and (b) exercised OUTSIDE the registry itself: by at
-  * least one main-path query module (whose queries are oracled by the
-  * driver gate) and at least one test spec. A function added to the
-  * registry without either fails here by name, so the SQL surface can
-  * never silently grow past its tested boundary.
+  * resolvable by name in a session from the factory, which installs
+  * GraftExtensions, and built directly by its Column face, and (b)
+  * exercised OUTSIDE the registry itself: by at least one main-path
+  * query module (whose queries are checked against the DuckDB oracle) and at
+  * least one test spec. A function added to the registry without either
+  * fails here by name, so the SQL surface can never silently grow past
+  * its tested boundary.
   */
 class FunctionCoverageSpec extends AnyFunSuite {
 
@@ -48,10 +48,53 @@ class FunctionCoverageSpec extends AnyFunSuite {
   }
 
   test("every registered function resolves by name in a live session") {
+    // no registration here: the factory's GraftExtensions put the
+    // functions and the top-k strategy into the session, and Verify's
+    // worker route (newSession) inherits both
     val spark = graft.GraftSession.local(2, "fn-coverage")
-    GraftFunctions.register(spark)
-    GraftFunctions.builders.foreach { case (name, _, _) =>
-      assert(spark.catalog.functionExists(name), s"$name not registered")
+    Seq(spark, spark.newSession()).foreach { s =>
+      GraftFunctions.builders.foreach { case (name, _, _) =>
+        assert(s.catalog.functionExists(name), s"$name not registered")
+      }
+      assert(s.sessionState.planner.extraPlanningStrategies.contains(graft.plans.TopKStrategy),
+        "TopKStrategy not installed")
+    }
+  }
+
+  test("every Column function builds its builders expression with no registry lookup") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions.col
+    val (a, b) = (col("a"), col("b"))
+    val faces: Map[String, Column] = Map(
+      "hamming64" -> GraftFunctions.hamming64(a, b),
+      "cosine64" -> GraftFunctions.cosine64(a, b),
+      "dot64" -> GraftFunctions.dot64(a, b),
+      "bigrams" -> GraftFunctions.bigrams(a),
+      "minhash_sig" -> GraftFunctions.minhashSig(a, b),
+      "simhash64" -> GraftFunctions.simhash64(a),
+      "shingles3" -> GraftFunctions.shingles3(a),
+      "token_count" -> GraftFunctions.tokenCount(a),
+      "normalize_text" -> GraftFunctions.normalizeText(a),
+      "doc_fingerprint" -> GraftFunctions.docFingerprint(a),
+      "winnow_fps" -> GraftFunctions.winnowFps(a),
+      "lang_id" -> GraftFunctions.langId(a),
+      "quality_score" -> GraftFunctions.qualityScore(a),
+      "jaccard_shingles" -> GraftFunctions.jaccardShingles(a, b),
+      "forecast_ses" -> GraftFunctions.forecastSes(a, b),
+      "forecast_holt" -> GraftFunctions.forecastHolt(a),
+      "forecast_arima" -> GraftFunctions.forecastArima(a),
+      "forecast_hw" -> GraftFunctions.forecastHw(a, b),
+      "forecast_croston" -> GraftFunctions.forecastCroston(a),
+      "zvalue16" -> GraftFunctions.zvalue16(a, b),
+      "minhash_est" -> GraftFunctions.minhashEst(a, b),
+      "vector_ok" -> GraftFunctions.vectorOk(a, b))
+    assert(faces.keySet == GraftFunctions.builders.map(_._1).toSet)
+    // the expression class itself, not an UnresolvedFunction the
+    // analyzer would look up in a session's registry
+    GraftFunctions.builders.foreach { case (name, cls, _) =>
+      val e = org.apache.spark.sql.GraftSqlBridge.expression(faces(name))
+      assert(e.getClass == cls, s"$name built ${e.getClass.getName}")
+      assert(e.prettyName == name, s"$name prettyName ${e.prettyName}")
     }
   }
 }

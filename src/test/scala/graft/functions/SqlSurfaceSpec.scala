@@ -9,7 +9,6 @@ import graft.SparkSpec
 class SqlSurfaceSpec extends SparkSpec {
 
   test("hamming64 and cosine64 resolve and compute through spark.sql") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       """SELECT hamming64(CAST(5 AS BIGINT), CAST(6 AS BIGINT)) AS h,
         |  cosine64(array(1.0D, 0.0D), array(0.0D, 1.0D)) AS c_orth,
@@ -21,7 +20,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("bigrams resolves and computes through spark.sql") {
-    GraftFunctions.register(spark)
     val r = spark.sql("SELECT bigrams('a b c') AS bg, bigrams('one') AS none").collect()(0)
     assert(r.getSeq[String](0) == Seq("a b", "b c"))
     assert(r.getSeq[String](1) == Seq.empty)
@@ -34,7 +32,6 @@ class SqlSurfaceSpec extends SparkSpec {
   // ------------------------------------------------------------------
 
   private def docsView(): Unit = {
-    GraftFunctions.register(spark)
     graft.tables.Tables.documents(spark, sf0001).createOrReplaceTempView("documents")
   }
 
@@ -111,7 +108,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("jaccard_shingles: identical 1.0, disjoint 0.0, shingle-free null") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       """SELECT jaccard_shingles('a b c d', 'a b c d') AS same,
         |  jaccard_shingles('a b c', 'x y z') AS disjoint,
@@ -125,7 +121,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("forecast_ses / forecast_holt parity with the Models kernels") {
-    GraftFunctions.register(spark)
     val xs = Array(12.0, 15.0, 11.0, 18.0, 16.0, 21.0, 19.0, 24.0)
     val lit = xs.mkString("array(", "D,", "D)")
     val r = spark.sql(
@@ -148,7 +143,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("forecast_arima parity with the Models kernel chain on a synthetic series") {
-    GraftFunctions.register(spark)
     // trending series with noise — long enough for the 75/25 walk-forward
     val xs = Array.tabulate(24)(i => 50.0 + 3.0 * i + (if (i % 3 == 0) 4.0 else -2.0))
     val lit = xs.mkString("array(", "D,", "D)")
@@ -169,7 +163,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("sql_arima_auto: the one-statement SQL face is bit-identical to arimaJob") {
-    GraftFunctions.register(spark)
     val viaSql = SqlSurfaceQueries.queries("sql_arima_auto")(spark, sf0001).collect()
     val viaLib = graft.forecast.ForecastJobs.arimaJob(spark, sf0001).collect()
     assert(viaSql.length == viaLib.length && viaSql.nonEmpty)
@@ -185,7 +178,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("sql_arima_auto plan evaluates forecast_arima ONCE, not once per field") {
-    GraftFunctions.register(spark)
     val df = SqlSurfaceQueries.queries("sql_arima_auto")(spark, sf0001)
     // if CollapseProject ever pulled the field extractions into the
     // aggregate, the 50-config grid would run 6x per profile — the plan
@@ -197,7 +189,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("sql_hw_by_profile / sql_croston_by_profile match their DataFrame jobs bit-exactly") {
-    GraftFunctions.register(spark)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getString(0), (1 until r.length).map(r.getDouble).toSeq)).toSeq
     assert(rows(SqlSurfaceQueries.queries("sql_hw_by_profile")(spark, sf0001)) ==
@@ -207,7 +198,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("forecast_hw / forecast_croston kernel parity and null contracts") {
-    GraftFunctions.register(spark)
     val xs  = Array.tabulate(30)(i => (i % 4).toDouble + i * 0.1)
     val lit = xs.mkString("array(", "D,", "D)")
     val r = spark.sql(
@@ -231,7 +221,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("sql_ann_topk: the SQL face lands on bruteForceTopK's exact rows") {
-    GraftFunctions.register(spark)
     val viaSql = SqlSurfaceQueries.queries("sql_ann_topk")(spark, sf0001)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
     val viaLib = graft.sim.Similarity.bruteForceTopK(spark, sf0001, k = 5)
@@ -245,7 +234,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("sql_lsh_pairs: the one-statement LSH face matches minhashPairs") {
-    GraftFunctions.register(spark)
     val viaSql = graft.dedup.Dedup.queries("sql_lsh_pairs")(spark, sf0001)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     val viaLib = graft.dedup.Dedup
@@ -255,7 +243,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("forecast_hw rejects period < 1 with a clean message") {
-    GraftFunctions.register(spark)
     val e = intercept[Exception] {
       spark.sql("SELECT forecast_hw(array(1.0D, 2.0D, 3.0D), 0)").collect()
     }
@@ -283,7 +270,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("zvalue16 bit-parity with the ZOrder Column composition") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = spark.range(0, 2000, 7)
       .select(($"id" % 65536).as("a"), (($"id" * 31) % 65536).as("b"))
@@ -297,7 +283,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("null series elements surface as SQL NULL in every forecast function") {
-    GraftFunctions.register(spark)
     val nullArr = "array(1.0D, CAST(NULL AS DOUBLE), 3.0D)"
     val r = spark.sql(
       s"""SELECT forecast_ses($nullArr) IS NULL AS a, forecast_holt($nullArr) IS NULL AS b,
@@ -307,7 +292,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("wrong-typed argument fails at ANALYSIS time with a clean error") {
-    GraftFunctions.register(spark)
     val e = intercept[Exception] {
       spark.sql("SELECT hamming64('not a long', 1L)").collect()
     }
@@ -317,7 +301,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("vector_ok: contract semantics on adversarial vectors, total (never null)") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       """SELECT
         |  vector_ok(CAST(array(1.0F, 2.0F) AS ARRAY<FLOAT>), 2)          AS ok,
@@ -338,7 +321,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("vector_ok filter parity with the pre-r13 three-term Column predicate on the corpus") {
-    GraftFunctions.register(spark)
     import org.apache.spark.sql.functions._
     val raw = graft.tables.Tables.embeddingsRaw(spark, sf0001)
     val dim = graft.tables.Tables.embeddingDim(spark, sf0001)

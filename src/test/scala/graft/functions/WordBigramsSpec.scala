@@ -47,7 +47,6 @@ class WordBigramsSpec extends SparkSpec {
   }
 
   test("column surface matches a scala map over the corpus") {
-    GraftFunctions.register(spark)
     val texts = graft.tables.Tables
       .documents(spark, sf0001)
       .select($"doc_id", $"text")

@@ -23,7 +23,6 @@ class TopKSpec extends SparkSpec {
   }
 
   test("TopKRewrite: SQL window-rank pattern plans through the heap operator, rows unchanged") {
-    TopK.install(spark)
     graft.tables.Tables.orders(spark, sf0001).createOrReplaceTempView("tk_orders")
     val sql =
       """SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
@@ -50,7 +49,6 @@ class TopKSpec extends SparkSpec {
   test("TopKRewrite: conjunctive filter (rn <= k AND pred) rewrites, residual pred kept") {
     // the common SQL shape — non-key predicates can't be pushed below the
     // Window, so they ride the same Filter as the rank bound (r11 review)
-    TopK.install(spark)
     graft.tables.Tables.orders(spark, sf0001).createOrReplaceTempView("tk_orders3")
     val sql =
       """SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
@@ -101,8 +99,23 @@ class TopKSpec extends SparkSpec {
     }
   }
 
+  test("perKey on a session without GraftExtensions fails early, naming both routes") {
+    // a session over the same context, built without the extension;
+    // create() also makes it the default, so the suite's session is restored
+    val bare = org.apache.spark.sql.SparkSession.builder().create()
+    try {
+      val e = intercept[IllegalArgumentException] {
+        TopK.perKey(bare.range(3).toDF("a"), Seq(col("a")), Seq(col("a").desc), 1)
+      }
+      assert(e.getMessage.contains("GraftSession.local"), e.getMessage)
+      assert(e.getMessage.contains("spark.sql.extensions=graft.GraftExtensions"), e.getMessage)
+    } finally {
+      org.apache.spark.sql.SparkSession.setDefaultSession(spark)
+      org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    }
+  }
+
   test("TopKRewrite: non-matching shapes are left alone") {
-    TopK.install(spark)
     graft.tables.Tables.orders(spark, sf0001).createOrReplaceTempView("tk_orders2")
     spark.conf.set(TopKRewrite.confKey, "true")
     try {

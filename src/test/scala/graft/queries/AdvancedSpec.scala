@@ -12,6 +12,33 @@ class AdvancedSpec extends SparkSpec {
     }
   }
 
+  test("e_anomalies keeps NULL-typed events as the oracle's PARTITION BY does, via a broadcast join") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-anomalies").toString
+    try {
+      // two groups of 20 (|z| > 3 needs n >= 11): values 10..12 and one
+      // planted outlier each, one group typed, one NULL-typed
+      val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+      val rows = for {
+        (tpe, base) <- Seq(("click", 0L), (null, 100L))
+        i           <- 0 until 20
+      } yield (base + i, ts, 1L, tpe, if (i == 7) 100.0 else 10.0 + i % 3)
+      rows.toDF("event_id", "ts", "user_id", "event_type", "value")
+        .coalesce(1).write.parquet(s"$dir/events.parquet")
+      val df = Advanced.eAnomalies(spark, dir)
+      val got = df.collect()
+      assert(got.map(r => (r.getLong(0), Option(r.getString(1)))).toSeq ==
+        Seq((7L, Some("click")), (107L, None)))
+      assert(df.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"))
+      // the oracle's own SQL, replayed on the same rows
+      graft.tables.Tables.events(spark, dir).createOrReplaceTempView("events")
+      try {
+        val oracle = spark.sql(graft.SparkEntry.oracleSql("e_anomalies")).collect()
+        assert(got.map(_.toString).toSeq == oracle.map(_.toString).toSeq)
+      } finally spark.catalog.dropTempView("events")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
+
   test("sessionize: session bounds ordered, events conserved") {
     val rows = Advanced.wSessionize(spark, sf0001).collect()
     assert(rows.map(_.getLong(4)).sum == 1000) // all events assigned

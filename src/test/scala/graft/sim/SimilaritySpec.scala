@@ -299,7 +299,6 @@ class MipsSpec extends SparkSpec {
   private lazy val mips = Similarity.mipsTopK(spark, sf0001, k = 5, shortlist = 50).collect()
 
   private lazy val exact = {
-    graft.functions.GraftFunctions.register(spark)
     val raw = graft.tables.Tables
       .embeddings(spark, sf0001)
       .select($"vec_id", transform($"embedding", x => x.cast("double")).as("u"))

@@ -22,7 +22,6 @@ class StreamServingSpec extends SparkSpec {
 
   test("stream-static join serves nearest neighbors per probe micro-batch") {
     implicit val sqlCtx = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     val corpus = graft.tables.Tables
       .embeddings(spark, sf0001)
       .select($"vec_id", transform($"embedding", x => x.cast("double")).as("v"))

@@ -19,8 +19,6 @@ import org.scalacheck.rng.Seed
   */
 class Utf8KernelSpec extends SparkSpec {
 
-  graft.functions.GraftFunctions.register(spark)
-
   /** scalatest/scalacheck bridge is not in the offline cache \u2014 the raw
     * Gen + seed loop from PropertySpec.
     */
