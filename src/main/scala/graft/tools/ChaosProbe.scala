@@ -440,12 +440,6 @@ object ChaosProbe {
         "spark-submit with SPARK_GRAFT_MASTER=local-cluster[2,16,24576]")
     val query     = sys.env.getOrElse("SPARK_GRAFT_CHAOS_QUERY", "g_pagerank")
     val killAfter = sys.env.getOrElse("SPARK_GRAFT_CHAOS_KILL_AFTER_JOBS", "8").toInt
-    val jobsEnded = new java.util.concurrent.atomic.AtomicInteger(0)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-        jobsEnded.incrementAndGet(); ()
-      }
-    })
     def run(): Seq[String] =
       graft.SparkEntry.queries(query)(spark, base).collect().map(_.toString).sorted.toSeq
     // filter by THIS app's id: a concurrent Spark app on the same box
@@ -460,17 +454,24 @@ object ChaosProbe {
         .getOrElse(Seq.empty)
     }
     println(s"- baseline $query …")
-    val t0 = System.nanoTime()
-    val baseline = run()
-    val baseSec = (System.nanoTime() - t0) / 1e9
-    val baselineJobs = jobsEnded.get()
-    println(f"- baseline $query rows=${baseline.size} in $baseSec%.1f s " +
+    val (baseline, baseRec) = graft.obs.QueryMeter.measure(spark, s"baseline $query")(run())
+    val baselineJobs = baseRec.jobs.size
+    println(f"- baseline $query rows=${baseline.size} in ${baseRec.wallMs / 1e3}%.1f s " +
       s"($baselineJobs jobs); executors=${executorPids().size}; " +
       s"killing after $killAfter chaos jobs")
+    // the kill needs a LIVE count while the chaos run is still going, so
+    // the run carries its own job tag and the status tracker is polled
+    val sc  = spark.sparkContext
+    val tag = s"graft-chaos-$appId"
+    def chaosJobsEnded(): Int = sc.statusTracker.getJobIdsForTag(tag)
+      .flatMap(sc.statusTracker.getJobInfo)
+      .count(_.status != org.apache.spark.JobExecutionStatus.RUNNING)
     val chaos = scala.concurrent.Future {
-      val t = System.nanoTime(); val r = run(); (r, (System.nanoTime() - t) / 1e9)
+      sc.addJobTag(tag)
+      try { val t = System.nanoTime(); val r = run(); (r, (System.nanoTime() - t) / 1e9) }
+      finally sc.removeJobTag(tag)
     }(scala.concurrent.ExecutionContext.global)
-    while (jobsEnded.get() - baselineJobs < killAfter && !chaos.isCompleted)
+    while (chaosJobsEnded() < killAfter && !chaos.isCompleted)
       Thread.sleep(20L)
     require(!chaos.isCompleted,
       s"chaos run finished before $killAfter jobs — lower " +
@@ -491,7 +492,7 @@ object ChaosProbe {
     val signal  = sys.env.getOrElse("SPARK_GRAFT_CHAOS_SIGNAL", "KILL")
     val victims = if (killAll) pids else pids.take(1)
     println(s"- kill -s $signal ${victims.mkString(",")} (of ${pids.size} executor JVMs) after " +
-      s"${jobsEnded.get() - baselineJobs} chaos jobs")
+      s"${chaosJobsEnded()} chaos jobs")
     victims.foreach(v => scala.sys.process.Process(Seq("kill", "-s", signal, v.toString)).!)
     scala.util.Try(scala.concurrent.Await.result(
       chaos, scala.concurrent.duration.Duration(600, "s"))) match {
@@ -521,22 +522,14 @@ object ChaosProbe {
   def specCount(spark: org.apache.spark.sql.SparkSession, base: String): Unit = {
     require(spark.sparkContext.getConf.getBoolean("spark.speculation", false),
       "speccount without spark.speculation=true measures nothing — pass the --confs")
-    val spec  = new java.util.concurrent.atomic.AtomicInteger(0)
-    val total = new java.util.concurrent.atomic.AtomicInteger(0)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskStart(t: org.apache.spark.scheduler.SparkListenerTaskStart): Unit = {
-        total.incrementAndGet()
-        if (t.taskInfo.speculative) spec.incrementAndGet()
-        ()
-      }
-    })
     val queries = sys.env.getOrElse("SPARK_GRAFT_CHAOS_QUERY", "g_pagerank").split(',').toSeq
-    queries.foreach { q =>
-      val (s0, t0) = (spec.get(), total.get())
-      val rows = graft.SparkEntry.queries(q)(spark, base).collect().length
-      println(s"- $q rows=$rows tasks=${total.get() - t0} speculative=${spec.get() - s0}")
+    val recs = queries.map { q =>
+      val (rows, rec) = graft.obs.QueryMeter.measure(spark, q)(
+        graft.SparkEntry.queries(q)(spark, base).collect().length)
+      println(s"- $q rows=$rows tasks=${rec.tasks} speculative=${rec.speculativeTasks}")
+      rec
     }
-    println(s"== ${spec.get()} speculative of ${total.get()} task starts ==")
+    println(s"== ${recs.map(_.speculativeTasks).sum} speculative of ${recs.map(_.tasks).sum} task attempts ==")
   }
 
   def main(args: Array[String]): Unit = {

@@ -2,6 +2,7 @@ package graft.tools
 
 import graft.GraftSession
 import graft.dedup.Hashing
+import graft.obs.QueryMeter
 import graft.tools.StressUtil.{cachedDir, symlinkTables, time}
 import org.apache.spark.sql.functions._
 
@@ -18,7 +19,9 @@ import org.apache.spark.sql.functions._
   *  - the JIT/codegen warmup pass runs on the BASE dir, so writeOnce
   *    boundary dumps stay symmetric between the measured ×1 and ×mult
   *    passes (a dir1 warmup would consume dir1's one-time dump write);
-  *  - listener counters settle before every reset (StressUtil.Meter).
+  *  - each measured run is one [[graft.obs.QueryMeter]] record: only the
+  *    run's own jobs count, and the listener bus is drained (not slept
+  *    on) before its counters are read.
   *
   * Usage (args override the SPARK_GRAFT_* env knobs):
   *
@@ -114,8 +117,14 @@ object Stress {
     conf.shuffleParts.foreach(p => spark.conf.set("spark.sql.shuffle.partitions", p))
     conf.confs.foreach { case (k, v) => spark.conf.set(k, v) }
     import spark.implicits._
-    val meter = new StressUtil.Meter(spark)
     val base  = conf.base
+
+    def measured[A](label: String)(f: => A): A = {
+      val (r, rec) = QueryMeter.measure(spark, label)(f)
+      println(f"- $label: wall ${rec.wallMs / 1e3}%.1f s, shuffle ${rec.shuffleWriteBytes / 1e6}%.0f MB, " +
+        f"max task ${rec.maxTaskMs / 1e3}%.1f s")
+      r
+    }
 
     // ------------------------------------------------------ corpus dirs
     // The ×1 floor is ALSO a rewritten dir so file granularity scales
@@ -408,26 +417,21 @@ object Stress {
       // drop metrics from the PRECEDING (warmup or prior) run before
       // measuring: the sink names repeat across runs, so a measured run
       // that emits nothing (the r13 zero-files bug) must print NOTHING,
-      // not the previous run's numbers under its own label
-      if (conf.corpus == "stream" && !warm) { stateMetrics.clear(); statePeaks.clear() }
+      // not the previous run's numbers under its own label. Drain first,
+      // so none of that run's queued events lands after the clear.
+      if (conf.corpus == "stream" && !warm) {
+        org.apache.spark.GraftBusDrain.drain(spark.sparkContext)
+        stateMetrics.clear(); statePeaks.clear()
+      }
       if (warm) exec(dd)
-      else
-        meter.measured(s"$name @${new java.io.File(dd).getName}") {
-          exec(dd)
-        }
+      else measured(s"$name @${new java.io.File(dd).getName}")(exec(dd))
       if (conf.corpus == "stream" && !warm) {
         import scala.jdk.CollectionConverters._
-        // listener delivery is async (the Meter.settle discipline):
-        // poll until the captured metrics stop changing before printing.
-        // Seed `last` with a value no snapshot can equal (Meter seeds
-        // (-1,-1) for the same reason — r13 review: seeding empty made
-        // an empty FIRST snapshot exit with zero sleeps, racing the
-        // listener bus and dropping or lagging the A/B's state metrics)
-        def snap = stateMetrics.asScala.toMap
-        var last: Map[String, String] = null
-        var cur  = snap
-        while (cur != last) { last = cur; Thread.sleep(300); cur = snap }
-        cur.toSeq.sortBy(_._1).foreach { case (sink, m) =>
+        // complete: `measured` drained the listener bus, which also
+        // carries the StreamingQueryListener events, and every stream
+        // leg awaits its query's termination, so its last progress was
+        // posted before the run returned
+        stateMetrics.asScala.toSeq.sortBy(_._1).foreach { case (sink, m) =>
           println(s"    state[$sink] $m")
         }
         stateMetrics.clear()
@@ -482,15 +486,15 @@ object Stress {
         finally saved.foreach { case (k, o) => o.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
       }
       val results = withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-        val (rNoAqe, _, _, _) = withConf("spark.sql.adaptive.skewJoin.enabled" -> "false") {
-          meter.measured(s"skew SMJ unsalted, AQE skew OFF @${conf.mult}x, 50% hot key") {
+        val rNoAqe = withConf("spark.sql.adaptive.skewJoin.enabled" -> "false") {
+          measured(s"skew SMJ unsalted, AQE skew OFF @${conf.mult}x, 50% hot key") {
             aggJoin(hot.join(p, Seq("p_partkey"))).collect()
           }
         }
-        val (rAqe, _, _, _) = meter.measured(s"skew SMJ unsalted, AQE skew ON @${conf.mult}x, 50% hot key") {
+        val rAqe = measured(s"skew SMJ unsalted, AQE skew ON @${conf.mult}x, 50% hot key") {
           aggJoin(hot.join(p, Seq("p_partkey"))).collect()
         }
-        val (rSalt, _, _, _) = meter.measured(s"skew SMJ SALTED (8 salts) @${conf.mult}x, 50% hot key") {
+        val rSalt = measured(s"skew SMJ SALTED (8 salts) @${conf.mult}x, 50% hot key") {
           aggJoin(graft.queries.SkewJoin.saltedInnerJoin(hot, p, "p_partkey", salts = 8)).collect()
         }
         Seq(rNoAqe, rAqe, rSalt)

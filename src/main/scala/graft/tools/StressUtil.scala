@@ -1,53 +1,19 @@
 package graft.tools
 
 import graft.dedup.Hashing
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
 /** Shared scaffolding for the batch-scale stress tools (r11 review: the
-  * timer, task-metrics meter, perturbation UDF and corpus-dir protocol
-  * were copy-pasted between the per-round stress tools (now unified in Stress) — a methodology fix
-  * landing in one and not the other would make stress rounds compare
-  * numbers produced by subtly different harnesses).
+  * timer, perturbation UDF and corpus-dir protocol were copy-pasted
+  * between the per-round stress tools (now unified in Stress) — a
+  * methodology fix landing in one and not the other would make stress
+  * rounds compare numbers produced by subtly different harnesses).
   */
 object StressUtil {
 
   def time[A](f: => A): (A, Double) = {
     val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-  }
-
-  /** wall / shuffle-bytes / max-single-task meter. Listener events are
-    * async, so counters settle (poll until stable) BEFORE each reset —
-    * a preceding unmeasured run's straggler task-end events would
-    * otherwise land after the reset and pollute the next run — and
-    * after the measured body.
-    */
-  final class Meter(spark: SparkSession) {
-    private val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
-    private val maxTaskMs    = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-        Option(te.taskMetrics).foreach { m =>
-          shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          maxTaskMs.getAndAccumulate(m.executorRunTime, math.max)
-        }
-    })
-    private def settle(): Unit = {
-      var last = (-1L, -1L)
-      var cur  = (shuffleBytes.get(), maxTaskMs.get())
-      while (cur != last) { last = cur; Thread.sleep(200); cur = (shuffleBytes.get(), maxTaskMs.get()) }
-    }
-    def measured[A](label: String)(f: => A): (A, Double, Long, Long) = {
-      settle()
-      shuffleBytes.set(0L); maxTaskMs.set(0L)
-      val (r, wall) = time(f)
-      settle()
-      val out = (r, wall, shuffleBytes.get(), maxTaskMs.get())
-      println(f"- $label: wall $wall%.1f s, shuffle ${out._3 / 1e6}%.0f MB, max task ${out._4 / 1e3}%.1f s")
-      out
-    }
   }
 
   /** Replica-unique text perturbation: interleaves a per-(doc, replica,

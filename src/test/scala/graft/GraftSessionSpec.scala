@@ -39,18 +39,21 @@ class GraftSessionSpec extends AnyFunSuite {
     }
   }
 
-  // forked tests run with cwd = the project base (FunctionCoverageSpec)
-  private lazy val mainSources: Seq[(String, String)] =
-    Files.walk(Paths.get(sys.props("user.dir"), "src/main/scala")).iterator().asScala
+  // forked tests run with cwd = the project base (FunctionCoverageSpec);
+  // keys are paths relative to src/main/scala
+  private lazy val mainSources: Seq[(String, String)] = {
+    val root = Paths.get(sys.props("user.dir"), "src/main/scala")
+    Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
-      .map(p => p.getFileName.toString ->
+      .map(p => root.relativize(p).toString ->
         new String(Files.readAllBytes(p), java.nio.charset.StandardCharsets.UTF_8))
       .toSeq
+  }
 
   test("src/main has exactly one SparkSession builder, in GraftSession.scala") {
     val builder = """SparkSession\s*\.\s*builder\s*\(\s*\)""".r
     val sites = mainSources.flatMap { case (f, src) => builder.findAllIn(src).map(_ => f) }
-    assert(sites == Seq("GraftSession.scala"), s"builder call sites: $sites")
+    assert(sites == Seq("graft/GraftSession.scala"), s"builder call sites: $sites")
   }
 
   test("src/main has one registration route: the factory's GraftExtensions") {
@@ -68,8 +71,19 @@ class GraftSessionSpec extends AnyFunSuite {
       m        <- re.findAllIn(src)
     } yield s"$f: $m"
     assert(sites.isEmpty, s"second registration routes: $sites")
-    val factory = mainSources.collectFirst { case ("GraftSession.scala", src) => src }.get
+    val factory = mainSources.collectFirst { case ("graft/GraftSession.scala", src) => src }.get
     assert(factory.contains(".withExtensions(new GraftExtensions)"))
+  }
+
+  test("src/main registers SparkListeners only in graft/obs") {
+    // job attribution has one home, graft.obs.QueryMeter; a hand-made
+    // listener elsewhere is a second meter with its own settle rules
+    val sites = mainSources.collect {
+      case (f, src) if src.contains("addSparkListener") && !f.startsWith("graft/obs/") => f
+    }
+    assert(sites.isEmpty, s"addSparkListener outside graft/obs: $sites")
+    assert(mainSources.exists { case (f, src) =>
+      f.startsWith("graft/obs/") && src.contains("addSparkListener") })
   }
 
   test("Verify.main rejects a wrong argument count before building a session") {

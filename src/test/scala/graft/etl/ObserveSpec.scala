@@ -40,9 +40,9 @@ class ObserveSpec extends SparkSpec {
         )
       // ONE action: the write is also the metrics pass
       observed.write.mode("overwrite").parquet(s"$dir/orders")
-      // the listener bus is asynchronous — poll briefly
-      val deadline = System.nanoTime() + 10e9.toLong
-      while (captured.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+      // the listener bus is asynchronous: drain it, which delivers the
+      // write's SQL execution end to the QueryExecutionListener
+      org.apache.spark.GraftBusDrain.drain(spark.sparkContext)
       val m = captured.getOrElse(fail("observed metrics never arrived"))
       val total = Tables.orders(spark, sf0001).count()
       assert(m.getAs[Long]("n_rows") == total)

@@ -153,10 +153,19 @@ class ScaleWindowSpec extends SparkSpec {
     val eagerBounded = Set("text_heaps_fit")
     @volatile var building: String = "<init>"
     val eagerHits = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    // census of every partition-less window, bounded or not, per query:
+    // (query, "lazy"|"eager", all partition-less, of them unbounded)
+    val census = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, Int, Int)]()
+    def count(name: String, kind: String, p: SparkPlan): Seq[WindowExec] = {
+      val all = graft.plans.WindowAudit.partitionless(p)
+      val unbounded = partitionlessWindows(p)
+      if (all.nonEmpty) census.add((name, kind, all.size, unbounded.size))
+      unbounded
+    }
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
                              ns: Long): Unit =
-        if (partitionlessWindows(qe.executedPlan).nonEmpty) eagerHits.add(building)
+        if (count(building, "eager", qe.executedPlan).nonEmpty) eagerHits.add(building)
       override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
                              e: Exception): Unit = ()
     }
@@ -167,7 +176,7 @@ class ScaleWindowSpec extends SparkSpec {
         if (!name.startsWith("s_stream")) {
           building = name
           val w =
-            try partitionlessWindows(fn(spark, sf0001).queryExecution.sparkPlan)
+            try count(name, "lazy", fn(spark, sf0001).queryExecution.sparkPlan)
             finally spark.catalog.clearCache()
           if (w.nonEmpty && !bounded.contains(name)) offenders += name
           // deterministic attribution (r11 ADVICE): drain the listener
@@ -180,6 +189,18 @@ class ScaleWindowSpec extends SparkSpec {
     finally {
       org.apache.spark.GraftBusDrain.drain(spark.sparkContext)
       spark.listenerManager.unregister(listener)
+    }
+    {
+      import scala.jdk.CollectionConverters._
+      census.asScala.toSeq.groupBy(c => (c._1, c._2)).toSeq.sortBy(_._1).foreach {
+        case ((name, kind), cs) =>
+          val (all, unb) = (cs.map(_._3).sum, cs.map(_._4).sum)
+          val why =
+            if (kind == "lazy") bounded.get(name).map(r => s"; whitelisted: $r")
+            else Option.when(eagerBounded(name))("; eager whitelist")
+          info(s"$name $kind: $all partition-less window(s) in ${cs.size} plan(s), " +
+            s"${all - unb} bounded by a limit, $unb unbounded${why.getOrElse("")}")
+      }
     }
     assert(offenders.isEmpty,
       s"unwhitelisted partition-less WindowExec in: ${offenders.mkString(", ")}")

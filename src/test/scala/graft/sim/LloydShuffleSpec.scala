@@ -1,28 +1,19 @@
 package graft.sim
 
 import graft.SparkSpec
+import graft.obs.QueryMeter
 import graft.syntax._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
 
 /** Plan gate for the r7 shuffle-free Lloyd mean step: training must
   * never shuffle the corpus. The old groupByKey/mapGroups mean step
   * shuffled every vector to its cell's reducer each iteration (≥
   * iters × n records); the treeReduce formulation ships one k×dim sum
-  * block per partition. Measured through a SparkListener over the
-  * actual stage metrics, on a corpus large enough (replicated ×100)
-  * that the two shapes differ by orders of magnitude.
+  * block per partition. Measured from the training call's QueryMeter
+  * record (its own jobs' task metrics), on a corpus large enough
+  * (replicated ×100) that the two shapes differ by orders of magnitude.
   */
 class LloydShuffleSpec extends SparkSpec {
-
-  private class ShuffleRecords extends SparkListener {
-    @volatile var recordsRead = 0L
-    @volatile var stages      = 0
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      recordsRead += sc.stageInfo.taskMetrics.shuffleReadMetrics.recordsRead
-      stages += 1
-    }
-  }
 
   test("Lloyd training shuffles centroid-sized state, never the corpus") {
     val base = graft.tables.Tables
@@ -36,26 +27,15 @@ class LloydShuffleSpec extends SparkSpec {
       .localCheckpoint() // pin the corpus so its own build cost is outside the gate
     val n = e.count()
 
-    val listener = new ShuffleRecords
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      Similarity.trainCentroids(spark, e, nCells = 16, iters = 3)
-      // listener delivery is async: poll until the bus drains
-      var last  = (-1L, -1)
-      var stable = 0
-      while (stable < 3) {
-        Thread.sleep(100)
-        val cur = (listener.recordsRead, listener.stages)
-        if (cur == last) stable += 1 else { stable = 0; last = cur }
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (_, rec) = QueryMeter.measure(spark, "lloyd-train")(
+      Similarity.trainCentroids(spark, e, nCells = 16, iters = 3))
 
-    info(s"corpus=$n rows; training shuffle records read=${listener.recordsRead} " +
-      s"across ${listener.stages} stages")
+    info(s"corpus=$n rows; training shuffle records read=${rec.shuffleReadRecords} " +
+      s"across ${rec.stages} stages")
     // old shape: >= iters * n = 15000+ records; new shape: the seed
     // TakeOrdered partials + one sum block per partition per iteration
-    assert(listener.recordsRead < n / 2,
-      s"training shuffled ${listener.recordsRead} records for a $n-row corpus — " +
+    assert(rec.shuffleReadRecords < n / 2,
+      s"training shuffled ${rec.shuffleReadRecords} records for a $n-row corpus — " +
         "the corpus is crossing the wire again")
   }
 }
