@@ -76,8 +76,9 @@ object Warehouse {
     * batch itself (ZoloWarehouseSpec's square details do exactly that).
     *
     * `schema` is the target's schema when the caller already holds it
-    * (the DSv2 catalog read the footers to load the table); empty means
-    * infer it, which costs one footer-read job.
+    * (the DSv2 catalog read it from the footers on the driver, without
+    * a job, when it loaded the table); empty means the read infers it,
+    * which costs one footer-read job.
     */
   private def dedupFresh(spark: SparkSession, df: DataFrame, path: String, key: String,
       schema: StructType = new StructType()): DataFrame =

@@ -77,7 +77,18 @@ object ZoloPipeline {
     val tmp  = java.nio.file.Files.createTempDirectory("graft-whsql")
     val root = tmp.toString + "/wh"
     loadWarehouse(spark, root, ephemeral = true)
-    val cat = catalogFor(spark, root, ephemeral = true)
+    val sql = weeklyDemandSqlIn(catalogFor(spark, root, ephemeral = true))
+    // pin the result eagerly, then reclaim the temp warehouse — repeated
+    // sweeps otherwise leak one fixture-sized root per invocation
+    // (judge r9 ADVICE); the checkpoint holds only the result rows
+    try spark.sql(sql).localCheckpoint()
+    finally org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile)
+  }
+
+  /** The verbatim weekly-demand SQL with every table reference qualified
+    * into catalog `cat`: facts under `raw.`, dims under `ref.`.
+    */
+  def weeklyDemandSqlIn(cat: String): String = {
     // longest-name-first so *_details qualifies before its header prefix;
     // the lookbehind keeps already-qualified and aliased references intact
     val qualify = Seq(
@@ -90,14 +101,9 @@ object ZoloPipeline {
       "items"                 -> s"$cat.ref.items",
       "coffee_profiles"       -> s"$cat.ref.coffee_profiles"
     )
-    val sql = qualify.foldLeft(WeeklyDemand.sql) { case (q, (from, to)) =>
+    qualify.foldLeft(WeeklyDemand.sql) { case (q, (from, to)) =>
       q.replaceAll(s"(?<![\\w.])$from\\b", java.util.regex.Matcher.quoteReplacement(to))
     }
-    // pin the result eagerly, then reclaim the temp warehouse — repeated
-    // sweeps otherwise leak one fixture-sized root per invocation
-    // (judge r9 ADVICE); the checkpoint holds only the result rows
-    try spark.sql(sql).localCheckpoint()
-    finally org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile)
   }
 
   /** The MODEL half of S7 (judge r9 Missing #1): forecast output lands
@@ -223,7 +229,7 @@ object ZoloPipeline {
     val cat    = catalogFor(spark, root, ephemeral)
     val tables = spark.sessionState.catalogManager.catalog(cat).asInstanceOf[TableCatalog]
     // a path check on the resolved catalog: spark.catalog.tableExists
-    // would load the table and read its parquet footers (one job each)
+    // would load the table, listing it and reading a parquet footer
     def exists(table: String) = tables.tableExists(Identifier.of(Array("raw"), table))
 
     def appendKeyed(df: DataFrame, table: String, key: String): Unit = {

@@ -6,6 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException}
 import org.apache.spark.sql.connector.catalog.{Identifier, Table, TableCatalog, TableChange}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetSchema
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -32,6 +33,13 @@ import java.util
   * ([[WarehouseSinkTable.newScanBuilder]] delegates), so pushdown/
   * pruning/vectorization match `spark.read.parquet(root/ns/table)`
   * exactly.
+  *
+  * Loading a table starts no Spark job: its schema is read from the
+  * parquet footers on the driver (`GraftParquetSchema.infer`), and it is
+  * the schema `spark.read.parquet(root/ns/table)` resolves. Spark's own
+  * inference reads the same footers inside a one-task job, and a query
+  * resolves its tables one after another during analysis, so the
+  * weekly-demand SQL over eight tables paid eight jobs before it ran.
   *
   * Creation writes a zero-row parquet commit so the new table exists
   * with its schema on disk immediately (the `to_sql` contract: a
@@ -75,9 +83,9 @@ class WarehouseCatalog extends TableCatalog {
   override def loadTable(ident: Identifier): Table = {
     val p = pathFor(ident)
     if (!Warehouse.pathExists(spark, p)) throw new NoSuchTableException(ident)
-    // real parquet schema: writeTo(...).append() gets by-name output
-    // resolution against what is actually on disk
-    new WarehouseSinkTable(p, spark.read.parquet(p).schema, acceptAnySchema = false)
+    // real parquet schema, read on the driver: writeTo(...).append() gets
+    // by-name output resolution against what is actually on disk
+    new WarehouseSinkTable(p, GraftParquetSchema.infer(spark, p), acceptAnySchema = false)
   }
 
   override def tableExists(ident: Identifier): Boolean =

@@ -7,7 +7,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Tabl
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.{GraftParquetSchema, ParquetFileFormat}
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.sources.{DataSourceRegister, InsertableRelation}
 import org.apache.spark.sql.types.StructType
@@ -48,15 +48,17 @@ import scala.jdk.CollectionConverters._
 class WarehouseSinkProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "zolo-wh"
 
-  /** For an existing table the schema is the parquet footers'; a first
-    * write infers nothing — the write path takes the query's schema via
+  /** For an existing table the schema is the parquet footers', read on
+    * the driver without a Spark job (`GraftParquetSchema.infer`, the
+    * schema `spark.read.parquet(path)` resolves); a first write infers
+    * nothing — the write path takes the query's schema via
     * [[WarehouseSinkTable]] ACCEPT_ANY_SCHEMA, matching a first
     * `to_sql(if_exists='append')` against an absent table.
     */
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val spark = org.apache.spark.sql.SparkSession.active
     val path  = WarehouseSink.pathOf(options)
-    if (Warehouse.pathExists(spark, path)) spark.read.parquet(path).schema
+    if (Warehouse.pathExists(spark, path)) GraftParquetSchema.infer(spark, path)
     else new StructType()
   }
 

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{GraftSession, SparkEntry}
+import graft.{Bench, GraftSession, SparkEntry}
 import graft.obs.QueryMeter
 
 /** Optimization-round profiler: runs one driver query and prints a
@@ -11,9 +11,9 @@ import graft.obs.QueryMeter
   *   sbt "runMain graft.tools.ProfileQ g_pagerank [passes]"
   *
   * Methodology matches Bench: SPARK_GRAFT_SF_DIR data dir,
-  * SPARK_GRAFT_CPUS cores, count() as the action, one untimed warmup
-  * pass then `passes` timed passes (per-pass breakdown printed; min wall
-  * reported).
+  * SPARK_GRAFT_CPUS cores, `Bench.consume` (the `noop` sink) as the
+  * action, one untimed warmup pass then `passes` timed passes (per-pass
+  * breakdown printed; min wall reported).
   */
 object ProfileQ {
   def main(args: Array[String]): Unit = {
@@ -25,7 +25,7 @@ object ProfileQ {
     val fn = SparkEntry.queries.getOrElse(name, sys.error(s"unknown query '$name'"))
 
     def runPass(label: String, timedReport: Boolean): Double = {
-      val (_, rec) = QueryMeter.measure(spark, name)(fn(spark, sfDir).count())
+      val (_, rec) = QueryMeter.measure(spark, name)(Bench.consume(fn(spark, sfDir)))
       spark.catalog.clearCache()
       val wall = rec.wallMs / 1e3
       if (timedReport) {

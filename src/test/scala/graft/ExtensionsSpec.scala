@@ -7,14 +7,27 @@ import org.scalatest.funsuite.AnyFunSuite
   * not built by `GraftSession.local` — a session built with
   * `spark.sql.extensions=graft.GraftExtensions` must expose the native
   * expressions in SQL and carry the TopK planner strategy. (Extensions
-  * apply only at session CREATION, so this spec stops the shared test
-  * session and builds a fresh one; later suites recreate theirs via
-  * getOrCreate.)
+  * are read from the SparkContext's conf when a context is created, so
+  * this spec stops the live context, whichever thread built it, and
+  * builds a fresh one; later suites recreate theirs via getOrCreate.)
   */
 class ExtensionsSpec extends AnyFunSuite {
 
   test("spark.sql.extensions=graft.GraftExtensions wires functions and the TopK strategy") {
-    SparkSession.getActiveSession.foreach(_.stop())
+    checkExtensionsSession()
+  }
+
+  test("the extensions take effect when the shared session was built on another thread") {
+    val helper = new Thread(() => { GraftSession.local(cores = 2, appName = "built-elsewhere"); () })
+    helper.start()
+    helper.join()
+    SparkSession.clearActiveSession() // this thread holds no session of its own
+    assert(org.apache.spark.GraftLiveContext.get.nonEmpty)
+    checkExtensionsSession()
+  }
+
+  private def checkExtensionsSession(): Unit = {
+    org.apache.spark.GraftLiveContext.get.foreach(_.stop())
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     val spark = SparkSession

@@ -202,11 +202,11 @@ class WarehouseDsv2Spec extends SparkSpec {
     }
   }
 
-  test("warm load starts at most 25 jobs (no footer reads for existence checks or dedup schemas)") {
+  test("warm load starts at most 19 jobs: catalog loads read no footers with a job") {
     val root = tmp("zolo-jobs")
     ZoloPipeline.loadWarehouse(spark, root)
     val jobs = taggedLoad(root)
-    assert(jobs.size <= 25, s"warm load ran ${jobs.size} jobs")
+    assert(jobs.size <= 19, s"warm load ran ${jobs.size} jobs")
   }
 
   test("concurrent load failure: the first error is rethrown after the other writes land") {
