@@ -866,16 +866,20 @@ object Advanced {
     * Expand + one aggregate — rows multiply by |sets|, not by 2^cols.
     */
   val aGroupingSets: Q = (s, d) => {
-    Tables.lineitem(s, d).createOrReplaceTempView("lineitem_gs")
-    s.sql("""
+    // the view is inlined once s.sql has analysed the query, so it goes
+    // at once; the name is per call, so concurrent callers never share it
+    val v = callName("lineitem_gs")
+    Tables.lineitem(s, d).createOrReplaceTempView(v)
+    try s.sql(s"""
       SELECT l_returnflag, l_linestatus,
         CAST(grouping_id(l_returnflag, l_linestatus) AS INT) AS gid,
         CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
         COUNT(*) AS n
-      FROM lineitem_gs
+      FROM $v
       GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
       ORDER BY gid, l_returnflag, l_linestatus
     """)
+    finally s.catalog.dropTempView(v)
   }
 
   /** Ranking-function breadth: rank/dense_rank/percent_rank/cume_dist
@@ -1399,16 +1403,19 @@ object Advanced {
     * float-boundary risk.
     */
   val jScalarSubquery: Q = (s, d) => {
-    Tables.orders(s, d).createOrReplaceTempView("orders_v")
-    s.sql("""
+    // per-call view, dropped once analysed (aGroupingSets)
+    val v = callName("orders_v")
+    Tables.orders(s, d).createOrReplaceTempView(v)
+    try s.sql(s"""
       SELECT o_orderkey, o_custkey, o_totalprice
-      FROM orders_v o
+      FROM $v o
       WHERE CAST(o_totalprice AS DECIMAL(18,2))
-              * (SELECT COUNT(*) FROM orders_v i WHERE i.o_custkey = o.o_custkey)
+              * (SELECT COUNT(*) FROM $v i WHERE i.o_custkey = o.o_custkey)
             > (SELECT SUM(CAST(i.o_totalprice AS DECIMAL(18,2)))
-               FROM orders_v i WHERE i.o_custkey = o.o_custkey)
+               FROM $v i WHERE i.o_custkey = o.o_custkey)
       ORDER BY o_orderkey
     """)
+    finally s.catalog.dropTempView(v)
   }
 
   /** Pearson correlation matrix over the lineitem measures — computed

@@ -231,33 +231,31 @@ object Relational {
     * side, and the groupBy rides the same partitioning because its keys
     * start with the bucket key. At 100 TB this is the difference between
     * re-shuffling ~both tables on every analytical join and paying the
-    * shuffle once at write time. Broadcast is disabled for the scope of
-    * the query so the plan proves the co-location (not a broadcast
+    * shuffle once at write time. A `merge` join hint keeps the join a
+    * sort-merge join, so the plan proves the co-location (not a broadcast
     * escape hatch); results are layout-independent, so the oracle is the
-    * plain join.
+    * plain join. The tables get per-call names: they live in the shared
+    * warehouse dir.
     */
   val jBucketedColocated: Q = (s, d) => {
-    val prev = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val (orders, lineitem) = (callName("jb_orders"), callName("jb_lineitem"))
     try {
-      graft.etl.Warehouse.writeBucketed(Tables.orders(s, d), "jb_orders", "o_orderkey", 16)
-      graft.etl.Warehouse.writeBucketed(Tables.lineitem(s, d), "jb_lineitem", "l_orderkey", 16)
-      try {
-        s.table("jb_orders")
-          .join(s.table("jb_lineitem"), $"o_orderkey" === $"l_orderkey")
-          .groupBy($"o_orderkey", $"o_orderstatus")
-          .agg(
-            sum($"l_quantity").as("sum_qty"),
-            derivedSum($"l_extendedprice" * (lit(1.0) - $"l_discount")).as("revenue"),
-            count(lit(1)).as("n_items")
-          )
-          .orderBy($"o_orderkey")
-          .localCheckpoint(eager = true)
-      } finally {
-        s.sql("DROP TABLE IF EXISTS jb_orders")
-        s.sql("DROP TABLE IF EXISTS jb_lineitem")
-      }
-    } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+      graft.etl.Warehouse.writeBucketed(Tables.orders(s, d), orders, "o_orderkey", 16)
+      graft.etl.Warehouse.writeBucketed(Tables.lineitem(s, d), lineitem, "l_orderkey", 16)
+      s.table(orders).hint("merge")
+        .join(s.table(lineitem), $"o_orderkey" === $"l_orderkey")
+        .groupBy($"o_orderkey", $"o_orderstatus")
+        .agg(
+          sum($"l_quantity").as("sum_qty"),
+          derivedSum($"l_extendedprice" * (lit(1.0) - $"l_discount")).as("revenue"),
+          count(lit(1)).as("n_items")
+        )
+        .orderBy($"o_orderkey")
+        .localCheckpoint(eager = true)
+    } finally {
+      s.sql(s"DROP TABLE IF EXISTS $orders")
+      s.sql(s"DROP TABLE IF EXISTS $lineitem")
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -429,24 +427,24 @@ object Relational {
     * k` and gets TopKPerKeyExec's partial/final heap pair instead of a
     * full per-key sort — the custom physical operator reachable from
     * pure SQL text. The ORDER BY is total (price, orderkey, linenumber),
-    * so the rewrite is exactly lossless; the conf is flipped back before
-    * returning (the result is eagerly pinned first), so no other query
-    * in the sweep sees the rewrite. TopKSpec asserts the plan shape and
-    * on/off row equality.
+    * so the rewrite is exactly lossless. The conf is set on a clone of
+    * the caller's session (same context, own SQL conf, the extensions
+    * inherited), so no other query sees the rewrite, not even one
+    * planning on the caller's session at the same moment. TopKSpec
+    * asserts the plan shape and on/off row equality.
     */
   val oTopkSqlRewrite: Q = (s, d) => {
-    s.conf.set(graft.plans.TopKRewrite.confKey, "true")
-    try
-      s.sql(
-        s"""SELECT l_returnflag, l_orderkey, l_extendedprice, rn FROM (
-           |  SELECT l_returnflag, l_orderkey, l_extendedprice,
-           |    row_number() OVER (PARTITION BY l_returnflag
-           |      ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber) AS rn
-           |  FROM parquet.`$d/lineitem.parquet`)
-           |WHERE rn <= 3""".stripMargin)
-        .localCheckpoint(true) // optimize+execute NOW, under the conf
-        .orderBy($"l_returnflag", $"rn")
-    finally s.conf.unset(graft.plans.TopKRewrite.confKey)
+    val rewriting = org.apache.spark.sql.GraftSqlBridge.cloneSession(s)
+    rewriting.conf.set(graft.plans.TopKRewrite.confKey, "true")
+    rewriting.sql(
+      s"""SELECT l_returnflag, l_orderkey, l_extendedprice, rn FROM (
+         |  SELECT l_returnflag, l_orderkey, l_extendedprice,
+         |    row_number() OVER (PARTITION BY l_returnflag
+         |      ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber) AS rn
+         |  FROM parquet.`$d/lineitem.parquet`)
+         |WHERE rn <= 3""".stripMargin)
+      .localCheckpoint(true)
+      .orderBy($"l_returnflag", $"rn")
   }
 
   // ---------------------------------------------------------------------

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.syntax._
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 import org.apache.spark.sql.types._
 
 /** Driver-facing streaming queries — the §2.10 slice run through the REAL
@@ -96,40 +96,49 @@ object StreamQueries {
     if (f.isDirectory) (f.toString, "*.parquet") else (d, s"$table.parquet")
   }
 
-  /** Shared AvailableNow scaffold (r3 self-review — previously inlined
-    * per query): events file stream (glob-filtered out of the corpus
-    * dir, nanos→micros ts) → the given aggregation → complete-mode
-    * memory sink. Complete mode: the final in-memory table is the
-    * converged aggregate (append would hold back windows newer than the
-    * final watermark — correct for an unbounded stream, but the gate here
-    * is batch-convergence of the full bounded replay). FIXED sink name:
-    * the memory sink replaces the temp view on each start, so repeated
-    * invocations — the driver sweep, Bench's two passes — don't
-    * accumulate result tables. The checkpoint dir is cleaned up on
-    * failure too.
+  /** The one bounded-stream runner: every driver stream replays a bounded
+    * corpus with `Trigger.AvailableNow` (all files present at start, cut
+    * into micro-batches by the source's own limits, then stop) against a
+    * checkpoint dir of its own, and blocks until the replay is done. The
+    * dir is deleted in `finally`, so a failed query leaves none behind.
     */
-  private def runAvailableNow(s: SparkSession, d: String, name: String)(
-      agg: DataFrame => DataFrame
-  ): DataFrame = {
-    val ck = java.nio.file.Files.createTempDirectory(s"graft-$name-ck").toString
-    // complete-mode aggregation: converges under any batch split, so the
-    // multi-batch A/B knob is safe here (see eventsStream)
-    val src = eventsStream(s, d, splitSafe = true)
-    val q = agg(src).writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("complete")
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ck))
-    s.table(name)
+  private def runBounded[T](writer: DataStreamWriter[T]): Unit = {
+    val ck = java.nio.file.Files.createTempDirectory("graft-stream-ck").toFile
+    try writer.option("checkpointLocation", ck.toString).trigger(Trigger.AvailableNow())
+      .start().awaitTermination()
+    finally org.apache.commons.io.FileUtils.deleteQuietly(ck)
   }
 
+  /** [[runBounded]] into a memory sink, read back as a pinned result. The
+    * sink is named `<base>_sink_<n>`, unique per call: Spark refuses to
+    * start a query whose name is already active in the session, so a
+    * fixed name fails a second caller on the same session, and a lazy
+    * handle on a shared view re-reads whatever replaced it. `read` shapes
+    * the sink table (projection, order, batch post-pass) before the pin;
+    * the memory sink holds every row on the driver heap until its view
+    * goes, so the view is dropped in `finally`, on every path.
+    */
+  private def runToMemory(df: DataFrame, base: String, mode: String = "append")(
+      read: DataFrame => DataFrame
+  ): DataFrame = {
+    val s    = df.sparkSession
+    val name = callName(s"${base}_sink")
+    try {
+      runBounded(df.writeStream.format("memory").queryName(name).outputMode(mode))
+      read(s.table(name)).localCheckpoint()
+    } finally s.catalog.dropTempView(name)
+  }
+
+  /** 30-minute tumbling totals per event type. Complete mode: the final
+    * sink table is the converged aggregate (append would hold back windows
+    * newer than the final watermark, right for an unbounded stream, but
+    * the gate here is batch convergence of the full bounded replay). A
+    * complete-mode aggregate converges under any batch split, so the
+    * multi-batch A/B knob is safe here (see eventsStream).
+    */
   val streamWindows: Q = (s, d) =>
-    runAvailableNow(s, d, "s_stream_windows_sink") { src =>
-      src
+    runToMemory(
+      eventsStream(s, d, splitSafe = true)
         .withWatermark("ts", "1 hour")
         .groupBy(window($"ts", "30 minutes").as("w"), $"event_type")
         .agg(
@@ -137,8 +146,9 @@ object StreamQueries {
           count(lit(1)).as("n_events")
         )
         .select($"w.start".as("window_start"), $"w.end".as("window_end"),
-          $"event_type", $"total_value", $"n_events")
-    }.orderBy($"window_start", $"event_type")
+          $"event_type", $"total_value", $"n_events"),
+      "s_stream_windows", "complete"
+    )(_.orderBy($"window_start", $"event_type"))
 
   /** Session windows through the REAL streaming engine — the dynamic-gap
     * counterpart of `s_stream_windows` (judge-visible §2.10 widening):
@@ -152,8 +162,8 @@ object StreamQueries {
     * session, hence `>=` in the oracle's break condition).
     */
   val streamSessions: Q = (s, d) =>
-    runAvailableNow(s, d, "s_stream_sessions_sink") { src =>
-      src
+    runToMemory(
+      eventsStream(s, d, splitSafe = true)
         .withWatermark("ts", "1 hour")
         .groupBy(session_window($"ts", "30 minutes").as("w"), $"user_id")
         .agg(
@@ -161,8 +171,9 @@ object StreamQueries {
           count(lit(1)).as("n_events")
         )
         .select($"w.start".as("session_start"), $"w.end".as("session_end"),
-          $"user_id", $"total_value", $"n_events")
-    }.orderBy($"user_id", $"session_start")
+          $"user_id", $"total_value", $"n_events"),
+      "s_stream_sessions", "complete"
+    )(_.orderBy($"user_id", $"session_start"))
 
   /** Stream-stream interval join through the real engine: views matched
     * to the same user's purchases within the following hour. Both sides
@@ -172,8 +183,13 @@ object StreamQueries {
     * batch join and the plain-SQL oracle applies. At firehose scale the
     * watermark bound is what keeps the buffered join state finite.
     */
-  val streamJoin: Q = (s, d) => {
-    val ck = java.nio.file.Files.createTempDirectory("graft-ssjoin-ck").toString
+  val streamJoin: Q = (s, d) =>
+    runToMemory(viewsToPurchases(s, d, "inner"), "s_stream_join")(joinedRows)
+
+  /** Views joined to the same user's purchases within the following hour,
+    * both sides watermarked 2 h (shared by the inner and outer legs).
+    */
+  private def viewsToPurchases(s: SparkSession, d: String, joinType: String): DataFrame = {
     def side(tpe: String, prefix: String) = eventsStream(s, d)
       .filter($"event_type" === tpe)
       .select(
@@ -182,24 +198,16 @@ object StreamQueries {
         $"ts".as(s"${prefix}_ts")
       )
       .withWatermark(s"${prefix}_ts", "2 hours")
-    val joined = side("view", "v").join(
+    side("view", "v").join(
       side("purchase", "p"),
-      expr("""v_user = p_user AND p_ts >= v_ts AND p_ts <= v_ts + INTERVAL 1 HOUR""")
+      expr("""v_user = p_user AND p_ts >= v_ts AND p_ts <= v_ts + INTERVAL 1 HOUR"""),
+      joinType
     )
-    val q = joined.writeStream
-      .format("memory")
-      .queryName("s_stream_join_sink")
-      .outputMode("append")
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ck))
-    // pin + drop, like streamJoinOuter (r11 review): the memory sink
-    // buffers the full join output on the driver heap for the JVM's
-    // life, and a lazy handle over the temp view silently re-reads
-    // whatever later replaces the name
-    val out = s.table("s_stream_join_sink")
+  }
+
+  /** The join sinks' rows under their result names, in result order. */
+  private def joinedRows(sink: DataFrame): DataFrame =
+    sink
       .select(
         $"v_user".as("user_id"),
         $"v_id".as("view_id"),
@@ -208,10 +216,6 @@ object StreamQueries {
         $"p_ts".as("purchase_ts")
       )
       .orderBy($"user_id", $"view_id", $"purchase_id")
-      .localCheckpoint()
-    s.catalog.dropTempView("s_stream_join_sink")
-    out
-  }
 
   /** Stream-stream LEFT OUTER interval join — the semantics the inner
     * join above cannot express: views with NO purchase in the following
@@ -232,43 +236,8 @@ object StreamQueries {
     * the next trigger of a live stream). The inequality's boundary is
     * pinned by StreamOuterJoinSpec on a planted corpus.
     */
-  val streamJoinOuter: Q = (s, d) => {
-    val ck = java.nio.file.Files.createTempDirectory("graft-ssojoin-ck").toString
-    def side(tpe: String, prefix: String) = eventsStream(s, d)
-      .filter($"event_type" === tpe)
-      .select(
-        $"user_id".as(s"${prefix}_user"),
-        $"event_id".as(s"${prefix}_id"),
-        $"ts".as(s"${prefix}_ts")
-      )
-      .withWatermark(s"${prefix}_ts", "2 hours")
-    val joined = side("view", "v").join(
-      side("purchase", "p"),
-      expr("""v_user = p_user AND p_ts >= v_ts AND p_ts <= v_ts + INTERVAL 1 HOUR"""),
-      "leftOuter"
-    )
-    val q = joined.writeStream
-      .format("memory")
-      .queryName("s_stream_join_outer_sink")
-      .outputMode("append")
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ck))
-    val out = s.table("s_stream_join_outer_sink")
-      .select(
-        $"v_user".as("user_id"),
-        $"v_id".as("view_id"),
-        $"p_id".as("purchase_id"),
-        $"v_ts".as("view_ts"),
-        $"p_ts".as("purchase_ts")
-      )
-      .orderBy($"user_id", $"view_id", $"purchase_id")
-      .localCheckpoint()
-    s.catalog.dropTempView("s_stream_join_outer_sink")
-    out
-  }
+  val streamJoinOuter: Q = (s, d) =>
+    runToMemory(viewsToPurchases(s, d, "leftOuter"), "s_stream_join_outer")(joinedRows)
 
   /** Streaming deduplication through the real engine: the corpus unioned
     * with a deterministic duplicate slice (every 10th event replayed — the
@@ -282,7 +251,6 @@ object StreamQueries {
     * rows and the plain SELECT oracle applies.
     */
   val streamDedup: Q = (s, d) => {
-    val ck = java.nio.file.Files.createTempDirectory("graft-sdedup-ck").toString
     // SINGLE-BATCH ASSUMPTION (r5 ADVICE, pinned): equality with the
     // plain batch oracle relies on the whole corpus landing in ONE
     // AvailableNow micro-batch — the glob admits exactly one file and
@@ -292,30 +260,14 @@ object StreamQueries {
     // arrive after the watermark advanced past its event time (state
     // already evicted → redelivered rows re-emitted, or rows dropped as
     // late) and the converged table would legitimately diverge from the
-    // batch SELECT. runAvailableNow doesn't fit here: it is
-    // complete-mode aggregation scaffolding, while dedup emits append
-    // rows.
+    // batch SELECT.
     def src = eventsStream(s, d, Map("maxFilesPerTrigger" -> "1000"))
-    val q = src
+    val deduped = src
       .union(src.filter($"event_id" % 10 === 0))
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("event_id")
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-      .writeStream
-      .format("memory")
-      .queryName("s_stream_dedup_sink")
-      .outputMode("append")
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ck))
-    // materialize, then drop the sink view — append-mode memory sinks
-    // are per-query tables, and leaving one registered leaks it into the
-    // session catalog across a 160-query sweep
-    val out = s.table("s_stream_dedup_sink").orderBy($"event_id").localCheckpoint()
-    s.catalog.dropTempView("s_stream_dedup_sink")
-    out
+    runToMemory(deduped, "s_stream_dedup")(_.orderBy($"event_id"))
   }
 
   /** Cumulative-spend milestone level per user is the custom state — one
@@ -398,10 +350,10 @@ object StreamQueries {
 
   val streamForecast: Q = (s, d) => {
     import s.implicits.{newDoubleEncoder, newStringEncoder, newProductEncoder}
-    val tmp = java.nio.file.Files.createTempDirectory("graft-sforecast")
-    val (bronze, ck1, ck2) = (s"$tmp/windows", s"$tmp/ck1", s"$tmp/ck2")
+    val tmp    = java.nio.file.Files.createTempDirectory("graft-sforecast")
+    val bronze = s"$tmp/windows"
     try {
-      val q1 = eventsStream(s, d)
+      runBounded(eventsStream(s, d)
         .withWatermark("ts", "1 hour")
         .groupBy(window($"ts", "30 minutes").as("w"), $"event_type")
         .agg(
@@ -416,41 +368,20 @@ object StreamQueries {
         .select(
           unix_micros($"w.start").as("ws_us"), unix_micros($"w.end").as("we_us"),
           $"event_type", $"total_value", $"n_events")
-        .writeStream
-        .format("parquet")
-        .option("path", bronze)
-        .option("checkpointLocation", ck1)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q1.awaitTermination()
+        .writeStream.format("parquet").option("path", bronze).outputMode("append"))
       val bronzeSchema = StructType(Seq(
         StructField("ws_us", LongType), StructField("we_us", LongType),
         StructField("event_type", StringType), StructField("total_value", DoubleType),
         StructField("n_events", LongType)))
       val forecasts = sesOverWindows(
         s.readStream.schema(bronzeSchema).parquet(bronze).as[WinRow])
-      // drop the memory-sink view in a finally (r11 review): it buffers
-      // every emitted row on the driver heap, and a failure between
-      // start() and here would otherwise leak it for the sweep JVM's life
-      try {
-        val q2 = forecasts.toDF().writeStream
-          .format("memory")
-          .queryName("s_stream_forecast_sink")
-          .outputMode("append")
-          .option("checkpointLocation", ck2)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q2.awaitTermination()
-        s.table("s_stream_forecast_sink")
-          .select(
-            $"event_type",
-            timestamp_micros($"ws_us").as("window_start"),
-            timestamp_micros($"we_us").as("window_end"),
-            $"total_value", $"n_events", $"forecast_next")
-          .orderBy($"event_type", $"window_start")
-          .localCheckpoint()
-      } finally s.catalog.dropTempView("s_stream_forecast_sink")
+      runToMemory(forecasts.toDF(), "s_stream_forecast")(
+        _.select(
+          $"event_type",
+          timestamp_micros($"ws_us").as("window_start"),
+          timestamp_micros($"we_us").as("window_end"),
+          $"total_value", $"n_events", $"forecast_next")
+          .orderBy($"event_type", $"window_start"))
     } finally org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile)
   }
 
@@ -489,22 +420,13 @@ object StreamQueries {
     // only the encoders — the full implicits bundle would make its bound
     // `$` interpolator ambiguous with graft.syntax's session-free one
     import s.implicits.{newLongEncoder, newProductEncoder}
-    val ck = java.nio.file.Files.createTempDirectory("graft-sstate-ck").toString
     // SINGLE-BATCH ASSUMPTION (the streamDedup precedent, pinned): the
     // fold sorts each group's rows by (ts, event_id) WITHIN a batch, so
     // equality with the event-time-ordered oracle relies on the bounded
     // corpus landing in one AvailableNow micro-batch. A live multi-batch
     // deployment keeps the same bounded state but folds in arrival
     // order — the standard at-least-once stream contract.
-    val purchases = eventsStream(s, d, Map("maxFilesPerTrigger" -> "1000"))
-      .filter($"event_type" === "purchase")
-      .select(
-        $"user_id", $"event_id",
-        unix_micros($"ts").as("ts_us"),
-        ($"value".cast("decimal(18,2)") * lit(100)).cast("long").as("vc")
-      )
-      .as[PurchaseEvt]
-    val alerts = purchases
+    val alerts = purchaseEvents(s, d)
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (user: Long, rows: Iterator[PurchaseEvt], state: GroupState[Long]) =>
@@ -521,26 +443,31 @@ object StreamQueries {
           state.update(cum)
           out.result().iterator
       }
-    val q = alerts.toDF().writeStream
-      .format("memory")
-      .queryName("s_stream_state_sink")
-      .outputMode("append")
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ck))
-    val out = s.table("s_stream_state_sink")
+    runToMemory(alerts.toDF(), "s_stream_state")(milestoneRows)
+  }
+
+  /** Purchase events in integer cents, the milestone folds' input. */
+  private def purchaseEvents(s: SparkSession, d: String): org.apache.spark.sql.Dataset[PurchaseEvt] = {
+    import s.implicits.newProductEncoder
+    eventsStream(s, d, Map("maxFilesPerTrigger" -> "1000"))
+      .filter($"event_type" === "purchase")
+      .select(
+        $"user_id", $"event_id",
+        unix_micros($"ts").as("ts_us"),
+        ($"value".cast("decimal(18,2)") * lit(100)).cast("long").as("vc")
+      )
+      .as[PurchaseEvt]
+  }
+
+  /** The milestone sinks' rows with `ts` back as a timestamp, in result order. */
+  private def milestoneRows(sink: DataFrame): DataFrame =
+    sink
       .select(
         $"user_id", $"event_id",
         timestamp_micros($"ts_us").as("ts"),
         $"milestone", $"cum_value"
       )
       .orderBy($"user_id", $"ts", $"event_id")
-      .localCheckpoint()
-    s.catalog.dropTempView("s_stream_state_sink")
-    out
-  }
 
   /** The milestone fold as a Spark-4 `StatefulProcessor` — semantically
     * byte-identical to the `flatMapGroupsWithState` closure in
@@ -601,43 +528,14 @@ object StreamQueries {
     val provKey = "spark.sql.streaming.stateStore.providerClass"
     val prior   = s.conf.getOption(provKey)
     s.conf.set(provKey, rocksDbProvider)
-    val ck = java.nio.file.Files.createTempDirectory("graft-tws-ck").toString
     try {
-      val purchases = eventsStream(s, d, Map("maxFilesPerTrigger" -> "1000"))
-        .filter($"event_type" === "purchase")
-        .select(
-          $"user_id", $"event_id",
-          unix_micros($"ts").as("ts_us"),
-          ($"value".cast("decimal(18,2)") * lit(100)).cast("long").as("vc")
-        )
-        .as[PurchaseEvt]
-      val alerts = purchases
+      val alerts = purchaseEvents(s, d)
         .groupByKey(_.user_id)
         .transformWithState(new MilestoneProcessor, TimeMode.None(), OutputMode.Append())
-      val q = alerts.toDF().writeStream
-        .format("memory")
-        .queryName("s_stream_state_tws_sink")
-        .outputMode("append")
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val out = s.table("s_stream_state_tws_sink")
-        .select(
-          $"user_id", $"event_id",
-          timestamp_micros($"ts_us").as("ts"),
-          $"milestone", $"cum_value"
-        )
-        .orderBy($"user_id", $"ts", $"event_id")
-        .localCheckpoint()
-      s.catalog.dropTempView("s_stream_state_tws_sink")
-      out
-    } finally {
-      prior match {
-        case Some(v) => s.conf.set(provKey, v)
-        case None    => s.conf.unset(provKey)
-      }
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ck))
+      runToMemory(alerts.toDF(), "s_stream_state_tws")(milestoneRows)
+    } finally prior match {
+      case Some(v) => s.conf.set(provKey, v)
+      case None    => s.conf.unset(provKey)
     }
   }
 
@@ -676,8 +574,8 @@ object StreamQueries {
         round($"sw" / $"n", 6).as("mean_total"),
         round(sqrt(($"sww" - $"sw" * $"sw" / $"n") / ($"n" - 1)), 6).as("sigma_total")
       )
-    runAvailableNow(s, d, "s_stream_anomaly_sink") { src =>
-      src
+    runToMemory(
+      eventsStream(s, d, splitSafe = true)
         .join(broadcast(stats), Seq("event_type"))
         .withWatermark("ts", "1 hour")
         .groupBy(
@@ -690,8 +588,9 @@ object StreamQueries {
           $"event_type", $"total_value", $"mean_total", $"sigma_total",
           (abs($"total_value" - $"mean_total") > lit(3.0) * $"sigma_total")
             .cast("int").as("is_anomaly")
-        )
-    }.orderBy($"window_start", $"event_type")
+        ),
+      "s_stream_anomaly", "complete"
+    )(_.orderBy($"window_start", $"event_type"))
   }
 
   /** Windowed top-k through the real engine — the "trending now" board:
@@ -705,20 +604,19 @@ object StreamQueries {
     * (count desc, type) — fully deterministic.
     */
   val streamTopK: Q = (s, d) => {
-    val agg = runAvailableNow(s, d, "s_stream_topk_sink") { src =>
-      src
-        .withWatermark("ts", "1 hour")
-        .groupBy(window($"ts", "30 minutes").as("w"), $"event_type")
-        .agg(count(lit(1)).as("n_events"))
-        .select($"w.start".as("window_start"), $"event_type", $"n_events")
-    }
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"window_start")
       .orderBy($"n_events".desc, $"event_type")
-    agg
-      .withColumn("rank", row_number().over(w))
+    runToMemory(
+      eventsStream(s, d, splitSafe = true)
+        .withWatermark("ts", "1 hour")
+        .groupBy(window($"ts", "30 minutes").as("w"), $"event_type")
+        .agg(count(lit(1)).as("n_events"))
+        .select($"w.start".as("window_start"), $"event_type", $"n_events"),
+      "s_stream_topk", "complete"
+    )(_.withColumn("rank", row_number().over(w))
       .filter($"rank" <= 3)
-      .orderBy($"window_start", $"rank")
+      .orderBy($"window_start", $"rank"))
   }
 
   /** Streaming UPSERT sink — the foreachBatch/MERGE pattern every
@@ -768,23 +666,17 @@ object StreamQueries {
   }
 
   val streamUpsert: Q = (s, d) => {
-    val ck  = java.nio.file.Files.createTempDirectory("graft-supsert-ck").toString
     val tbl = java.nio.file.Files.createTempDirectory("graft-supsert-state").toString + "/user_profile"
     // associative fold (comment above): converged table independent of
     // batching, so the multi-batch A/B knob is safe here
-    val q = eventsStream(s, d, splitSafe = true).writeStream
+    runBounded(eventsStream(s, d, splitSafe = true).writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val ss = batch.sparkSession
         val state =
           if (new java.io.File(tbl).exists()) Some(ss.read.parquet(tbl)) else None
         upsertFold(state, batch).localCheckpoint(true).write.mode("overwrite").parquet(tbl)
         ()
-      }
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ck))
+      })
     // an event source that yields zero micro-batches never creates the
     // state table (chaos r11 round 6) — an empty profile table IS the
     // correct converged state of an empty stream, not a crash
@@ -872,7 +764,6 @@ object StreamQueries {
     * the oracle) covers with an explicit two-batch MemoryStream case.
     */
   val streamNearDedup: Q = (s, d) => {
-    val ck = java.nio.file.Files.createTempDirectory("graft-sneardup-ck").toString
     val docsSchema = graft.tables.Tables.documents(s, d).schema
     val (docsPath, docsGlob) = tableStreamSource(d, "documents")
     val src = s.readStream
@@ -880,22 +771,8 @@ object StreamQueries {
       .option("pathGlobFilter", docsGlob)
       .option("maxFilesPerTrigger", "1000")
       .parquet(docsPath)
-    val q = nearDedupFlags(src).writeStream
-      .format("memory")
-      .queryName("s_stream_near_dedup_sink")
-      .outputMode("append")
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ck))
-    val out = s.table("s_stream_near_dedup_sink")
-      .groupBy($"doc_id")
-      .agg(min($"dup_of").as("dup_of"))
-      .orderBy($"doc_id")
-      .localCheckpoint()
-    s.catalog.dropTempView("s_stream_near_dedup_sink")
-    out
+    runToMemory(nearDedupFlags(src), "s_stream_near_dedup")(
+      _.groupBy($"doc_id").agg(min($"dup_of").as("dup_of")).orderBy($"doc_id"))
   }
 
   /** One probe micro-batch against the cell-partitioned index — shared
@@ -936,7 +813,6 @@ object StreamQueries {
     * result — no single-batch pin (the spec runs a 2-batch split).
     */
   val streamAnnServe: Q = (s, d) => {
-    val ck  = java.nio.file.Files.createTempDirectory("graft-sannserve-ck").toString
     val out = java.nio.file.Files.createTempDirectory("graft-sannserve-out").toString + "/hits"
     val idxPath = graft.sim.Similarity.scratchDir("sindex", d)
     val cents   = graft.sim.Similarity.writeIvfIndex(s, d, idxPath, nCells = 16, iters = 3)
@@ -959,13 +835,7 @@ object StreamQueries {
       .filter(graft.tables.Tables.vectorContract($"embedding", dim))
       .select($"vec_id".as("probe_id"),
         transform($"embedding", x => x.cast("double")).as("pv"))
-    val q = probes.writeStream
-      .foreachBatch(annServeBatchFn(idxPath, cents, out))
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ck))
+    runBounded(probes.writeStream.foreachBatch(annServeBatchFn(idxPath, cents, out)))
     // zero accepted probes ⇒ zero micro-batch writes ⇒ the hits dir was
     // never created (chaos r11 round 6: an empty — or fully rejected —
     // ingest window is a legitimate serving state, not a crash): an
@@ -998,7 +868,6 @@ object StreamQueries {
     * scoring, which the DuckDB oracle replays term by term.
     */
   val streamIngestGate: Q = (s, d) => {
-    val ck = java.nio.file.Files.createTempDirectory("graft-sgate-ck").toString
     val docsSchema = graft.tables.Tables.documents(s, d).schema
     val (docsPath, docsGlob) = tableStreamSource(d, "documents")
     val src = s.readStream
@@ -1012,18 +881,7 @@ object StreamQueries {
       "lang_id(text) AS lang_pred",
       "quality_score(text) >= 2 AND lang_id(text) <> 'und' AS accepted"
     )
-    val q = scored.writeStream
-      .format("memory")
-      .queryName("s_stream_ingest_gate_sink")
-      .outputMode("append")
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ck))
-    val out = s.table("s_stream_ingest_gate_sink").orderBy($"doc_id").localCheckpoint()
-    s.catalog.dropTempView("s_stream_ingest_gate_sink")
-    out
+    runToMemory(scored, "s_stream_ingest_gate")(_.orderBy($"doc_id"))
   }
 
   val queries: Map[String, Q] = Map(

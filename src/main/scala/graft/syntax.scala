@@ -7,6 +7,14 @@ import org.apache.spark.sql.ColumnName
   * argument, so a standalone interpolator keeps them pure functions).
   */
 object syntax {
+  private val callNames = new java.util.concurrent.atomic.AtomicLong
+
+  /** `<base>_<n>`, unique per call in this JVM: the catalog name (temp
+    * view, table, stream) of one call, so two callers on one session
+    * never share it. It parses as an identifier.
+    */
+  def callName(base: String): String = s"${base}_${callNames.incrementAndGet()}"
+
   implicit class ColStringContext(private val sc: StringContext) extends AnyVal {
     def $(args: Any*): ColumnName = new ColumnName(sc.s(args: _*))
   }

@@ -389,8 +389,10 @@ object Stress {
               "rocksdbTotalBytesWritten" -> "written")
               .flatMap { case (k, lbl) => custom.get(k).map(v => f"$lbl ${v / 1e6}%.0f MB") }
             // p.name is null for unnamed queries (s_stream_forecast's
-            // first hop) — CHM.put(null, …) NPEs inside the listener bus
-            val key = Option(p.name).getOrElse(p.id.toString)
+            // first hop) — CHM.put(null, …) NPEs inside the listener bus.
+            // A sink's name ends in a per-call counter; the label drops it,
+            // so runs print comparable `state[s_stream_…_sink]` rows
+            val key = Option(p.name).map(_.replaceFirst("_\\d+$", "")).getOrElse(p.id.toString)
             statePeaks.merge(key, (rows, mem),
               (a, b) => (math.max(a._1, b._1), math.max(a._2, b._2)))
             val (pkRows, pkMem) = statePeaks.get(key)
@@ -415,7 +417,7 @@ object Stress {
       val exec: String => Unit = zoloChains.getOrElse(name,
         dd2 => { graft.SparkEntry.queries(name)(spark, dd2).write.mode("overwrite").parquet("/tmp/graft_stress_out"); () })
       // drop metrics from the PRECEDING (warmup or prior) run before
-      // measuring: the sink names repeat across runs, so a measured run
+      // measuring: the sink labels repeat across runs, so a measured run
       // that emits nothing (the r13 zero-files bug) must print NOTHING,
       // not the previous run's numbers under its own label. Drain first,
       // so none of that run's queued events lands after the clear.

@@ -17,6 +17,13 @@ object GraftSqlBridge {
   def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     classic.ColumnNodeToExpressionConverter(c.node)
 
+  /** A session over `spark`'s context with its own copy of the SQL conf
+    * and temp views, and the same extensions (`cloneSession` is
+    * private[sql]).
+    */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
+
   def logicalPlan(df: DataFrame): LogicalPlan =
     df.asInstanceOf[classic.Dataset[Row]].logicalPlan
 

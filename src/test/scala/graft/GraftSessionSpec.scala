@@ -86,6 +86,22 @@ class GraftSessionSpec extends AnyFunSuite {
       f.startsWith("graft/obs/") && src.contains("addSparkListener") })
   }
 
+  test("src/main starts bounded streams and memory sinks only in StreamQueries' runner") {
+    // per-call sink names, checkpoint cleanup and the view drop live in
+    // one place; no other site (a Stress corpus builder, say) needs either
+    val runnerOnly = Seq(
+      """format\s*\(\s*"memory"\s*\)""".r,
+      """Trigger\s*\.\s*AvailableNow\s*\(""".r)
+    val runner = "graft/streaming/StreamQueries.scala"
+    runnerOnly.foreach { re =>
+      val sites = mainSources.flatMap { case (f, src) => re.findAllIn(src).map(_ => f) }
+      assert(sites == Seq(runner), s"$re sites: $sites")
+    }
+    val src = mainSources.collectFirst { case (`runner`, s) => s }.get
+    assert("""\.start\s*\(\s*\)""".r.findAllIn(src).size == 1, "a stream started outside runBounded")
+    assert(src.contains("def runBounded") && !src.contains("runAvailableNow"))
+  }
+
   test("Verify.main rejects a wrong argument count before building a session") {
     val before = SparkSession.getDefaultSession
     val e = intercept[IllegalArgumentException](Verify.main(Array("x")))
