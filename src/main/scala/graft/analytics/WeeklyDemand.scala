@@ -1,7 +1,5 @@
 package graft.analytics
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 /** The reference's analytical centerpiece: the per-profile weekly weight
   * query (`/root/reference/bin/modelling/arima_models.py:63-146`; identical
   * in `holt_model.py` / `simp_avg_model.py`) — three per-source CTEs
@@ -67,10 +65,4 @@ object WeeklyDemand {
       |GROUP BY u2.profile_name, u2.week_date
       |ORDER BY u2.profile_name, u2.week_date
       |""".stripMargin
-
-  /** Run against registered temp views (square_trans, square_trans_details,
-    * shopify_trans, shopify_trans_details, qb_trans, qb_trans_details,
-    * items, coffee_profiles).
-    */
-  def run(spark: SparkSession): DataFrame = spark.sql(sql)
 }

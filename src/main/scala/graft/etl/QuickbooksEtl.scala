@@ -39,7 +39,11 @@ object QuickbooksEtl {
   /** A3 — multi-agg to invoice grain (`quickbooks_ETL.py:186-194`). */
   def headerTable(details: DataFrame): DataFrame =
     details
-      .withColumn("created_at", to_timestamp($"TxnDate"))
+      // try_to_timestamp: same malformed-timestamp totality contract as
+      // SquareEtl.withMarket. A filter on created_at (the weekly-demand
+      // SQL's) is pushed below the explode, so it also parses the dates
+      // of invoices whose lines filter away
+      .withColumn("created_at", try_to_timestamp($"TxnDate"))
       .groupBy($"payment_id", $"created_at", $"customer_id")
       .agg(sum($"dollars").as("dollars"))
 

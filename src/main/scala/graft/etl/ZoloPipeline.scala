@@ -1,6 +1,7 @@
 package graft.etl
 
 import graft.analytics.WeeklyDemand
+import graft.syntax.callName
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** End-to-end zolo flow on the bundled fixtures (FIXTURES.md §1–2):
@@ -20,47 +21,37 @@ object ZoloPipeline {
 
   val fixturesDir = "/root/repo/fixtures"
 
-  /** Register all 8 warehouse tables as temp views from the fixture data.
-    * Idempotent per session — repeated driver queries skip re-planning the
-    * whole ETL fixture read.
+  /** The eight tables the weekly-demand SQL reads, planned from the
+    * fixture ETLs on this call: name → frame, nothing registered or
+    * persisted.
     */
-  def registerAll(spark: SparkSession, dir: String = fixturesDir): Unit = {
-    // idempotence must check the CACHE too: the Verify/Bench sweeps call
-    // clearCache() between queries, which drops the persists but leaves
-    // the views — a view-only check would leave later zolo queries
-    // re-running the JSON ETLs once per plan branch
-    if (spark.catalog.tableExists("coffee_profiles") &&
-        spark.catalog.isCached("coffee_profiles")) return
-    registerAllForce(spark, dir)
-  }
-
-  /** Unconditional registration (tests that mutate fixtures would use this). */
-  def registerAllForce(spark: SparkSession, dir: String = fixturesDir): Unit = {
-    // fixture tables are tiny: persist so the six driver queries and the
-    // multi-branch weekly-demand plan don't re-run the JSON ETLs per use
+  private def demandFrames(spark: SparkSession, dir: String): Seq[(String, DataFrame)] = {
     val (sqTrans, sqDetails) = SquareEtl.run(spark, s"$dir/square_payments.json")
     val (shTrans, shDetails) = ShopifyEtl.run(spark, s"$dir/shopify_orders.json")
     val (qbTrans, qbDetails) = QuickbooksEtl.run(spark, s"$dir/qb_invoices.json")
-    sqTrans.coalesce(1).persist().createOrReplaceTempView("square_trans")
-    sqDetails.coalesce(1).persist().createOrReplaceTempView("square_trans_details")
-    shTrans.coalesce(1).persist().createOrReplaceTempView("shopify_trans")
-    shDetails.coalesce(1).persist().createOrReplaceTempView("shopify_trans_details")
-    qbTrans.coalesce(1).persist().createOrReplaceTempView("qb_trans")
-    qbDetails.coalesce(1).persist().createOrReplaceTempView("qb_trans_details")
-    QbCustomersEtl
-      .run(spark, s"$dir/qb_customers.json")
-      .persist()
-      .createOrReplaceTempView("qb_customers")
-    Warehouse.readItems(spark, s"$dir/items.csv").persist().createOrReplaceTempView("items")
-    Warehouse
-      .readCoffeeProfiles(spark, s"$dir/coffee_profiles.csv")
-      .persist()
-      .createOrReplaceTempView("coffee_profiles")
+    Seq(
+      "square_trans_details"  -> sqDetails,
+      "shopify_trans_details" -> shDetails,
+      "qb_trans_details"      -> qbDetails,
+      "square_trans"          -> sqTrans,
+      "shopify_trans"         -> shTrans,
+      "qb_trans"              -> qbTrans,
+      "items"                 -> Warehouse.readItems(spark, s"$dir/items.csv"),
+      "coffee_profiles"       -> Warehouse.readCoffeeProfiles(spark, s"$dir/coffee_profiles.csv"))
   }
 
-  def weeklyDemand(spark: SparkSession): DataFrame = {
-    registerAll(spark)
-    WeeklyDemand.run(spark)
+  /** The weekly-demand SQL over this call's own views of the fixture
+    * ETLs: per-call view names, dropped as soon as `spark.sql` has
+    * analyzed the query, so concurrent callers on one session never
+    * share a name and nothing outlives the call.
+    */
+  def weeklyDemand(spark: SparkSession, dir: String = fixturesDir): DataFrame = {
+    val frames = demandFrames(spark, dir)
+    val views  = frames.map { case (t, _) => t -> callName(t) }.toMap
+    try {
+      frames.foreach { case (t, df) => df.createOrReplaceTempView(views(t)) }
+      spark.sql(demandSqlWith(views))
+    } finally views.values.foreach(spark.catalog.dropTempView)
   }
 
   /** The reference pipeline END-TO-END through the warehouse connector:
@@ -88,23 +79,18 @@ object ZoloPipeline {
   /** The verbatim weekly-demand SQL with every table reference qualified
     * into catalog `cat`: facts under `raw.`, dims under `ref.`.
     */
-  def weeklyDemandSqlIn(cat: String): String = {
-    // longest-name-first so *_details qualifies before its header prefix;
+  def weeklyDemandSqlIn(cat: String): String =
+    demandSqlWith(t => s"$cat.${if (t == "items" || t == "coffee_profiles") "ref" else "raw"}.$t")
+
+  /** [[WeeklyDemand.sql]] with each table reference renamed by `to`. */
+  private def demandSqlWith(to: String => String): String =
+    // longest-name-first so *_details renames before its header prefix;
     // the lookbehind keeps already-qualified and aliased references intact
-    val qualify = Seq(
-      "square_trans_details"  -> s"$cat.raw.square_trans_details",
-      "shopify_trans_details" -> s"$cat.raw.shopify_trans_details",
-      "qb_trans_details"      -> s"$cat.raw.qb_trans_details",
-      "square_trans"          -> s"$cat.raw.square_trans",
-      "shopify_trans"         -> s"$cat.raw.shopify_trans",
-      "qb_trans"              -> s"$cat.raw.qb_trans",
-      "items"                 -> s"$cat.ref.items",
-      "coffee_profiles"       -> s"$cat.ref.coffee_profiles"
-    )
-    qualify.foldLeft(WeeklyDemand.sql) { case (q, (from, to)) =>
-      q.replaceAll(s"(?<![\\w.])$from\\b", java.util.regex.Matcher.quoteReplacement(to))
-    }
-  }
+    Seq("square_trans_details", "shopify_trans_details", "qb_trans_details",
+      "square_trans", "shopify_trans", "qb_trans", "items", "coffee_profiles")
+      .foldLeft(WeeklyDemand.sql) { (q, t) =>
+        q.replaceAll(s"(?<![\\w.])$t\\b", java.util.regex.Matcher.quoteReplacement(to(t)))
+      }
 
   /** The MODEL half of S7 (judge r9 Missing #1): forecast output lands
     * in a catalog table shaped exactly like the reference's model
@@ -205,9 +191,10 @@ object ZoloPipeline {
     * 232-233`; `dedupKey` on the transaction tables gives the
     * effectively-once replay contract the raw reference lacks), the
     * customers dimension lands `if_exists='replace'` style
-    * (`qb_customers_ETL.py:190`) as a `createOrReplace`. The query half
-    * ([[registerAll]]) stays view-based — loads write bytes, queries
-    * don't, so the driver's zolo_* hashes are untouched by this path.
+    * (`qb_customers_ETL.py:190`) as a `createOrReplace`. The zolo_*
+    * query rows read the ETL frames directly — loads write bytes,
+    * queries don't, so the driver's zolo_* hashes are untouched by this
+    * path.
     *
     * The nine tables land CONCURRENTLY, as the reference's Square,
     * Shopify and QuickBooks jobs are independent pipelines: each write
@@ -358,34 +345,27 @@ object ZoloPipeline {
     * no analog in the TPC-H-ish corpus.
     */
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "zolo_square_trans" -> ((s, _) => {
-      registerAll(s); s.table("square_trans").orderBy("payment_id")
-    }),
-    "zolo_square_details" -> ((s, _) => {
-      // quantity/dollars tiebreakers: (payment_id, square_id) is not a
-      // total key when a payment holds two lines of the same item
-      registerAll(s)
-      s.table("square_trans_details").orderBy("payment_id", "square_id", "quantity", "dollars")
-    }),
-    "zolo_shopify_trans" -> ((s, _) => {
-      registerAll(s); s.table("shopify_trans").orderBy("order_id")
-    }),
-    "zolo_shopify_details" -> ((s, _) => {
-      // (order_id, shopify_id) is not a total key when an order repeats a
-      // variant — quantity/price complete the sort
-      registerAll(s)
-      s.table("shopify_trans_details").orderBy("order_id", "shopify_id", "quantity", "price")
-    }),
-    "zolo_qb_details" -> ((s, _) => {
-      registerAll(s)
-      s.table("qb_trans_details").orderBy("payment_id", "quickbooks_id", "quantity", "price")
-    }),
-    "zolo_qb_trans" -> ((s, _) => {
-      registerAll(s); s.table("qb_trans").orderBy("payment_id")
-    }),
-    "zolo_qb_customers" -> ((s, _) => {
-      registerAll(s); s.table("qb_customers").orderBy("customer_id")
-    }),
+    "zolo_square_trans" -> ((s, _) =>
+      SquareEtl.run(s, s"$fixturesDir/square_payments.json")._1.orderBy("payment_id")),
+    // quantity/dollars tiebreakers: (payment_id, square_id) is not a
+    // total key when a payment holds two lines of the same item
+    "zolo_square_details" -> ((s, _) =>
+      SquareEtl.run(s, s"$fixturesDir/square_payments.json")._2
+        .orderBy("payment_id", "square_id", "quantity", "dollars")),
+    "zolo_shopify_trans" -> ((s, _) =>
+      ShopifyEtl.run(s, s"$fixturesDir/shopify_orders.json")._1.orderBy("order_id")),
+    // (order_id, shopify_id) is not a total key when an order repeats a
+    // variant — quantity/price complete the sort
+    "zolo_shopify_details" -> ((s, _) =>
+      ShopifyEtl.run(s, s"$fixturesDir/shopify_orders.json")._2
+        .orderBy("order_id", "shopify_id", "quantity", "price")),
+    "zolo_qb_details" -> ((s, _) =>
+      QuickbooksEtl.run(s, s"$fixturesDir/qb_invoices.json")._2
+        .orderBy("payment_id", "quickbooks_id", "quantity", "price")),
+    "zolo_qb_trans" -> ((s, _) =>
+      QuickbooksEtl.run(s, s"$fixturesDir/qb_invoices.json")._1.orderBy("payment_id")),
+    "zolo_qb_customers" -> ((s, _) =>
+      QbCustomersEtl.run(s, s"$fixturesDir/qb_customers.json").orderBy("customer_id")),
     "zolo_weekly_demand" -> ((s, _) => weeklyDemand(s)),
     "sql_wh_demand" -> ((s, _) => weeklyDemandViaCatalog(s)),
     "wh_model_roundtrip" -> ((s, d) => modelRoundTrip(s, d)),

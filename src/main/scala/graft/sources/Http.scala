@@ -10,8 +10,8 @@ final case class Page(status: Int, headers: Map[String, String], body: String) {
   def header(name: String): Option[String] = headers.get(name.toLowerCase)
 }
 
-/** Client-side fetch policy. Serializable — shipped into `mapPartitions`
-  * tasks for distributed page fetches, so it must hold only plain data.
+/** Client-side fetch policy. Plain data only, so it is Serializable and
+  * executor-side page fetches can carry it.
   *
   * @param headers        static request headers (auth tokens etc.)
   * @param maxAttempts    total tries per URL (first + retries)

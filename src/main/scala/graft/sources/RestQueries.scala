@@ -1,10 +1,7 @@
 package graft.sources
 
-import graft.etl.{QuickbooksEtl, ShopifyEtl, SquareEtl, ZoloPipeline, ZoloSchemas}
+import graft.etl.{QuickbooksEtl, ShopifyEtl, SquareEtl, ZoloPipeline}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
-import java.net.URLEncoder
-import java.nio.charset.StandardCharsets.UTF_8
 
 /** Driver queries exercising the full HTTP extraction path end-to-end:
   * loopback API ([[FixtureApiServer]]) → real connector ([[Http]] retries
@@ -20,128 +17,8 @@ import java.nio.charset.StandardCharsets.UTF_8
   */
 object RestQueries {
 
-  private def enc(s: String) = URLEncoder.encode(s, UTF_8)
-  private val begin          = "2019-01-01T00:00:00Z"
-  private val end            = "2020-01-01T00:00:00Z"
-
-  /** Parse a count endpoint's response body, following the dotted
-    * `field` path. ONE definition for the helper extraction paths here
-    * AND the DSv2 partition planner ([[ZoloRest.countRequest]]) — and a
-    * descriptive failure when a 200 body is an error envelope without
-    * the field (the raw fold NPE'd with no URL or body context).
-    */
-  private[sources] def countOf(body: String, field: String, context: String): Int = {
-    // a 200 body that is not JSON at all must carry the same URL/body
-    // context as the missing-field case — a bare Jackson parse error
-    // names neither (chaos r8)
-    val node =
-      try new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
-      catch {
-        case e: com.fasterxml.jackson.core.JacksonException =>
-          throw new IllegalStateException(
-            s"$context: unparseable count response: ${String.valueOf(body).take(200)}", e)
-      }
-    val out  = field.split('.').foldLeft(node)((n, f) => if (n == null) null else n.get(f))
-    if (out == null || !out.canConvertToInt)
-      throw new IllegalStateException(
-        s"$context: count response has no integer field '$field': ${body.take(200)}")
-    out.asInt
-  }
-
-  private val squareTokRe = """batch_token=(.*?)&begin_time=""".r
-  // RFC 8288 link-relation match: quoted or unquoted rel value, optional
-  // whitespace around `=`, case-insensitive ("rel=next", rel = "Next",
-  // rel="prev next"). Token-BOUNDED (r13 review): without a boundary,
-  // rel values merely starting with "next" (rel="next-archive",
-  // rel=nextpage) — and `rel=next` text inside a link target URI —
-  // would false-positive the truncation guard and throw on a correctly
-  // completed chain. Quoted form: "next" as a space-separated list
-  // member; unquoted form: next followed by a delimiter or end.
-  private[sources] val relNextRe =
-    """(?i)rel\s*=\s*("(?:[^"]*\s)?next(?:\s[^"]*)?"|next(?=[\s,;]|$))""".r
-
-  /** ONE window's sequential batch-token chain — the Link-header regex
-    * is the reference's own (`square_ETL.py:88-91`). Shared verbatim by
-    * the helper extraction paths below AND the DSv2 partition reader
-    * ([[ZoloRestReaderFactory]]) so the wire contract cannot drift.
-    */
-  def squareTokenChain(
-      paymentsUrl: String,
-      token: String,
-      beginTime: String,
-      endTime: String,
-      maxPages: Int = 10000): Vector[String] = {
-    val range = s"begin_time=${enc(beginTime)}&end_time=${enc(endTime)}"
-    RestSource.fetchTokenPages(
-      s"$paymentsUrl?$range",
-      // no Link header (or one without a rel="next" leg — e.g. a final
-      // page advertising only rel="first"/"prev") = normal end of chain;
-      // a NEXT link whose token the regex can NOT scrape is a contract
-      // break that must fail loudly — the reference's regex-scrape loop
-      // (square_ETL.py:88-91) would stop silently there, truncating the
-      // chain and losing every record past it undetectably (chaos r8)
-      p => p.header("Link") match {
-        case None => None
-        case Some(h) => squareTokRe.findFirstMatchIn(h) match {
-          case Some(m) => Some(s"$paymentsUrl?batch_token=${m.group(1)}&$range")
-          // RFC 8288 permits rel=next unquoted and with free whitespace;
-          // recognizing only the quoted spelling would let an unquoted
-          // next-leg whose token the regex can't scrape silently end the
-          // chain — the exact undetectable tail loss this guard exists
-          // to prevent (r12 review)
-          case None if relNextRe.findFirstIn(h).isDefined => throw new IllegalStateException(
-            "square pagination: rel=next Link present but batch_token did not match " +
-              s"(refusing silent chain truncation): ${h.take(200)}")
-          case None => None
-        }
-      },
-      HttpConf().withBearer(token),
-      maxPages)
-  }
-
-  /** The square extraction chain, parameterized by endpoint and window:
-    * sequential batch-token pagination scraped off the Link header with
-    * the reference's own regex (`square_ETL.py:88-91`) → pinned-schema
-    * parse → the file ETL's transform stack. ONE definition serves the
-    * driver query and the incremental-ingest spec (same Link contract,
-    * same transform — they must not drift apart).
-    */
-  def squareExtract(
-      spark: SparkSession,
-      paymentsUrl: String,
-      token: String,
-      beginTime: String,
-      endTime: String): DataFrame = {
-    val bodies = squareTokenChain(paymentsUrl, token, beginTime, endTime)
-    val raw = RestSource.recordsFromArrayPages(RestSource.pagesDf(spark, bodies), ZoloSchemas.squarePayment)
-    SquareEtl.headerTable(SquareEtl.withMarket(SquareEtl.details(raw)))
-  }
-
-  /** Time-sliced PARALLEL Square extraction (judge r5 stretch #8): the
-    * batch-token chain is sequential within a window, but the endpoint's
-    * `begin_time`/`end_time` contract makes windows independent — shard
-    * [begin, end) into half-open sub-windows ([[RestSource.timeSlices]])
-    * and run one chain per window ON EXECUTORS (task-local client +
-    * retries). Records partition exactly across the half-open slices, so
-    * the union of the per-window chains is the sequential chain's record
-    * set — RestSourceSpec holds the two paths to result equality, and the
-    * driver query keeps the file-ETL oracle hash. At scale this turns S1
-    * from one API-bound driver loop into `nSlices` concurrent chains.
-    */
-  def squareExtractSharded(
-      spark: SparkSession,
-      paymentsUrl: String,
-      token: String,
-      beginTime: String,
-      endTime: String,
-      nSlices: Int): DataFrame = {
-    val windows = RestSource.timeSlices(beginTime, endTime, nSlices)
-    val pages = RestSource
-      .fetchWindows(spark, windows)(squareTokenChain(paymentsUrl, token, _, _))
-      .localCheckpoint(true) // pin bodies: the server stops after this plan
-    val raw = RestSource.recordsFromArrayPages(pages, ZoloSchemas.squarePayment)
-    SquareEtl.headerTable(SquareEtl.withMarket(SquareEtl.details(raw)))
-  }
+  private val begin = "2019-01-01T00:00:00Z"
+  private val end   = "2020-01-01T00:00:00Z"
 
   /** The DSv2 record scan ([[ZoloRestProvider]], `format("zolo-rest")`):
     * the time range travels as a Catalyst filter pushdown (visible in the
@@ -168,11 +45,11 @@ object RestQueries {
 
   /** Square driver query: 3 records/page so the fixture spans several
     * pages; injected 429/500s on every URI. Runs through the DSv2 source
-    * (pushed time range, 4 executor-side window chains) — the sequential
-    * chain and the mapPartitions sharded path stay covered by
-    * RestSourceSpec's equality cases and the incremental-ingest spec.
-    * Eager localCheckpoint pins the fetched records before the loopback
-    * server stops.
+    * (pushed time range, 4 executor-side window chains); the one-window
+    * sequential chain (`nSlices = 1`) is held to the same rows by
+    * RestSourceSpec and drives the incremental-ingest spec. Eager
+    * localCheckpoint pins the fetched records before the loopback server
+    * stops.
     */
   def squareHttpTrans(spark: SparkSession): DataFrame = {
     val srv = FixtureApiServer.squareV1(
@@ -185,26 +62,6 @@ object RestQueries {
       SquareEtl.headerTable(SquareEtl.withMarket(SquareEtl.details(raw)))
         .orderBy("payment_id")
     } finally srv.stop()
-  }
-
-  /** The mapPartitions count-then-pages Shopify extraction (kept as the
-    * spec-covered sibling of the DSv2 path; `shopify_ETL.py:70-88`).
-    */
-  def shopifyExtractPages(spark: SparkSession, base: String, user: String, pass: String,
-      pageSize: Int): DataFrame = {
-    // pageSize is the caller's contract (r11 review): the fixture specs
-    // pass 2 to exercise multi-page assembly on a 3-order fixture, while
-    // a real endpoint caller passes the API's limit (50/250) — the old
-    // hardcoded 2 would have turned a 100k-order book into 50k requests
-    val cfg   = HttpConf().withBasicAuth(user, pass)
-    val range = s"created_at_min=${enc(begin)}&created_at_max=${enc(end)}"
-    val countUrl = s"$base/admin/orders/count.json?$range"
-    val count    = countOf(Http.get(Http.newClient(), countUrl, cfg).body, "count", countUrl)
-    val urls = (1 to math.ceil(count / pageSize.toDouble).toInt)
-      .map(k => s"$base/admin/orders.json?$range&limit=$pageSize&page=$k")
-    val bodies = RestSource.fetchPages(spark, urls, cfg, parallelism = 8).localCheckpoint(true)
-    val envelope = StructType(Seq(StructField("orders", ArrayType(ZoloSchemas.shopifyOrder))))
-    RestSource.recordsFromEnvelopePages(bodies, envelope, "orders")
   }
 
   /** Shopify DSv2 records: count-then-pages planned by Spark — the count
@@ -249,17 +106,14 @@ object RestQueries {
     } finally srv.stop()
   }
 
-  /** QuickBooks: count query → STARTPOSITION/MAXRESULTS offset pages →
-    * distributed fetch (`quickbooks_ETL.py:92-113`). Deliberate divergence:
-    * the reference sizes the loop with `round(n / 25)` (`:101`), silently
-    * fetching ZERO pages when n < 13 — page count here is `ceil`, the
-    * arithmetic the reference plainly intended.
-    */
   /** QuickBooks DSv2 records: count query at partition-planning time,
     * STARTPOSITION pages as InputPartitions. QB's SQL range is exclusive
     * both ends, so the pushed shapes are the STRICT `TxnDate > lo` /
     * `TxnDate < hi` (a `>=` would stay residual — the endpoint cannot
-    * express it).
+    * express it). Deliberate divergence (`quickbooks_ETL.py:92-113`):
+    * the reference sizes its page loop with `round(n / 25)` (`:101`),
+    * silently fetching ZERO pages when n < 13 — the page count here is
+    * `ceil`, the arithmetic the reference plainly intended.
     */
   def qbDsv2Records(
       spark: SparkSession,

@@ -1,43 +1,36 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import java.net.URLEncoder
+import java.nio.charset.StandardCharsets.UTF_8
 
-/** Paginated REST extraction — the network half of the reference's four
-  * ETLs (VERDICT r3 "What's missing" #1), Spark-first.
+/** The wire contract of the reference's three REST APIs — the network
+  * half of its four ETLs (VERDICT r3 "What's missing" #1). Spark-free:
+  * the one extraction route, the `zolo-rest` DSv2 source
+  * ([[ZoloRestProvider]]), plans partitions and parses records; this
+  * module only speaks HTTP.
   *
   * Two pagination shapes exist in the reference, with different scale
   * ceilings:
   *
   *  - '''Token-chained''' (Square Connect v1, `square_ETL.py:73-93`): page
   *    N's request needs the `batch_token` scraped off page N−1's `Link`
-  *    header — inherently sequential, so the loop runs on the driver and
-  *    each body lands as one row. At scale the bottleneck is the API, not
-  *    Spark: the driver only buffers page STRINGS and everything
-  *    downstream (parse → explode → transform) is a distributed lazy plan.
+  *    header — sequential WITHIN a time window ([[squareTokenChain]]),
+  *    independent ACROSS windows ([[timeSlices]]), so the source runs
+  *    one chain per window on executors.
   *  - '''Count-then-pages''' (Shopify `shopify_ETL.py:70-88`, QuickBooks
-  *    `quickbooks_ETL.py:92-113`): one count request up front determines
-  *    every page URL, so the fetches are independent → distribute them
-  *    over executors with `mapPartitions`; each task owns its HttpClient
-  *    and its retries are task-local (a retried task re-fetches only its
-  *    own pages — idempotent GETs).
-  *
-  * Raw bodies can be landed verbatim to the warehouse raw zone
-  * ([[landRaw]]) so re-parses never re-hit the API (schema-on-read, same
-  * discipline as the fixture ETLs).
+  *    `quickbooks_ETL.py:92-113`): one count request up front
+  *    ([[countOf]]) determines every page URL, so the fetches are
+  *    independent page partitions.
   */
 object RestSource {
 
-  val pageSchema: StructType = StructType(
-    Seq(StructField("page", IntegerType, nullable = false), StructField("body", StringType))
-  )
+  private def enc(s: String) = URLEncoder.encode(s, UTF_8)
 
-  /** Sequential token-chain fetch, driver-side by necessity. Returns page
-    * bodies in fetch order; `next` inspects each page (headers + body) and
-    * yields the next URL, or None to stop — mirroring the reference's
-    * `while has_next_page` / regex-on-Link loop (`square_ETL.py:76-93`).
-    * `maxPages` bounds a server that never stops issuing tokens.
+  /** Sequential token-chain fetch. Returns page bodies in fetch order;
+    * `next` inspects each page (headers + body) and yields the next URL,
+    * or None to stop — mirroring the reference's `while has_next_page` /
+    * regex-on-Link loop (`square_ETL.py:76-93`). `maxPages` bounds a
+    * server that never stops issuing tokens.
     */
   def fetchTokenPages(
       firstUrl: String,
@@ -73,78 +66,77 @@ object RestSource {
     bounds.sliding(2).collect { case Seq(x, y) if x != y => (x.toString, y.toString) }.toVector
   }
 
-  /** Run one sequential fetch chain PER window, windows in parallel on
-    * executors (task-local clients, task-local retries — a retried task
-    * re-runs only its own window's chain). `fetchWindow` returns the
-    * window's page bodies in chain order; the page index is globally
-    * unique across windows. Lazy like [[fetchPages]] — eager-checkpoint
-    * before tearing down the server.
+  /** Parse a count endpoint's response body, following the dotted
+    * `field` path — the DSv2 partition planner's count call
+    * ([[ZoloRest.countRequest]]) — with a descriptive failure when a
+    * 200 body is an error envelope without the field (the raw fold NPE'd
+    * with no URL or body context).
     */
-  def fetchWindows(
-      spark: SparkSession,
-      windows: Seq[(String, String)],
-      maxPages: Int = 10000)(fetchWindow: (String, String) => Vector[String]): DataFrame = {
-    val rdd = spark.sparkContext
-      .parallelize(windows.zipWithIndex, math.max(1, windows.size))
-      .mapPartitions { it =>
-        it.flatMap { case ((wb, we), wi) =>
-          fetchWindow(wb, we).zipWithIndex.map { case (body, pi) => Row(wi * maxPages + pi, body) }
+  private[sources] def countOf(body: String, field: String, context: String): Int = {
+    // a 200 body that is not JSON at all must carry the same URL/body
+    // context as the missing-field case — a bare Jackson parse error
+    // names neither (chaos r8)
+    val node =
+      try new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+      catch {
+        case e: com.fasterxml.jackson.core.JacksonException =>
+          throw new IllegalStateException(
+            s"$context: unparseable count response: ${String.valueOf(body).take(200)}", e)
+      }
+    val out  = field.split('.').foldLeft(node)((n, f) => if (n == null) null else n.get(f))
+    if (out == null || !out.canConvertToInt)
+      throw new IllegalStateException(
+        s"$context: count response has no integer field '$field': ${body.take(200)}")
+    out.asInt
+  }
+
+  private val squareTokRe = """batch_token=(.*?)&begin_time=""".r
+  // RFC 8288 link-relation match: quoted or unquoted rel value, optional
+  // whitespace around `=`, case-insensitive ("rel=next", rel = "Next",
+  // rel="prev next"). Token-BOUNDED (r13 review): without a boundary,
+  // rel values merely starting with "next" (rel="next-archive",
+  // rel=nextpage) — and `rel=next` text inside a link target URI —
+  // would false-positive the truncation guard and throw on a correctly
+  // completed chain. Quoted form: "next" as a space-separated list
+  // member; unquoted form: next followed by a delimiter or end.
+  private[sources] val relNextRe =
+    """(?i)rel\s*=\s*("(?:[^"]*\s)?next(?:\s[^"]*)?"|next(?=[\s,;]|$))""".r
+
+  /** ONE window's sequential batch-token chain — the Link-header regex
+    * is the reference's own (`square_ETL.py:88-91`). The DSv2 partition
+    * reader ([[ZoloRestReaderFactory]]) runs one per window partition.
+    */
+  def squareTokenChain(
+      paymentsUrl: String,
+      token: String,
+      beginTime: String,
+      endTime: String,
+      maxPages: Int = 10000): Vector[String] = {
+    val range = s"begin_time=${enc(beginTime)}&end_time=${enc(endTime)}"
+    fetchTokenPages(
+      s"$paymentsUrl?$range",
+      // no Link header (or one without a rel="next" leg — e.g. a final
+      // page advertising only rel="first"/"prev") = normal end of chain;
+      // a NEXT link whose token the regex can NOT scrape is a contract
+      // break that must fail loudly — the reference's regex-scrape loop
+      // (square_ETL.py:88-91) would stop silently there, truncating the
+      // chain and losing every record past it undetectably (chaos r8)
+      p => p.header("Link") match {
+        case None => None
+        case Some(h) => squareTokRe.findFirstMatchIn(h) match {
+          case Some(m) => Some(s"$paymentsUrl?batch_token=${m.group(1)}&$range")
+          // RFC 8288 permits rel=next unquoted and with free whitespace;
+          // recognizing only the quoted spelling would let an unquoted
+          // next-leg whose token the regex can't scrape silently end the
+          // chain — the exact undetectable tail loss this guard exists
+          // to prevent (r12 review)
+          case None if relNextRe.findFirstIn(h).isDefined => throw new IllegalStateException(
+            "square pagination: rel=next Link present but batch_token did not match " +
+              s"(refusing silent chain truncation): ${h.take(200)}")
+          case None => None
         }
-      }
-    spark.createDataFrame(rdd, pageSchema)
+      },
+      HttpConf().withBearer(token),
+      maxPages)
   }
-
-  /** Distributed fetch of independent page URLs: (page, body) DataFrame.
-    * Lazy — callers that must tear down the server (or avoid re-fetching
-    * on plan re-execution) should `localCheckpoint(eager = true)` the
-    * result; fetch-once is NOT guaranteed otherwise, exactly like any
-    * non-replayable source.
-    */
-  def fetchPages(
-      spark: SparkSession,
-      urls: Seq[String],
-      conf: HttpConf,
-      parallelism: Int = 16): DataFrame = {
-    val slices = math.max(1, math.min(parallelism, urls.size))
-    val rdd = spark.sparkContext
-      .parallelize(urls.zipWithIndex, slices)
-      .mapPartitions { it =>
-        val client = Http.newClient() // per-task client, never serialized
-        it.map { case (u, i) => Row(i, Http.get(client, u, conf).body) }
-      }
-    spark.createDataFrame(rdd, pageSchema)
-  }
-
-  /** Bodies(Seq) → one-column DataFrame, for the sequential path. */
-  def pagesDf(spark: SparkSession, bodies: Seq[String]): DataFrame = {
-    val rows = bodies.zipWithIndex.map { case (b, i) => Row(i, b) }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, math.max(1, math.min(8, rows.size))),
-      pageSchema)
-  }
-
-  /** Page bodies whose payload is a top-level JSON ARRAY of records (Square
-    * v1) → one row per record with the pinned schema.
-    */
-  def recordsFromArrayPages(pages: DataFrame, record: StructType): DataFrame =
-    pages
-      .select(explode(from_json(col("body"), ArrayType(record))).as("rec"))
-      .select(col("rec.*"))
-
-  /** Page bodies wrapped in an envelope object (Shopify `{"orders": [...]}`,
-    * QuickBooks `{"QueryResponse": {"Invoice": [...]}}`) → one row per
-    * record. `path` is the dotted field path to the record array.
-    */
-  def recordsFromEnvelopePages(pages: DataFrame, envelope: StructType, path: String): DataFrame = {
-    val arr = path.split('.').foldLeft(from_json(col("body"), envelope))((c, f) => c.getField(f))
-    pages.select(explode(arr).as("rec")).select(col("rec.*"))
-  }
-
-  /** Land raw page bodies verbatim (one body per line) under the raw zone.
-    * Bodies re-read with `spark.read.schema(...).json(dir)` — Spark's JSON
-    * source explodes a top-level array line into one row per element, so
-    * both array pages and JSONL land the same way.
-    */
-  def landRaw(pages: DataFrame, dir: String): Unit =
-    pages.select("body").write.mode("overwrite").text(dir)
 }

@@ -53,8 +53,8 @@ import java.nio.charset.StandardCharsets.UTF_8
   *    relational Spark.
   *
   * Every entity REQUIRES a pushed time range except where the
-  * reference itself scans unbounded (the S4 customers full refresh
-  * keeps its helper path) — an unbounded scan of a cursor API is a
+  * reference itself scans unbounded (the S4 customers full refresh,
+  * entity `qb_customers`) — an unbounded scan of a cursor API is a
   * bug, and the scan says so at planning time.
   *
   * 100 TB posture: the API is the bottleneck; Spark's job is to shard
@@ -268,7 +268,7 @@ object ZoloRestEntity {
 
     def fetch(p: InputPartition, opts: ZoloRestOptions): Vector[String] = {
       val w = p.asInstanceOf[WindowPartition]
-      RestQueries.squareTokenChain(opts.url, opts.token, w.lo, w.hi, opts.maxPages)
+      RestSource.squareTokenChain(opts.url, opts.token, w.lo, w.hi, opts.maxPages)
     }
   }
 
@@ -378,13 +378,12 @@ object ZoloRest {
 
   /** Driver-side count call (retries included — the loopback server
     * 429/500-fails first attempts of every URI, so this path exercises
-    * the retry budget too). Parsing is [[RestQueries.countOf]] — the one
-    * definition both extraction layers share, with the request URL as
-    * failure context (this runs at partition-planning time, where a bare
-    * NPE would surface as an opaque planning failure).
+    * the retry budget too). Parsing is [[RestSource.countOf]], with the
+    * request URL as failure context (this runs at partition-planning
+    * time, where a bare NPE would surface as an opaque planning failure).
     */
   def countRequest(url: String, field: String, opts: ZoloRestOptions): Int =
-    RestQueries.countOf(Http.get(Http.newClient(), url, opts.httpConf).body, field, url)
+    RestSource.countOf(Http.get(Http.newClient(), url, opts.httpConf).body, field, url)
 }
 
 final class ZoloRestTable(tableSchema: StructType, options: CaseInsensitiveStringMap)

@@ -362,7 +362,7 @@ object ChaosProbe {
     mutate("qb_customers.json", chaosQbCustomerLines)
     // CSV seeds get adversarial rows too (short/long rows, non-numeric
     // numerics, quoted commas, an empty line, a null-ish id) — they flow
-    // into the weekly-demand check through the same registerAllForce
+    // into the weekly-demand check through ZoloPipeline.weeklyDemand
     mutate("items.csv", Seq(
       "Chaos Blend,\"12oz, bagged\",9901,sq-901,qb-901,9901,coffee,whole bean,not-a-weight,1",
       "Short Row,only-three,9902",
@@ -380,10 +380,7 @@ object ChaosProbe {
     * rather than driver-query names because the zolo queries pin the
     * bundled fixtures dir; the SAME transform stacks run here against
     * the adversarial payloads, ending with the full weekly-demand SQL
-    * over chaos-derived views. Callers must clearCache() afterwards:
-    * registerAllForce persists the chaos views, and the next zolo driver
-    * query's registerAll re-registers the real fixtures once the cache
-    * check fails.
+    * over chaos-derived per-call views.
     */
   def zoloChecks(dir: String): Seq[(String, org.apache.spark.sql.SparkSession => Long)] = Seq(
     "zolo_square_etl" -> { s =>
@@ -401,11 +398,7 @@ object ChaosProbe {
     "zolo_qbc_etl" -> { s =>
       graft.etl.QbCustomersEtl.run(s, s"$dir/qb_customers.json").count()
     },
-    "zolo_weekly_demand" -> { s =>
-      graft.etl.ZoloPipeline.registerAllForce(s, dir)
-      try graft.analytics.WeeklyDemand.run(s).count()
-      finally s.catalog.clearCache()
-    }
+    "zolo_weekly_demand" -> (s => graft.etl.ZoloPipeline.weeklyDemand(s, dir).count())
   )
 
   /** Executor-loss fault injection (r14). Requires a local-cluster

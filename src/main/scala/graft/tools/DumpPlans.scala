@@ -15,7 +15,7 @@ import java.nio.file.{Files, Paths}
   */
 object DumpPlans {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local(8, "dump-plans")
+    val spark = GraftSession.local(appName = "dump-plans")
     val sf = "/root/testdata/sf0.001"
     def fmt(df: DataFrame): String =
       df.queryExecution.explainString(ExplainMode.fromString("formatted"))

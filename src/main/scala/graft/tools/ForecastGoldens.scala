@@ -70,6 +70,7 @@ object ForecastGoldens {
       rows.map(r => s"${s(r.getString(0))},${r.getLong(1)}").mkString("\n") + "\n"
 
   def main(args: Array[String]): Unit = {
+    // 8 cores: SparkSpec, which checks these goldens, runs at 8
     val spark = GraftSession.local(cores = 8, appName = "forecast-goldens")
     for (sf <- sfs) {
       val dir = s"/root/testdata/$sf"

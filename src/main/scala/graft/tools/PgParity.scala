@@ -56,7 +56,7 @@ object PgParity {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = GraftSession.local(8, "graft-pg-parity")
+    val spark = GraftSession.local(appName = "graft-pg-parity")
     val out = graft.forecast.ForecastJobs
       .sesJob(spark, sfDir)
       .withColumn("forecast_start",

@@ -102,6 +102,27 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(src.contains("def runBounded") && !src.contains("runAvailableNow"))
   }
 
+  test("src/main speaks HTTP only in the REST source modules") {
+    // one extraction route: the wire contract (RestSource) and the DSv2
+    // source that plans it (ZoloRestSource); a fetch anywhere else is a
+    // second route with its own pagination and retry story
+    val http    = """Http\s*\.\s*(get|newClient)\s*\(""".r
+    val allowed = Set("graft/sources/Http.scala", "graft/sources/RestSource.scala",
+      "graft/sources/ZoloRestSource.scala")
+    val sites = mainSources.collect { case (f, src) if http.findFirstIn(src).isDefined => f }.toSet
+    assert(sites.subsetOf(allowed), s"HTTP call sites outside the REST source: ${sites -- allowed}")
+    assert(sites.contains("graft/sources/ZoloRestSource.scala"))
+  }
+
+  test("src/main registers no temp view under a literal name") {
+    // a fixed view name is session-global state: two callers on one
+    // session would read each other's frames (graft.syntax.callName
+    // gives a per-call name)
+    val literal = """create(OrReplace)?(Global)?TempView\s*\(\s*"""".r
+    val sites = mainSources.flatMap { case (f, src) => literal.findAllIn(src).map(m => s"$f: $m") }
+    assert(sites.isEmpty, s"literal temp view names: $sites")
+  }
+
   test("Verify.main rejects a wrong argument count before building a session") {
     val before = SparkSession.getDefaultSession
     val e = intercept[IllegalArgumentException](Verify.main(Array("x")))

@@ -105,4 +105,13 @@ class EtlSpec extends SparkSpec {
     assert(math.abs(m(("House", "2019-06-17")) - 25.0) < 1e-9)  // 20 sh + 5 qb
     assert(!rows.exists(_.getString(0) == "Retired Blend"))      // active = 0
   }
+
+  test("zolo_weekly_demand leaves no temp view and no cache entry") {
+    def views() = spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+    spark.catalog.clearCache()
+    val before = views()
+    graft.SparkEntry.queries("zolo_weekly_demand")(spark, sf0001).collect()
+    assert(views() == before, s"views left behind: ${views() -- before}")
+    assert(spark.sharedState.cacheManager.isEmpty, "zolo_weekly_demand left cached plans behind")
+  }
 }

@@ -43,7 +43,7 @@ class ZoloWarehouseSpec extends SparkSpec {
         "qb_trans", "qb_trans_details", "items", "coffee_profiles").foreach { t =>
         spark.read.parquet(s"$wh/$t").createOrReplaceTempView(t)
       }
-      WeeklyDemand.run(spark).collect()
+      spark.sql(WeeklyDemand.sql).collect()
         .map(r => (r.getString(0), r.getTimestamp(1).toString.take(10)) -> r.getDouble(2))
         .toMap
     }

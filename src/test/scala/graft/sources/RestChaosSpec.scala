@@ -122,7 +122,7 @@ class RestChaosSpec extends SparkSpec {
   }
 
   test("rel=next detection: RFC 8288 spellings match, near-miss rels and URI text do not") {
-    def hits(h: String) = RestQueries.relNextRe.findFirstIn(h).isDefined
+    def hits(h: String) = RestSource.relNextRe.findFirstIn(h).isDefined
     // must match: the spellings RFC 8288 permits for a next leg
     assert(hits("""<u>; rel="next""""))
     assert(hits("""<u>; rel=next"""))

@@ -16,8 +16,13 @@ import org.apache.spark.sql.functions.col
   */
 class RestIngestSpec extends SparkSpec {
 
-  private def extractWindow(srv: FixtureApiServer, begin: String, end: String) =
-    RestQueries.squareExtract(spark, s"${srv.base}/v1/L/payments", "t", begin, end)
+  // one window = one sequential batch-token chain, then the file ETL's
+  // transform stack
+  private def extractWindow(srv: FixtureApiServer, begin: String, end: String) = {
+    val raw = RestQueries.squareDsv2Records(
+      spark, s"${srv.base}/v1/L/payments", "t", begin, end, nSlices = 1)
+    SquareEtl.headerTable(SquareEtl.withMarket(SquareEtl.details(raw)))
+  }
 
   test("watermarked incremental HTTP ingest: two windows land the full corpus once") {
     val srv = FixtureApiServer.squareV1(

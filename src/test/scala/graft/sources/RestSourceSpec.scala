@@ -2,11 +2,11 @@ package graft.sources
 
 import graft.SparkSpec
 import graft.etl.{QuickbooksEtl, ShopifyEtl, SquareEtl, ZoloPipeline}
+import scala.jdk.CollectionConverters._
 
 /** The HTTP extraction layer against the loopback API doubles: pagination
   * contracts, retry policy on the real wire, auth fail-fast, distributed
-  * page fetch, raw-zone landing, and end-to-end equality with the
-  * file-based ETLs.
+  * page fetch, and end-to-end equality with the file-based ETLs.
   */
 class RestSourceSpec extends SparkSpec {
 
@@ -24,24 +24,26 @@ class RestSourceSpec extends SparkSpec {
   }
 
   test("time-sliced parallel square == sequential chain (r5 stretch: sharded cursor fetch)") {
-    val mk = () => FixtureApiServer.squareV1(
-      s"${ZoloPipeline.fixturesDir}/square_payments.json",
-      locationId = "L", token = "t", pageSize = 3)
     val (b, e) = ("2019-01-01T00:00:00Z", "2020-01-01T00:00:00Z")
-    val srv1 = mk()
-    val seq1 =
-      try rows(RestQueries.squareExtract(spark, s"${srv1.base}/v1/L/payments", "t", b, e)
-        .orderBy("payment_id"))
-      finally srv1.stop()
-    val srv2 = mk()
-    try {
-      val par = rows(RestQueries.squareExtractSharded(
-        spark, s"${srv2.base}/v1/L/payments", "t", b, e, nSlices = 4).orderBy("payment_id"))
-      assert(par.nonEmpty && par == seq1)
-      // every sub-window issues at least its first request — the fetch
-      // genuinely fanned out across slices instead of one driver chain
-      assert(srv2.requestCount >= 4)
-    } finally srv2.stop()
+    // one window is the sequential chain; n windows are n chains on executors
+    def extract(nSlices: Int) = {
+      val srv = FixtureApiServer.squareV1(
+        s"${ZoloPipeline.fixturesDir}/square_payments.json",
+        locationId = "L", token = "t", pageSize = 3)
+      try {
+        val raw = RestQueries
+          .squareDsv2Records(spark, s"${srv.base}/v1/L/payments", "t", b, e, nSlices)
+          .localCheckpoint(true)
+        (rows(SquareEtl.headerTable(SquareEtl.withMarket(SquareEtl.details(raw))).orderBy("payment_id")),
+          srv.requestCount)
+      } finally srv.stop()
+    }
+    val (seq1, _)       = extract(1)
+    val (par, requests) = extract(4)
+    assert(par.nonEmpty && par == seq1)
+    // every sub-window issues at least its first request — the fetch
+    // genuinely fanned out across slices instead of one chain
+    assert(requests >= 4)
     // degenerate slicing still covers the window exactly
     val slices = RestSource.timeSlices(b, e, 3)
     assert(slices.head._1 == b && slices.last._2 == e)
@@ -140,16 +142,17 @@ class RestSourceSpec extends SparkSpec {
       s"${ZoloPipeline.fixturesDir}/shopify_orders.json",
       user = "u", pass = "p", failFirst = 2)
     try {
-      val cfg  = HttpConf().withBasicAuth("u", "p")
-      val urls = (1 to 2).map(k => s"${srv.base}/admin/orders.json?limit=2&page=$k")
-      val bodies = RestSource.fetchPages(spark, urls, cfg, parallelism = 2)
-        .collect().map(_.getString(1))
-      assert(bodies.length == 2 && bodies.forall(_.startsWith("""{"orders":[""")))
-      // per-URI injection: each page URL was attempted exactly 3 times
-      // (429, 500, 200) — and those attempts ran in Spark tasks, so the
-      // retry loop is proven to survive closure serialization
-      urls.foreach { u =>
-        val uri = u.stripPrefix(srv.base)
+      val records = RestQueries
+        .shopifyDsv2Records(spark, srv.base, "u", "p",
+          "2019-01-01T00:00:00Z", "2020-01-01T00:00:00Z", pageSize = 2)
+        .collect()
+      assert(records.length == 4)
+      // per-URI injection: each page URI the scan requested was attempted
+      // exactly 3 times (429, 500, 200) — and those attempts ran in the
+      // scan's Spark tasks, so the retry loop survives serialization
+      val pageUris = srv.uriAttempts.keySet.asScala.filter(_.startsWith("/admin/orders.json"))
+      assert(pageUris.size >= 2, s"page URIs: $pageUris")
+      pageUris.foreach { uri =>
         assert(srv.uriAttempts.get(uri).get() == 3, s"attempts for $uri")
       }
     } finally srv.stop()
@@ -182,28 +185,5 @@ class RestSourceSpec extends SparkSpec {
         cfg).body
       assert(body == """{"count":2}""")
     } finally srv.stop()
-  }
-
-  test("raw-zone landing: bodies land verbatim and re-read with the pinned schema") {
-    val srv = FixtureApiServer.squareV1(
-      s"${ZoloPipeline.fixturesDir}/square_payments.json",
-      locationId = "L", token = "t", pageSize = 3)
-    val dir = java.nio.file.Files.createTempDirectory("graft-raw-zone-").toString
-    try {
-      val tokRe = """batch_token=(.*?)&begin_time=""".r
-      val base  = s"${srv.base}/v1/L/payments"
-      val bodies = RestSource.fetchTokenPages(
-        s"$base?begin_time=2019-01-01&end_time=2020-01-01",
-        p => p.header("Link").flatMap(tokRe.findFirstMatchIn(_))
-          .map(m => s"$base?batch_token=${m.group(1)}&begin_time=2019-01-01&end_time=2020-01-01"),
-        HttpConf().withBearer("t"))
-      RestSource.landRaw(RestSource.pagesDf(spark, bodies), dir)
-      val reread = spark.read.schema(graft.etl.ZoloSchemas.squarePayment).json(dir)
-      assert(reread.count() == 8)
-      assert(reread.where("id IS NULL").count() == 0)
-    } finally {
-      srv.stop()
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    }
   }
 }

@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
 
 /** The DSv2 face of the REST source: Catalyst-negotiated time-range
   * pushdown (not hand-threaded URL params), window-sharded input
-  * partitions, and result equality with the mapPartitions extraction
-  * chain it wraps.
+  * partitions, and result equality with the file ETLs over the same
+  * fixtures the loopback server serves.
   */
 class ZoloRestDsv2Spec extends SparkSpec {
 
@@ -63,7 +63,7 @@ class ZoloRestDsv2Spec extends SparkSpec {
     }
   }
 
-  test("DSv2 records equal the mapPartitions sharded extraction") {
+  test("DSv2 records equal the file ETL's square_trans") {
     withServer { url =>
       val dsv2 = RestQueries
         .squareDsv2Records(spark, url, "sq-fixture-token", begin, end, nSlices = 4)
@@ -72,11 +72,11 @@ class ZoloRestDsv2Spec extends SparkSpec {
         .headerTable(graft.etl.SquareEtl.withMarket(graft.etl.SquareEtl.details(dsv2)))
         .orderBy("payment_id")
         .collect()
-      val viaHelpers = RestQueries
-        .squareExtractSharded(spark, url, "sq-fixture-token", begin, end, nSlices = 4)
+      val viaFile = graft.etl.SquareEtl
+        .run(spark, s"${ZoloPipeline.fixturesDir}/square_payments.json")._1
         .orderBy("payment_id")
         .collect()
-      assert(viaDsv2.map(_.toSeq).toSeq == viaHelpers.map(_.toSeq).toSeq)
+      assert(viaDsv2.map(_.toSeq).toSeq == viaFile.map(_.toSeq).toSeq)
     }
   }
 
@@ -128,7 +128,7 @@ class ZoloRestDsv2Spec extends SparkSpec {
     finally srv.stop()
   }
 
-  test("shopify entity: count-then-pages partitions, pushed range, equality with helper path") {
+  test("shopify entity: page partitions, pushed range, fixture records") {
     withShopify { base =>
       val df = RestQueries.shopifyDsv2Records(spark, base, "sh-key", "sh-pass", begin, end, pageSize = 2)
       val scan = scanOf(df)
@@ -136,10 +136,11 @@ class ZoloRestDsv2Spec extends SparkSpec {
       assert(scan.description().contains("entity=shopify_orders"))
       // 4 fixture orders in range / page size 2 -> 2 page partitions
       assert(scan.toBatch.planInputPartitions().length == 2)
-      val viaDsv2    = df.localCheckpoint(true).orderBy("id").collect()
-      val viaHelpers = RestQueries.shopifyExtractPages(spark, base, "sh-key", "sh-pass", pageSize = 2)
+      val viaDsv2 = df.localCheckpoint(true).orderBy("id").collect()
+      val viaFile = graft.etl.ShopifyEtl
+        .readRaw(spark, s"${ZoloPipeline.fixturesDir}/shopify_orders.json")
         .orderBy("id").collect()
-      assert(viaDsv2.map(_.toSeq).toSeq == viaHelpers.map(_.toSeq).toSeq)
+      assert(viaDsv2.map(_.toSeq).toSeq == viaFile.map(_.toSeq).toSeq)
     }
   }
 

@@ -85,9 +85,6 @@ class ChaosDocsSpec extends SparkSpec {
         s"$name: ${root.getClass.getSimpleName}: ${Option(root.getMessage).getOrElse("").linesIterator.take(1).mkString}"
       }
     }
-    // the weekly-demand check registered chaos views; clear them so the
-    // next zolo consumer re-registers the real fixtures
-    spark.catalog.clearCache()
     assert(failures.isEmpty, failures.mkString("\n"))
   }
 
