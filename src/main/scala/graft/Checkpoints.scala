@@ -50,14 +50,15 @@ object Checkpoints {
         // setCheckpointDir mints a fresh random subdir per call — set it
         // once per context, not once per cut
         if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
-        ds.checkpoint(eager)
+        // always eager: a lazy reliable cut would RECOMPUTE its plan to
+        // write the files, so only the persist-backed local cut is lazy
+        ds.checkpoint(eager = true)
       case None => ds.localCheckpoint(eager)
     }
   }
 
   /** r15 iterative-round-loop scope (the g_pagerank lesson, applied to
-    * every fixed-round graph loop): runs `body` with AQE disabled and
-    * hands it a `lazyCutOk` flag for its intermediate cuts.
+    * every fixed-round graph loop): runs `body` with AQE disabled.
     *
     * Why AQE off: each round is a fixed-shape query over a
     * pre-partitioned big frame and a compact, lineage-cut state table —
@@ -68,22 +69,19 @@ object Checkpoints {
     * returned, so everything outside the loop keeps the runtime
     * re-planning safety net.
     *
-    * Why lazy cuts: an EAGER localCheckpoint per round schedules a
-    * materialization job (plus its scheduling gap) per round; a lazy cut
-    * still truncates lineage at cut time but lets the blocks persist as
-    * a side effect of the NEXT round's job, and the loop's final eager
-    * cut (callers: `eager = round == last || !lazyCutOk`) materializes
-    * the whole chain inside this scope. Chained rounds meet at shuffle
-    * boundaries, which the scheduler materializes exactly once, so a
-    * state table consumed by two branches of the next round does not
-    * recompute. Lazy is only handed out for the localCheckpoint path
-    * (persist-backed); reliable checkpoints (`dirKey` set) would
-    * RECOMPUTE each round to write files, so `lazyCutOk` is false there.
+    * Lazy cuts go with it: an EAGER localCheckpoint per round schedules
+    * a materialization job (plus its scheduling gap) per round; a lazy
+    * cut still truncates lineage at cut time but lets the blocks persist
+    * as a side effect of the NEXT round's job, and the loop's final eager
+    * cut (callers: `eager = round == last`) materializes the whole chain
+    * inside this scope. Chained rounds meet at shuffle boundaries, which
+    * the scheduler materializes exactly once, so a state table consumed
+    * by two branches of the next round does not recompute. [[cut]] makes
+    * every reliable cut eager, so the callers need no flag for it.
     */
-  def quietLoop[T](s: org.apache.spark.sql.SparkSession)(body: Boolean => T): T = {
-    val lazyCutOk = s.conf.getOption(dirKey).isEmpty
-    val prevAqe   = s.conf.get("spark.sql.adaptive.enabled", "true")
+  def quietLoop[T](s: org.apache.spark.sql.SparkSession)(body: => T): T = {
+    val prevAqe = s.conf.get("spark.sql.adaptive.enabled", "true")
     s.conf.set("spark.sql.adaptive.enabled", "false")
-    try body(lazyCutOk) finally s.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    try body finally s.conf.set("spark.sql.adaptive.enabled", prevAqe)
   }
 }

@@ -22,7 +22,9 @@ object QbCustomersEtl {
       $"ShipAddr.City".as("city"),
       $"ShipAddr.CountrySubDivisionCode".as("state"),
       $"ShipAddr.PostalCode".as("zipcode"),
-      to_timestamp($"MetaData.CreateTime").as("create_date")
+      // try_to_timestamp: a malformed CreateTime is NULL, not a failed
+      // read (the totality contract of the Square/Shopify/QuickBooks ETLs)
+      try_to_timestamp($"MetaData.CreateTime").as("create_date")
     )
 
   def run(spark: SparkSession, path: String): DataFrame =

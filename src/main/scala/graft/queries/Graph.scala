@@ -98,7 +98,7 @@ object Graph {
       // intermediate cuts with an eager final cut, see
       // [[graft.Checkpoints.quietLoop]] (BENCH_LOCAL §"Round-loop A/B":
       // 0.40 → 0.29-0.34 s/round).
-      val ranks = graft.Checkpoints.quietLoop(s) { lazyCutOk =>
+      val ranks = graft.Checkpoints.quietLoop(s) {
         var r = nodes.select($"src".as("node"), lit(1.0 / n).as("rank")).cutLineage()
         for (i <- 1 to iterations) {
           // SHUFFLE_HASH on the node-sized rank side (guide §3.1): with
@@ -118,7 +118,7 @@ object Graph {
               (lit(jump) + lit(damping) *
                 sum($"contrib".cast("decimal(38,18)")).cast("double")).as("rank")
             )
-            .cutLineage(eager = i == iterations || !lazyCutOk)
+            .cutLineage(eager = i == iterations)
         }
         r
       }
@@ -316,7 +316,7 @@ object Graph {
     // gPagerank / Checkpoints.quietLoop) — the frontier is hash(node)-
     // partitioned from the previous round's aggregate, co-partitioned
     // with bi on src, so the round join stays exchange- and sort-free.
-    val reached = graft.Checkpoints.quietLoop(s) { lazyCutOk =>
+    val reached = graft.Checkpoints.quietLoop(s) {
       var rd = Tables
         .part(s, d)
         .filter($"p_brand" === hopSeedBrand)
@@ -330,7 +330,7 @@ object Graph {
           .unionAll(nxt)
           .groupBy($"node")
           .agg(min($"hop").as("hop"))
-          .cutLineage(eager = h == maxHops || !lazyCutOk)
+          .cutLineage(eager = h == maxHops)
       }
       rd
     }
@@ -441,7 +441,7 @@ object Graph {
       .cutLineage()
     // r15: quietLoop + SHUFFLE_HASH on the compact label side (see
     // gPagerank / Checkpoints.quietLoop).
-    val labels = graft.Checkpoints.quietLoop(s) { lazyCutOk =>
+    val labels = graft.Checkpoints.quietLoop(s) {
       var lb = bi
         .select($"dst".as("node"))
         .distinct()
@@ -459,7 +459,7 @@ object Graph {
           .withColumn("rn", row_number().over(w))
           .filter($"rn" === 1)
           .select($"src".as("node"), $"label")
-          .cutLineage(eager = r == lpRounds || !lazyCutOk)
+          .cutLineage(eager = r == lpRounds)
       }
       lb
     }
@@ -520,7 +520,7 @@ object Graph {
       // partitioned from the previous round's min-aggregate,
       // co-partitioned with bi on src, so the relaxation join stays
       // exchange- and sort-free.
-      val dist = graft.Checkpoints.quietLoop(s) { lazyCutOk =>
+      val dist = graft.Checkpoints.quietLoop(s) {
         var dt = Tables
           .part(s, d)
           .filter($"p_brand" === hopSeedBrand)
@@ -534,7 +534,7 @@ object Graph {
             .unionAll(relaxed)
             .groupBy($"node")
             .agg(min($"dist").as("dist"))
-            .cutLineage(eager = r == ssspRounds || !lazyCutOk)
+            .cutLineage(eager = r == ssspRounds)
         }
         dt
       }

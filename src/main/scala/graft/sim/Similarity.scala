@@ -26,15 +26,8 @@ import org.apache.spark.sql.expressions.Window
 object Similarity {
   type Q = (SparkSession, String) => DataFrame
 
-  /** Higher-order-function formulation — kept as the reference/back-up
-    * path; interpreted per element, ~10× slower than [[cosine]].
-    */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-
-  /** Native codegen'd kernel ([[graft.functions.Cosine64]]); same
-    * left-to-right double folds, so values are bit-identical to the HOF
-    * formulation and the DuckDB oracle.
+  /** Native codegen'd kernel ([[graft.functions.Cosine64]]): left-to-right
+    * double folds, so values are bit-identical to the DuckDB oracle.
     */
   def cosine(a: Column, b: Column): Column =
     graft.functions.GraftFunctions.cosine64(a, b)

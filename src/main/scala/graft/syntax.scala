@@ -20,7 +20,7 @@ object syntax {
   }
 
   /** [[Checkpoints.cut]] as a chainable method: localCheckpoint by
-    * default, reliable `checkpoint` when
+    * default, reliable `checkpoint` (always eager) when
     * `spark.graft.iter.checkpointDir` is set (fleet fault tolerance).
     */
   implicit class DatasetCutOps[T](private val ds: org.apache.spark.sql.Dataset[T]) extends AnyVal {

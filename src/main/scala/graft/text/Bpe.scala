@@ -155,7 +155,7 @@ object Bpe {
     // gap each, work 3-40 ms). The rounds run in the shared AQE-off loop
     // scope, which restores AQE before the corpus-sized encode/consumer
     // query runs; plans and results are unchanged.
-    graft.Checkpoints.quietLoop(s) { _ =>
+    graft.Checkpoints.quietLoop(s) {
       val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
       val out    = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
       (1 to bpeMerges).foreach { r =>

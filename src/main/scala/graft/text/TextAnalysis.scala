@@ -1585,7 +1585,7 @@ object TextAnalysis {
       val nodes = edgesW.select($"src").distinct()
       val n    = nodes.count()
       val jump = 0.15 / n
-      val ranks = graft.Checkpoints.quietLoop(s) { lazyCutOk =>
+      val ranks = graft.Checkpoints.quietLoop(s) {
         var r = nodes.select($"src".as("node"), lit(1.0 / n).as("rank")).cutLineage()
         for (i <- 1 to trIters) {
           val contribs = edgesW
@@ -1597,7 +1597,7 @@ object TextAnalysis {
               (lit(jump) + lit(0.85) *
                 sum($"contrib".cast("decimal(38,18)")).cast("double")).as("rank")
             )
-            .cutLineage(eager = i == trIters || !lazyCutOk)
+            .cutLineage(eager = i == trIters)
         }
         r
       }

@@ -380,26 +380,29 @@ object ChaosProbe {
     * rather than driver-query names because the zolo queries pin the
     * bundled fixtures dir; the SAME transform stacks run here against
     * the adversarial payloads, ending with the full weekly-demand SQL
-    * over chaos-derived per-call views.
+    * over chaos-derived per-call views. Each check collects its rows,
+    * as the corpus checks do: `count()` would prune the columns, so a
+    * parse no consumer reads would never run.
     */
-  def zoloChecks(dir: String): Seq[(String, org.apache.spark.sql.SparkSession => Long)] = Seq(
-    "zolo_square_etl" -> { s =>
-      val (t, dt) = graft.etl.SquareEtl.run(s, s"$dir/square_payments.json")
-      t.count() + dt.count()
-    },
-    "zolo_shopify_etl" -> { s =>
-      val (t, dt) = graft.etl.ShopifyEtl.run(s, s"$dir/shopify_orders.json")
-      t.count() + dt.count()
-    },
-    "zolo_qb_etl" -> { s =>
-      val (t, dt) = graft.etl.QuickbooksEtl.run(s, s"$dir/qb_invoices.json")
-      t.count() + dt.count()
-    },
-    "zolo_qbc_etl" -> { s =>
-      graft.etl.QbCustomersEtl.run(s, s"$dir/qb_customers.json").count()
-    },
-    "zolo_weekly_demand" -> (s => graft.etl.ZoloPipeline.weeklyDemand(s, dir).count())
-  )
+  def zoloChecks(dir: String): Seq[(String, org.apache.spark.sql.SparkSession => Long)] = {
+    def rows(dfs: org.apache.spark.sql.DataFrame*): Long = dfs.map(_.collect().length.toLong).sum
+    Seq(
+      "zolo_square_etl" -> { s =>
+        val (t, dt) = graft.etl.SquareEtl.run(s, s"$dir/square_payments.json")
+        rows(t, dt)
+      },
+      "zolo_shopify_etl" -> { s =>
+        val (t, dt) = graft.etl.ShopifyEtl.run(s, s"$dir/shopify_orders.json")
+        rows(t, dt)
+      },
+      "zolo_qb_etl" -> { s =>
+        val (t, dt) = graft.etl.QuickbooksEtl.run(s, s"$dir/qb_invoices.json")
+        rows(t, dt)
+      },
+      "zolo_qbc_etl" -> (s => rows(graft.etl.QbCustomersEtl.run(s, s"$dir/qb_customers.json"))),
+      "zolo_weekly_demand" -> (s => rows(graft.etl.ZoloPipeline.weeklyDemand(s, dir)))
+    )
+  }
 
   /** Executor-loss fault injection (r14). Requires a local-cluster
     * master (separate executor JVMs — `SPARK_GRAFT_MASTER=

@@ -123,6 +123,38 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(sites.isEmpty, s"literal temp view names: $sites")
   }
 
+  /** A file's source without its comment lines (a scaladoc example is not a call). */
+  private def code(src: String): String =
+    src.linesIterator.filterNot { l =>
+      val t = l.trim
+      t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")
+    }.mkString("\n")
+
+  private def sitesOf(re: scala.util.matching.Regex): Set[String] =
+    mainSources.collect { case (f, src) if re.findFirstIn(code(src)).isDefined => f }.toSet
+
+  test("src/main unsets session conf only in the Stress tool") {
+    // an unset is the tail of a save-and-restore block on a shared
+    // session; query code scopes its conf on a clone instead
+    val sites = sitesOf("""conf\s*\.\s*unset\s*\(""".r)
+    assert(sites == Set("graft/tools/Stress.scala"), s"conf.unset sites: $sites")
+  }
+
+  test("src/main writes session conf only at its allow-listed sites") {
+    // a conf write on a shared session is seen by every query planning on
+    // it at that moment; each site below owns its session or writes a clone
+    val allowed = Map(
+      "graft/GraftSession.scala" -> "the factory sets the env's extra confs on the session it builds",
+      "graft/etl/ZoloPipeline.scala" -> "catalog registration: a v2 catalog is bound by its conf",
+      "graft/Checkpoints.scala" -> "quietLoop's AQE-off loop scope",
+      "graft/tools/Stress.scala" -> "a dev tool: its own session and its A/B arms",
+      "graft/queries/Relational.scala" -> "oTopkSqlRewrite sets its rewrite conf on a clone",
+      "graft/streaming/StreamQueries.scala" -> "streamStateTws sets its state-store provider on a clone")
+    val sites = sitesOf("""conf\s*\.\s*set\s*\(""".r)
+    assert(sites.subsetOf(allowed.keySet), s"conf.set outside the allow-list: ${sites -- allowed.keySet}")
+    assert(sites.contains("graft/GraftSession.scala"))
+  }
+
   test("Verify.main rejects a wrong argument count before building a session") {
     val before = SparkSession.getDefaultSession
     val e = intercept[IllegalArgumentException](Verify.main(Array("x")))

@@ -47,4 +47,28 @@ class StreamConcurrencySpec extends SparkSpec {
       assertNoLeftovers(s"round $round")
     } finally pool.shutdownNow()
   }
+
+  test("s_stream_state_tws never shows its state-store provider to the caller's session") {
+    // the RocksDB provider is the query's own conf; a second caller on
+    // the same session must keep planning on its own provider while the
+    // query runs
+    val key   = "spark.sql.streaming.stateStore.providerClass"
+    val done  = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val seen  = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    var polls = 0L
+    val poller = new Thread(() => {
+      while (!done.get()) {
+        spark.conf.getOption(key).foreach(seen.add)
+        polls += 1
+        Thread.sleep(1)
+      }
+    })
+    poller.start()
+    val rows = try run("s_stream_state_tws").count()
+    finally { done.set(true); poller.join() }
+    assert(rows > 0 && polls > 0)
+    assert(!seen.contains(StreamQueries.rocksDbProvider),
+      s"the caller's session read $key = ${StreamQueries.rocksDbProvider} mid-run")
+    assert(!spark.conf.getOption(key).contains(StreamQueries.rocksDbProvider))
+  }
 }

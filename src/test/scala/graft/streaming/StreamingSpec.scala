@@ -1,50 +1,61 @@
 package graft.streaming
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
-/** §2.10: MemoryStream-driven windowed aggregation with watermark +
-  * late-data handling, and the stateful running-totals operator.
+/** §2.10: the driver queries' 30-minute window aggregate
+  * ([[StreamQueries.windowTotals]]) on a MemoryStream — watermark,
+  * late-data drop and its count, and convergence to the batch golden.
   */
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
+  /** Window start, event type, total and count, in that column order. */
+  private def totals(events: DataFrame): DataFrame =
+    StreamQueries.windowTotals(events.toDF("ts", "event_type", "value"))
+      .select($"w.start".as("window_start"), $"event_type", $"total_value", $"n_events")
+
   test("30-min tumbling window with watermark aggregates and drops late data") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Timestamp, String, Double)]
-    val df = mem.toDF().toDF("created_at", "market", "dollars")
-    val q = SalesMonitor
-      .windowedSales(df)
+    val q = totals(mem.toDF())
       .writeStream
       .outputMode("append")
       .format("memory")
-      .queryName("sales_out")
+      .queryName("window_totals_out")
       .start()
     try {
       mem.addData(
-        (ts("2019-06-09 06:10:00"), "Alameda Antique Faire", 12.0),
-        (ts("2019-06-09 06:20:00"), "Alameda Antique Faire", 8.0),
-        (ts("2019-06-09 06:40:00"), "Alameda Antique Faire", 5.0)
+        (ts("2019-06-09 06:10:00"), "purchase", 12.0),
+        (ts("2019-06-09 06:20:00"), "purchase", 8.0),
+        (ts("2019-06-09 06:40:00"), "purchase", 5.0)
       )
       q.processAllAvailable()
       // advance watermark far past the first windows so they close
-      mem.addData((ts("2019-06-09 09:00:00"), "Alameda Antique Faire", 1.0))
+      mem.addData((ts("2019-06-09 09:00:00"), "purchase", 1.0))
       q.processAllAvailable()
       // this event is 2.5h late — behind the watermark, must be dropped
-      mem.addData((ts("2019-06-09 06:15:00"), "Alameda Antique Faire", 999.0))
+      mem.addData((ts("2019-06-09 06:15:00"), "purchase", 999.0))
       q.processAllAvailable()
-      mem.addData((ts("2019-06-09 12:00:00"), "other", 2.0))
+      mem.addData((ts("2019-06-09 12:00:00"), "view", 2.0))
       q.processAllAvailable()
-      val out = spark.table("sales_out").collect()
+      val out = spark.table("window_totals_out").collect()
       val w0600 = out.find(_.getTimestamp(0) == ts("2019-06-09 06:00:00")).get
-      assert(w0600.getDouble(3) == 20.0 && w0600.getLong(4) == 2) // 12+8, late 999 dropped
+      assert(w0600.getDouble(2) == 20.0 && w0600.getLong(3) == 2) // 12+8, late 999 dropped
       val w0630 = out.find(_.getTimestamp(0) == ts("2019-06-09 06:30:00")).get
-      assert(w0630.getDouble(3) == 5.0)
-    } finally q.stop()
+      assert(w0630.getDouble(2) == 5.0)
+      // the drop is observable, not silent: the aggregate's state
+      // operator counts the late row in its progress
+      val dropped = q.recentProgress.flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum
+      assert(dropped == 1L, s"late drops counted: $dropped")
+    } finally {
+      q.stop()
+      spark.catalog.dropTempView("window_totals_out")
+    }
   }
 
   test("streaming windowed result converges to the batch-mode golden") {
@@ -55,19 +66,19 @@ class StreamingSpec extends SparkSpec {
       (ts("2019-06-09 06:40:00"), "m2", 30.0),
       (ts("2019-06-09 07:10:00"), "m1", 40.0)
     )
-    val golden = SalesMonitor
-      .windowedSalesBatch(data.toDF("created_at", "market", "dollars"))
+    // the batch golden is the same call on the static frame
+    // (withWatermark is a no-op on a batch DataFrame)
+    val golden = totals(data.toDF())
       .collect()
-      .map(r => (r.getTimestamp(0), r.getString(2)) -> (r.getDouble(3), r.getLong(4)))
+      .map(r => (r.getTimestamp(0), r.getString(1)) -> (r.getDouble(2), r.getLong(3)))
       .toMap
 
     val mem = MemoryStream[(Timestamp, String, Double)]
-    val q = SalesMonitor
-      .windowedSales(mem.toDF().toDF("created_at", "market", "dollars"))
+    val q = totals(mem.toDF())
       .writeStream
       .outputMode("append")
       .format("memory")
-      .queryName("sales_conv")
+      .queryName("window_totals_conv")
       .start()
     try {
       mem.addData(data: _*)
@@ -75,35 +86,15 @@ class StreamingSpec extends SparkSpec {
       mem.addData((ts("2019-06-09 23:00:00"), "flush", 0.0)) // close all windows
       q.processAllAvailable()
       val got = spark
-        .table("sales_conv")
-        .filter($"market" =!= "flush")
+        .table("window_totals_conv")
+        .filter($"event_type" =!= "flush")
         .collect()
-        .map(r => (r.getTimestamp(0), r.getString(2)) -> (r.getDouble(3), r.getLong(4)))
+        .map(r => (r.getTimestamp(0), r.getString(1)) -> (r.getDouble(2), r.getLong(3)))
         .toMap
       assert(got == golden)
-    } finally q.stop()
-  }
-
-  test("stateful running totals accumulate across micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Timestamp, String, Double)]
-    val q = SalesMonitor
-      .runningTotals(spark, mem.toDF().toDF("created_at", "market", "dollars"))
-      .writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName("running_out")
-      .start()
-    try {
-      mem.addData((ts("2019-06-09 06:10:00"), "m1", 10.0))
-      q.processAllAvailable()
-      mem.addData((ts("2019-06-09 06:20:00"), "m1", 15.0), (ts("2019-06-09 06:21:00"), "m2", 7.0))
-      q.processAllAvailable()
-      val rows = spark.table("running_out").collect()
-      val latestM1 = rows.filter(_.getString(0) == "m1").maxBy(_.getLong(2))
-      assert(latestM1.getDouble(1) == 25.0 && latestM1.getLong(2) == 2)
-      val m2 = rows.filter(_.getString(0) == "m2").maxBy(_.getLong(2))
-      assert(m2.getDouble(1) == 7.0)
-    } finally q.stop()
+    } finally {
+      q.stop()
+      spark.catalog.dropTempView("window_totals_conv")
+    }
   }
 }
