@@ -58,16 +58,19 @@ object Checkpoints {
   }
 
   /** r15 iterative-round-loop scope (the g_pagerank lesson, applied to
-    * every fixed-round graph loop): runs `body` with AQE disabled.
+    * every fixed-round graph loop): runs `body` with AQE disabled, on a
+    * [[GraftSession.scoped]] clone of `s`.
     *
     * Why AQE off: each round is a fixed-shape query over a
     * pre-partitioned big frame and a compact, lineage-cut state table —
     * AQE re-plans the same two query stages and runs extra
     * stage-materialization jobs EVERY round, driver work that does not
     * shrink with cluster size (measured 0.40 → 0.29-0.34 s/round on the
-    * pagerank loop). The conf is restored before the loop's result is
-    * returned, so everything outside the loop keeps the runtime
-    * re-planning safety net.
+    * pagerank loop). Only the clone plans without AQE; `s` never does,
+    * so nothing is restored, and a query another caller plans on `s`
+    * while the loop runs keeps the runtime re-planning safety net. The
+    * body rebinds the frames it captures with `.on(clone)`, and its
+    * caller takes a frame result back with `.on(s)`.
     *
     * Lazy cuts go with it: an EAGER localCheckpoint per round schedules
     * a materialization job (plus its scheduling gap) per round; a lazy
@@ -79,9 +82,6 @@ object Checkpoints {
     * by two branches of the next round does not recompute. [[cut]] makes
     * every reliable cut eager, so the callers need no flag for it.
     */
-  def quietLoop[T](s: org.apache.spark.sql.SparkSession)(body: => T): T = {
-    val prevAqe = s.conf.get("spark.sql.adaptive.enabled", "true")
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    try body finally s.conf.set("spark.sql.adaptive.enabled", prevAqe)
-  }
+  def quietLoop[T](s: org.apache.spark.sql.SparkSession)(body: org.apache.spark.sql.SparkSession => T): T =
+    GraftSession.scoped(s, "spark.sql.adaptive.enabled" -> "false")(body)
 }

@@ -60,6 +60,12 @@ object GraftSession {
       // parallelism is orders of magnitude above either floor, so the
       // setting never engages there.
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64kb")
+      // One executor classloader for all sessions: under artifact
+      // isolation (the Spark 4 default) each new session — a `scoped`
+      // clone, a Verify worker — got its own, and the codegen cache
+      // missed for every stage it ran (5 compiles for one cut on a fresh
+      // clone, 0 on a reused one). The engine adds no session artifacts.
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -86,4 +92,16 @@ object GraftSession {
         spark.conf.set(k.trim, v.trim)
       }
     }
+
+  /** Runs `body` on a fresh clone of `s` with `confs` set on the clone —
+    * the one place query code changes conf. The clone starts from `s`'s
+    * runtime conf and temp views as of entry and shares its context and
+    * cache; no query on `s` ever sees the overrides, and nothing is
+    * restored. Frames cross with `.on(clone)` and back with `.on(s)`.
+    */
+  def scoped[T](s: SparkSession, confs: (String, String)*)(body: SparkSession => T): T = {
+    val clone = org.apache.spark.sql.GraftSqlBridge.cloneSession(s)
+    confs.foreach { case (k, v) => clone.conf.set(k, v) }
+    body(clone)
+  }
 }

@@ -878,7 +878,7 @@ object Dedup {
     val e = Tables
       .embeddings(s, d)
       .filter($"vec_id" % 50 === 0)
-      .select($"vec_id", transform($"embedding", x => x.cast("double")).as("v"))
+      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
     val cos = round(graft.functions.GraftFunctions.cosine64($"a.v", $"b.v"), 6)
     e.as("a")
       .join(e.as("b"), $"a.vec_id" < $"b.vec_id")

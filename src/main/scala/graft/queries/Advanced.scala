@@ -603,7 +603,6 @@ object Advanced {
       .filter(
         conv(substring(md5(concat_ws("|", lit("smp"), $"lid").cast("binary")), 1, 12), 16, 10)
           .cast("long") % mod === 0)
-    val thrArr = array(bootThresholds.map(lit): _*)
     val means = rows
       .select($"lid", $"x", explode(sequence(lit(0), lit(bootB - 1))).as("b"))
       .withColumn(
@@ -612,11 +611,9 @@ object Advanced {
           .cast("long")
       )
       // multiplicity = #{thresholds ≤ h}: the inverse-CDF lookup as a
-      // pure integer indicator sum over the 6 literal thresholds
-      .withColumn(
-        "m",
-        aggregate(thrArr, lit(0L), (acc, t) => acc + ($"h" >= t).cast("long"))
-      )
+      // pure integer indicator sum over the 6 literal thresholds, as six
+      // comparisons that codegen (an `aggregate` lambda runs interpreted)
+      .withColumn("m", bootThresholds.map(t => ($"h" >= t).cast("long")).reduce(_ + _))
       .groupBy($"b")
       .agg(sum($"x" * $"m").as("sx"), sum($"m").as("sm"))
       .select(

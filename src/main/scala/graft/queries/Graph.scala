@@ -98,8 +98,9 @@ object Graph {
       // intermediate cuts with an eager final cut, see
       // [[graft.Checkpoints.quietLoop]] (BENCH_LOCAL §"Round-loop A/B":
       // 0.40 → 0.29-0.34 s/round).
-      val ranks = graft.Checkpoints.quietLoop(s) {
-        var r = nodes.select($"src".as("node"), lit(1.0 / n).as("rank")).cutLineage()
+      val ranks = graft.Checkpoints.quietLoop(s) { c =>
+        val edges = edgesDeg.on(c)
+        var r = nodes.on(c).select($"src".as("node"), lit(1.0 / n).as("rank")).cutLineage()
         for (i <- 1 to iterations) {
           // SHUFFLE_HASH on the node-sized rank side (guide §3.1): with
           // AQE off the static planner cannot see the rank table's size
@@ -109,7 +110,7 @@ object Graph {
           // partition is rank-rows/partitions — the small side by
           // construction at any scale; both sides are already
           // co-partitioned on src, so the join stays exchange-free.
-          val contribs = edgesDeg
+          val contribs = edges
             .join(r.withColumnRenamed("node", "src").hint("shuffle_hash"), "src")
             .select($"dst", ($"rank" / $"outdeg").as("contrib"))
           r = contribs
@@ -121,7 +122,7 @@ object Graph {
             .cutLineage(eager = i == iterations)
         }
         r
-      }
+      }.on(s)
       ranks
         .select(pagerankNodeName($"node").as("node"), round($"rank", 9).as("rank"))
         .orderBy($"node")
@@ -316,16 +317,17 @@ object Graph {
     // gPagerank / Checkpoints.quietLoop) — the frontier is hash(node)-
     // partitioned from the previous round's aggregate, co-partitioned
     // with bi on src, so the round join stays exchange- and sort-free.
-    val reached = graft.Checkpoints.quietLoop(s) {
+    val reached = graft.Checkpoints.quietLoop(s) { c =>
+      val edges = bi.on(c)
       var rd = Tables
-        .part(s, d)
+        .part(c, d)
         .filter($"p_brand" === hopSeedBrand)
         .select($"p_partkey".as("node"), lit(0).as("hop"))
         .cutLineage()
       for (h <- 1 to maxHops) {
         val frontier =
           rd.filter($"hop" === h - 1).select($"node".as("src")).hint("shuffle_hash")
-        val nxt = bi.join(frontier, "src").select($"dst".as("node"), lit(h).as("hop"))
+        val nxt = edges.join(frontier, "src").select($"dst".as("node"), lit(h).as("hop"))
         rd = rd
           .unionAll(nxt)
           .groupBy($"node")
@@ -333,7 +335,7 @@ object Graph {
           .cutLineage(eager = h == maxHops)
       }
       rd
-    }
+    }.on(s)
     reached.select($"node", $"hop".as("min_hops")).orderBy($"node")
   }
 
@@ -441,14 +443,15 @@ object Graph {
       .cutLineage()
     // r15: quietLoop + SHUFFLE_HASH on the compact label side (see
     // gPagerank / Checkpoints.quietLoop).
-    val labels = graft.Checkpoints.quietLoop(s) {
-      var lb = bi
+    val labels = graft.Checkpoints.quietLoop(s) { c =>
+      val edges = bi.on(c)
+      var lb = edges
         .select($"dst".as("node"))
         .distinct()
         .select($"node", $"node".as("label"))
         .cutLineage()
       for (r <- 1 to lpRounds) {
-        val nb = bi
+        val nb = edges
           .join(lb.withColumnRenamed("node", "dst").hint("shuffle_hash"), "dst")
           .groupBy($"src", $"label")
           .agg(count(lit(1)).as("c"))
@@ -462,7 +465,7 @@ object Graph {
           .cutLineage(eager = r == lpRounds)
       }
       lb
-    }
+    }.on(s)
     val sz = org.apache.spark.sql.expressions.Window.partitionBy($"label")
     labels
       .select(
@@ -520,14 +523,15 @@ object Graph {
       // partitioned from the previous round's min-aggregate,
       // co-partitioned with bi on src, so the relaxation join stays
       // exchange- and sort-free.
-      val dist = graft.Checkpoints.quietLoop(s) {
+      val dist = graft.Checkpoints.quietLoop(s) { c =>
+        val edges = bi.on(c)
         var dt = Tables
-          .part(s, d)
+          .part(c, d)
           .filter($"p_brand" === hopSeedBrand)
           .select($"p_partkey".as("node"), lit(0).as("dist"))
           .cutLineage()
         for (r <- 1 to ssspRounds) {
-          val relaxed = bi
+          val relaxed = edges
             .join(dt.withColumnRenamed("node", "src").hint("shuffle_hash"), "src")
             .select($"dst".as("node"), ($"dist" + $"w").as("dist"))
           dt = dt
@@ -537,7 +541,7 @@ object Graph {
             .cutLineage(eager = r == ssspRounds)
         }
         dt
-      }
+      }.on(s)
       dist.select($"node", $"dist").orderBy($"node")
     } finally bi.unpersist()
   }

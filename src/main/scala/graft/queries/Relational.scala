@@ -427,25 +427,23 @@ object Relational {
     * k` and gets TopKPerKeyExec's partial/final heap pair instead of a
     * full per-key sort — the custom physical operator reachable from
     * pure SQL text. The ORDER BY is total (price, orderkey, linenumber),
-    * so the rewrite is exactly lossless. The conf is set on a clone of
-    * the caller's session (same context, own SQL conf, the extensions
-    * inherited), so no other query sees the rewrite, not even one
-    * planning on the caller's session at the same moment. TopKSpec
-    * asserts the plan shape and on/off row equality.
+    * so the rewrite is exactly lossless. The conf is set only inside a
+    * [[graft.GraftSession.scoped]] clone, so no other query sees the
+    * rewrite, not even one planning on the caller's session at the same
+    * moment; the pinned top-k rows come back on the caller's session.
+    * TopKSpec asserts the plan shape and on/off row equality.
     */
-  val oTopkSqlRewrite: Q = (s, d) => {
-    val rewriting = org.apache.spark.sql.GraftSqlBridge.cloneSession(s)
-    rewriting.conf.set(graft.plans.TopKRewrite.confKey, "true")
-    rewriting.sql(
-      s"""SELECT l_returnflag, l_orderkey, l_extendedprice, rn FROM (
-         |  SELECT l_returnflag, l_orderkey, l_extendedprice,
-         |    row_number() OVER (PARTITION BY l_returnflag
-         |      ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber) AS rn
-         |  FROM parquet.`$d/lineitem.parquet`)
-         |WHERE rn <= 3""".stripMargin)
-      .localCheckpoint(true)
-      .orderBy($"l_returnflag", $"rn")
-  }
+  val oTopkSqlRewrite: Q = (s, d) =>
+    graft.GraftSession.scoped(s, graft.plans.TopKRewrite.confKey -> "true") { c =>
+      c.sql(
+        s"""SELECT l_returnflag, l_orderkey, l_extendedprice, rn FROM (
+           |  SELECT l_returnflag, l_orderkey, l_extendedprice,
+           |    row_number() OVER (PARTITION BY l_returnflag
+           |      ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber) AS rn
+           |  FROM parquet.`$d/lineitem.parquet`)
+           |WHERE rn <= 3""".stripMargin)
+        .localCheckpoint(true)
+    }.on(s).orderBy($"l_returnflag", $"rn")
 
   // ---------------------------------------------------------------------
   // TPC-H Q1 shape — the headline scan-heavy aggregation (bench anchor).

@@ -61,8 +61,6 @@ object HierIvf {
   private[sim] val hierWCoarse = 2
   private[sim] val hierK       = 5
 
-  private def asDouble(c: org.apache.spark.sql.Column) = transform(c, _.cast("double"))
-
   /** In-memory spherical Lloyd over one cell's sample. `vs` must already
     * be in ascending-vec_id order: seeds are its first `k` vectors and
     * every running sum folds in that order, making the result
@@ -200,7 +198,7 @@ object HierIvf {
       coarseDump: Option[String] = None,
       fineDump: Option[String] = None
   ): DataFrame = {
-    val e              = Tables.embeddings(s, d).select($"vec_id", asDouble($"embedding").as("v"))
+    val e              = Tables.embeddings(s, d).select($"vec_id", $"embedding".cast("array<double>").as("v"))
     val (coarse, fine) = trainCentroidsHier(s, e, kc, kf, iters = 3)
     coarseDump.foreach { p =>
       import s.implicits._
@@ -282,7 +280,7 @@ object HierIvf {
     */
   def ivfHierIndexTopK(s: SparkSession, d: String, k: Int, kc: Int, kf: Int): DataFrame = {
     val path = Similarity.scratchDir("hierindex", d)
-    val e    = Tables.embeddings(s, d).select($"vec_id", asDouble($"embedding").as("v"))
+    val e    = Tables.embeddings(s, d).select($"vec_id", $"embedding".cast("array<double>").as("v"))
     val (_, fine) = writeIvfIndexHierFor(s, e, path, kc, kf, iters = 3)
     val probes = e.filter($"vec_id" < 10).select($"vec_id".as("probe_id"), $"v".as("pv"))
     // the flat centroid list in global-fine-id order: probeCells over it

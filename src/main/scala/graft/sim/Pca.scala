@@ -46,8 +46,6 @@ object Pca {
 
   private val dec = DecimalType(38, 18)
 
-  private def asDouble(c: org.apache.spark.sql.Column) = transform(c, _.cast("double"))
-
   /** The covariance grouped-aggregate frame, exposed separately so the
     * plan gate (PcaSpec) can assert its shape: zero joins, a single
     * exchange carrying only the ≤2080 (i,j) DECIMAL groups.
@@ -113,7 +111,7 @@ object Pca {
 
   /** Scan + per-dimension means (rounded 9 dp). */
   private def meansStage(s: SparkSession, d: String) = {
-    val e = Tables.embeddings(s, d).select($"vec_id", asDouble($"embedding").as("v"))
+    val e = Tables.embeddings(s, d).select($"vec_id", $"embedding".cast("array<double>").as("v"))
     val muRows = e
       .select(posexplode($"v").as(Seq("i", "x")))
       .groupBy($"i")
@@ -210,7 +208,7 @@ object Pca {
     val evLit    = array(scala.collection.immutable.ArraySeq.unsafeWrapArray(ev.map(lit)): _*)
     Tables
       .embeddings(s, d)
-      .select($"vec_id", asDouble($"embedding").as("v"))
+      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
       .select(
         $"vec_id",
         round(
@@ -233,7 +231,7 @@ object Pca {
     val ev2Lit = array(scala.collection.immutable.ArraySeq.unsafeWrapArray(ev2.map(lit)): _*)
     Tables
       .embeddings(s, d)
-      .select($"vec_id", asDouble($"embedding").as("v"))
+      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
       .select($"vec_id", zip_with($"v", muLit, (x, m) => x - m).as("c"))
       .select(
         $"vec_id",

@@ -32,14 +32,12 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     graft.functions.GraftFunctions.cosine64(a, b)
 
-  private def asDouble(c: Column): Column = transform(c, x => x.cast("double"))
-
   /** Brute-force top-k cosine neighbors for probe vectors vec_id < 10.
     * Ranking is on the ROUNDED similarity + id tiebreak so the cut is
     * deterministic cross-engine.
     */
   def bruteForceTopK(s: SparkSession, d: String, k: Int): DataFrame = {
-    val e = Tables.embeddings(s, d).select($"vec_id", asDouble($"embedding").as("v"))
+    val e = Tables.embeddings(s, d).select($"vec_id", $"embedding".cast("array<double>").as("v"))
     val probes = e.filter($"vec_id" < 10)
       .select($"vec_id".as("probe_id"), $"v".as("pv"))
     val sims = e
@@ -246,7 +244,7 @@ object Similarity {
       val wCoarse = math.max(2, math.ceil(nprobe.toDouble / kf).toInt + 1)
       return HierIvf.ivfHierTopK(s, d, k, kc, kf, nprobe, wCoarse)
     }
-    val e = Tables.embeddings(s, d).select($"vec_id", asDouble($"embedding").as("v"))
+    val e = Tables.embeddings(s, d).select($"vec_id", $"embedding".cast("array<double>").as("v"))
     val cents = trainCentroids(s, e, nCells, iters = 3)
     // boundary-oracle dump (judge r3 #7): the trained centroids become a
     // DuckDB input table; the oracle replays assignment, nprobe
@@ -310,7 +308,7 @@ object Similarity {
       nprobe: Int,
       centsDump: Option[String] = None
   ): DataFrame = {
-    val e     = Tables.embeddings(s, d).select($"vec_id", asDouble($"embedding").as("v"))
+    val e     = Tables.embeddings(s, d).select($"vec_id", $"embedding".cast("array<double>").as("v"))
     val cents = trainCentroids(s, e, nCells, iters = 3)
     centsDump.foreach { p =>
       import s.implicits._
@@ -343,7 +341,7 @@ object Similarity {
     * the custom SparkPlan row-for-row.
     */
   def bruteForceTopKNative(s: SparkSession, d: String, k: Int): DataFrame = {
-    val e = Tables.embeddings(s, d).select($"vec_id", asDouble($"embedding").as("v"))
+    val e = Tables.embeddings(s, d).select($"vec_id", $"embedding".cast("array<double>").as("v"))
     val probes = e.filter($"vec_id" < 10)
       .select($"vec_id".as("probe_id"), $"v".as("pv"))
     val sims = e
@@ -375,7 +373,7 @@ object Similarity {
     */
   def mipsTopK(s: SparkSession, d: String, k: Int, shortlist: Int): DataFrame = {
     val dot = graft.functions.GraftFunctions.dot64 _
-    val raw = Tables.embeddings(s, d).select($"vec_id", asDouble($"embedding").as("u"))
+    val raw = Tables.embeddings(s, d).select($"vec_id", $"embedding".cast("array<double>").as("u"))
     val e = raw.select(
       $"vec_id",
       transform($"u", x => x * (lit(1.0) + ($"vec_id" % 7).cast("double") / lit(4.0))).as("v")
@@ -428,7 +426,7 @@ object Similarity {
   val quantizeInt8: Q = (s, d) =>
     Tables
       .embeddings(s, d)
-      .select($"vec_id", asDouble($"embedding").as("v"))
+      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
       // min/scale as columns FIRST: inlining them in the transform lambda
       // rescans the array per element (O(d²) per row); and a zero scale
       // (constant vector) maps every dim to code 0 explicitly — Spark's
@@ -473,7 +471,7 @@ object Similarity {
     * point of IVF at 100 TB.
     */
   def writeIvfIndex(s: SparkSession, d: String, path: String, nCells: Int, iters: Int): Array[Array[Double]] =
-    writeIvfIndexFor(s, Tables.embeddings(s, d).select($"vec_id", asDouble($"embedding").as("v")), path, nCells, iters)
+    writeIvfIndexFor(s, Tables.embeddings(s, d).select($"vec_id", $"embedding".cast("array<double>").as("v")), path, nCells, iters)
 
   /** Same, over an arbitrary (vec_id, v: array&lt;double&gt;) DataFrame —
     * used by the scale stress probe ([[graft.tools.Stress]]).
@@ -606,7 +604,7 @@ object Similarity {
   def ivfIndexTopK(s: SparkSession, d: String, k: Int, nCells: Int): DataFrame = {
     val path = scratchDir("index", d)
     val cents = writeIvfIndex(s, d, path, nCells, iters = 3)
-    val e = Tables.embeddings(s, d).select($"vec_id", asDouble($"embedding").as("v"))
+    val e = Tables.embeddings(s, d).select($"vec_id", $"embedding".cast("array<double>").as("v"))
     val probes = e.filter($"vec_id" < 10).select($"vec_id".as("probe_id"), $"v".as("pv"))
     ivfProbeIndexBatch(s, path, cents, probes, k, nprobe = nCells)
   }
@@ -640,7 +638,7 @@ object Similarity {
     */
   def ivfIndexAppendTopK(s: SparkSession, d: String, k: Int, nCells: Int): DataFrame = {
     val path = scratchDir("append", d)
-    val e = Tables.embeddings(s, d).select($"vec_id", asDouble($"embedding").as("v"))
+    val e = Tables.embeddings(s, d).select($"vec_id", $"embedding".cast("array<double>").as("v"))
     val cents = writeIvfIndexFor(s, e.filter($"vec_id" % 2 === 0), path, nCells, iters = 3)
     appendToIvfIndex(s, e.filter($"vec_id" % 2 =!= 0), path, cents)
     val probes = e.filter($"vec_id" < 10).select($"vec_id".as("probe_id"), $"v".as("pv"))
@@ -670,7 +668,7 @@ object Similarity {
     * on append (the operational argument for SRP over IVF).
     */
   def srpTopK(s: SparkSession, d: String, k: Int, sigDump: Option[String] = None): DataFrame = {
-    val e = Tables.embeddings(s, d).select($"vec_id", asDouble($"embedding").as("v"))
+    val e = Tables.embeddings(s, d).select($"vec_id", $"embedding".cast("array<double>").as("v"))
     // planes span the observed embedding width (sampled from one row —
     // the corpus is fixed-width); empty corpus → dim 0 → empty result,
     // not an exception
@@ -738,7 +736,7 @@ object Similarity {
     * broadcast-probes single-scan shape as brute-force top-k.
     */
   def rangeSearch(s: SparkSession, d: String, tau: Double): DataFrame = {
-    val e = Tables.embeddings(s, d).select($"vec_id", asDouble($"embedding").as("v"))
+    val e = Tables.embeddings(s, d).select($"vec_id", $"embedding".cast("array<double>").as("v"))
     val probes = e.filter($"vec_id" < 10)
       .select($"vec_id".as("probe_id"), $"v".as("pv"))
     e.join(broadcast(probes), $"vec_id" =!= $"probe_id")
@@ -774,7 +772,7 @@ object Similarity {
       tau: Double,
       centsDump: Option[String] = None
   ): DataFrame = {
-    val e     = Tables.embeddings(s, d).select($"vec_id", asDouble($"embedding").as("v"))
+    val e     = Tables.embeddings(s, d).select($"vec_id", $"embedding".cast("array<double>").as("v"))
     val cents = trainCentroids(s, e, nCells, iters = 3)
     centsDump.foreach { p =>
       import s.implicits._
@@ -942,7 +940,7 @@ object Similarity {
       ksub: Int = pqKsub,
       booksDump: Option[String] = None
   ): DataFrame = {
-    val e     = Tables.embeddings(s, d).select($"vec_id", asDouble($"embedding").as("v"))
+    val e     = Tables.embeddings(s, d).select($"vec_id", $"embedding".cast("array<double>").as("v"))
     val books = trainPqCodebooks(s, e, m, ksub, iters = 3)
     val subDim = books(0)(0).length
     booksDump.foreach { p =>
@@ -1006,7 +1004,7 @@ object Similarity {
       prefixDim: Int = mkPrefixDim,
       shortlist: Int = mkShortlist
   ): DataFrame = {
-    val e = Tables.embeddings(s, d).select($"vec_id", asDouble($"embedding").as("v"))
+    val e = Tables.embeddings(s, d).select($"vec_id", $"embedding".cast("array<double>").as("v"))
     // coarse: prefix-slice cosine, map-only against broadcast probes
     val pr = e
       .filter($"vec_id" < annProbeCut)
@@ -1052,7 +1050,7 @@ object Similarity {
   val elbowKs: Seq[Int] = Seq(2, 4, 8, 16)
   def kmeansElbow(s: SparkSession, d: String, centsDump: Option[String]): DataFrame = {
     import s.implicits._
-    val e = Tables.embeddings(s, d).select(col("vec_id"), asDouble(col("embedding")).as("v"))
+    val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val models: Seq[(Int, Array[Array[Double]])] =
       elbowKs.map(k => k -> trainCentroids(s, e, k, iters = 3))
     centsDump.foreach { p =>
@@ -1096,7 +1094,7 @@ object Similarity {
     */
   def hardNegatives(s: SparkSession, d: String, k: Int): DataFrame = {
     val e = Tables.embeddings(s, d)
-      .select($"vec_id", $"label", asDouble($"embedding").as("v"))
+      .select($"vec_id", $"label", $"embedding".cast("array<double>").as("v"))
     val anchors = e.filter($"vec_id" < annProbeCut)
       .select($"vec_id".as("anchor_id"), $"label".as("anchor_label"), $"v".as("av"))
     val cands = e
@@ -1127,7 +1125,7 @@ object Similarity {
     */
   val ncmConfusion: Q = (s, d) => {
     val e = Tables.embeddings(s, d)
-      .select($"vec_id", $"label", asDouble($"embedding").as("v"))
+      .select($"vec_id", $"label", $"embedding".cast("array<double>").as("v"))
     val cents = e
       .select($"label", posexplode($"v").as(Seq("pos", "x")))
       .groupBy($"label", $"pos")

@@ -100,13 +100,16 @@ object StreamQueries {
     * corpus with `Trigger.AvailableNow` (all files present at start, cut
     * into micro-batches by the source's own limits, then stop) against a
     * checkpoint dir of its own, and blocks until the replay is done. The
-    * dir is deleted in `finally`, so a failed query leaves none behind.
+    * dir is deleted in `finally`, so a failed query leaves none behind,
+    * and the stream listener bus of the clone the stream ran on is
+    * detached.
     */
   private def runBounded[T](writer: DataStreamWriter[T]): Unit = {
     val ck = java.nio.file.Files.createTempDirectory("graft-stream-ck").toFile
-    try writer.option("checkpointLocation", ck.toString).trigger(Trigger.AvailableNow())
-      .start().awaitTermination()
-    finally org.apache.commons.io.FileUtils.deleteQuietly(ck)
+    try {
+      val q = writer.option("checkpointLocation", ck.toString).trigger(Trigger.AvailableNow()).start()
+      try q.awaitTermination() finally org.apache.spark.sql.GraftSqlBridge.detachStreamBus(q)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(ck)
   }
 
   /** [[runBounded]] into a memory sink, read back as a pinned result. The
@@ -522,21 +525,22 @@ object StreamQueries {
     * the two APIs must converge to the same alert set — so the driver
     * hash-checks the old-API fold, the new-API fold, and the DuckDB
     * window replay against each other. The provider conf is read at
-    * query start; it is set on a clone of the caller's session (same
-    * context, own SQL conf), so no other query on the caller's session
-    * ever sees it. The clone has its own stream manager, so the caller's
-    * stream listeners are added to it and still see the run's progress.
+    * query start; it is set only inside a [[graft.GraftSession.scoped]]
+    * clone, so no other query on the caller's session ever sees it. The
+    * clone has its own stream manager, so the caller's stream listeners
+    * are added to it and still see the run's progress; its bus leaves the
+    * context's bus once the run's events are delivered.
     */
-  val streamStateTws: Q = (s, d) => {
-    val tws = org.apache.spark.sql.GraftSqlBridge.cloneSession(s)
-    tws.conf.set("spark.sql.streaming.stateStore.providerClass", rocksDbProvider)
-    s.streams.listListeners().foreach(tws.streams.addListener)
-    import tws.implicits.{newLongEncoder, newProductEncoder}
-    val alerts = purchaseEvents(tws, d)
-      .groupByKey(_.user_id)
-      .transformWithState(new MilestoneProcessor, TimeMode.None(), OutputMode.Append())
-    runToMemory(alerts.toDF(), "s_stream_state_tws")(milestoneRows)
-  }
+  val streamStateTws: Q = (s, d) =>
+    graft.GraftSession.scoped(s, "spark.sql.streaming.stateStore.providerClass" -> rocksDbProvider) { tws =>
+      s.streams.listListeners().foreach(tws.streams.addListener)
+      import tws.implicits.{newLongEncoder, newProductEncoder}
+      val alerts = purchaseEvents(tws, d)
+        .groupByKey(_.user_id)
+        .transformWithState(new MilestoneProcessor, TimeMode.None(), OutputMode.Append())
+      try runToMemory(alerts.toDF(), "s_stream_state_tws")(milestoneRows)
+      finally org.apache.spark.sql.GraftSqlBridge.detachStreamBus(tws)
+    }.on(s)
 
   /** Streaming anomaly monitor — the stream-STATIC join leg of §2.10:
     * per-type historical statistics (mean/σ of 30-minute window totals,
@@ -833,7 +837,7 @@ object StreamQueries {
       .filter($"vec_id" < 10)
       .filter(graft.tables.Tables.vectorContract($"embedding", dim))
       .select($"vec_id".as("probe_id"),
-        transform($"embedding", x => x.cast("double")).as("pv"))
+        $"embedding".cast("array<double>").as("pv"))
     runBounded(probes.writeStream.foreachBatch(annServeBatchFn(idxPath, cents, out)))
     // zero accepted probes ⇒ zero micro-batch writes ⇒ the hits dir was
     // never created (chaos r11 round 6: an empty — or fully rejected —

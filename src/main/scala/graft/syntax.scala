@@ -9,11 +9,14 @@ import org.apache.spark.sql.ColumnName
 object syntax {
   private val callNames = new java.util.concurrent.atomic.AtomicLong
 
-  /** `<base>_<n>`, unique per call in this JVM: the catalog name (temp
-    * view, table, stream) of one call, so two callers on one session
-    * never share it. It parses as an identifier.
+  private val processToken = s"p${ProcessHandle.current().pid()}"
+
+  /** `<base>_p<pid>_<n>`, unique per call and per process: the catalog
+    * name (temp view, table, stream) of one call, so two callers on one
+    * session, or two JVMs on one warehouse dir, never share it. It
+    * parses as an identifier.
     */
-  def callName(base: String): String = s"${base}_${callNames.incrementAndGet()}"
+  def callName(base: String): String = s"${base}_${processToken}_${callNames.incrementAndGet()}"
 
   implicit class ColStringContext(private val sc: StringContext) extends AnyVal {
     def $(args: Any*): ColumnName = new ColumnName(sc.s(args: _*))
@@ -26,6 +29,15 @@ object syntax {
   implicit class DatasetCutOps[T](private val ds: org.apache.spark.sql.Dataset[T]) extends AnyVal {
     def cutLineage(eager: Boolean = true): org.apache.spark.sql.Dataset[T] =
       Checkpoints.cut(ds, eager)
+  }
+
+  /** The same logical plan bound to `s` (a [[GraftSession.scoped]]
+    * clone, or back to its caller): it plans under `s`'s conf, and a
+    * persisted or checkpointed input still reads its cached blocks.
+    */
+  implicit class DataFrameSessionOps(private val df: org.apache.spark.sql.DataFrame) extends AnyVal {
+    def on(s: org.apache.spark.sql.SparkSession): org.apache.spark.sql.DataFrame =
+      org.apache.spark.sql.GraftSqlBridge.ofRows(s, org.apache.spark.sql.GraftSqlBridge.logicalPlan(df))
   }
 
   /** Scale-adaptive spread before a CPU-heavy stage (r14 optimization

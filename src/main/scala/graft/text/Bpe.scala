@@ -153,9 +153,10 @@ object Bpe {
     // driver overhead that does not shrink with cluster size (the r15
     // text_bpe_encode profile: 38 one-task jobs, 30-200 ms scheduling
     // gap each, work 3-40 ms). The rounds run in the shared AQE-off loop
-    // scope, which restores AQE before the corpus-sized encode/consumer
-    // query runs; plans and results are unchanged.
-    graft.Checkpoints.quietLoop(s) {
+    // scope, on a clone of `s`, so the corpus-sized encode/consumer query
+    // still plans with AQE on `s`; plans and results are unchanged.
+    graft.Checkpoints.quietLoop(s) { c =>
+      val words  = wf.on(c)
       val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
       val out    = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
       (1 to bpeMerges).foreach { r =>
@@ -164,7 +165,7 @@ object Bpe {
           applyMerges(w, cur).sliding(2).filter(_.length == 2)
             .map(p => (p.head, p(1))).toSeq
         }
-        val winner = wf
+        val winner = words
           .select($"freq", explode(pairsU($"word")).as("p"))
           .groupBy($"p._1".as("mx"), $"p._2".as("my"))
           .agg(sum($"freq").as("c"))

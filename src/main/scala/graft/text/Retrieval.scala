@@ -127,7 +127,7 @@ object Retrieval {
       .filter($"r" <= rrfDepth)
       .select($"probe_id", $"doc_id", $"r".as("bm25_rank"))
     val e = Tables.embeddings(s, d)
-      .select($"vec_id", transform($"embedding", x => x.cast("double")).as("v"))
+      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
     val probes = e.filter($"vec_id" < bmProbes)
       .select($"vec_id".as("probe_id"), $"v".as("pv"))
     val cosRanks = e

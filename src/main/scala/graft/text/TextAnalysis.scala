@@ -1585,10 +1585,11 @@ object TextAnalysis {
       val nodes = edgesW.select($"src").distinct()
       val n    = nodes.count()
       val jump = 0.15 / n
-      val ranks = graft.Checkpoints.quietLoop(s) {
-        var r = nodes.select($"src".as("node"), lit(1.0 / n).as("rank")).cutLineage()
+      val ranks = graft.Checkpoints.quietLoop(s) { c =>
+        val edges = edgesW.on(c)
+        var r = nodes.on(c).select($"src".as("node"), lit(1.0 / n).as("rank")).cutLineage()
         for (i <- 1 to trIters) {
-          val contribs = edgesW
+          val contribs = edges
             .join(r.withColumnRenamed("node", "src").hint("shuffle_hash"), "src")
             .select($"dst", ($"rank" / $"outw" * $"w").as("contrib"))
           r = contribs
@@ -1600,7 +1601,7 @@ object TextAnalysis {
             .cutLineage(eager = i == trIters)
         }
         r
-      }
+      }.on(s)
       ranks.select($"node".as("word"), round($"rank", 9).as("rank")).orderBy($"word")
     } finally edgesW.unpersist()
   }

@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.GraftSession
+import graft.syntax.DataFrameSessionOps
 import graft.dedup.Hashing
 import graft.obs.QueryMeter
 import graft.tools.StressUtil.{cachedDir, symlinkTables, time}
@@ -481,26 +482,19 @@ object Stress {
       def aggJoin(joined: org.apache.spark.sql.DataFrame) = joined
         .groupBy($"p_brand")
         .agg(sum($"l_quantity".cast("decimal(38,6)")).as("q"), count(lit(1)).as("n"))
-      def withConf[A](pairs: (String, String)*)(f: => A): A = {
-        val saved = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-        pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-        try f
-        finally saved.foreach { case (k, o) => o.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-      }
-      val results = withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-        val rNoAqe = withConf("spark.sql.adaptive.skewJoin.enabled" -> "false") {
-          measured(s"skew SMJ unsalted, AQE skew OFF @${conf.mult}x, 50% hot key") {
-            aggJoin(hot.join(p, Seq("p_partkey"))).collect()
+      // each arm plans on its own clone: sort-merge forced, AQE's skew
+      // splitter as the arm says
+      def arm(label: String, confs: (String, String)*)(
+          join: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) => org.apache.spark.sql.DataFrame) =
+        GraftSession.scoped(spark, ("spark.sql.autoBroadcastJoinThreshold" -> "-1") +: confs: _*) { c =>
+          measured(s"skew SMJ $label @${conf.mult}x, 50% hot key") {
+            aggJoin(join(hot.on(c), p.on(c))).collect()
           }
         }
-        val rAqe = measured(s"skew SMJ unsalted, AQE skew ON @${conf.mult}x, 50% hot key") {
-          aggJoin(hot.join(p, Seq("p_partkey"))).collect()
-        }
-        val rSalt = measured(s"skew SMJ SALTED (8 salts) @${conf.mult}x, 50% hot key") {
-          aggJoin(graft.queries.SkewJoin.saltedInnerJoin(hot, p, "p_partkey", salts = 8)).collect()
-        }
-        Seq(rNoAqe, rAqe, rSalt)
-      }
+      val results = Seq(
+        arm("unsalted, AQE skew OFF", "spark.sql.adaptive.skewJoin.enabled" -> "false")(_.join(_, Seq("p_partkey"))),
+        arm("unsalted, AQE skew ON")(_.join(_, Seq("p_partkey"))),
+        arm("SALTED (8 salts)")(graft.queries.SkewJoin.saltedInnerJoin(_, _, "p_partkey", salts = 8)))
       val canon = results.map(_.sortBy(_.getString(0)).toSeq)
       require(canon.forall(_ == canon.head), "skew-join variants disagree")
       println("- all three skew-join variants byte-identical")
@@ -535,7 +529,7 @@ object Stress {
       val (wn, tW) = time(bucketHist(docs.select(explode(fpUdf($"text")).as("k"))))
       println(f"- winnow fp buckets @x${conf.mult}: ${fmtHist(wn)} (cap=${Dedup.maxBucketSize}; $tW%.1f s)")
       val emb = graft.tables.Tables.embeddings(spark, dirN)
-        .select($"vec_id", transform($"embedding", x => x.cast("double")).as("v"))
+        .select($"vec_id", $"embedding".cast("array<double>").as("v"))
       val idxPath = s"/tmp/graft_stress_hist_ivf_x${conf.mult}"
       val (_, tIdx) = time(graft.sim.Similarity.writeIvfIndexFor(spark, emb, idxPath, nCells = 64, iters = 3))
       val cells = spark.read.parquet(idxPath)

@@ -24,6 +24,35 @@ object GraftSqlBridge {
   def cloneSession(spark: SparkSession): SparkSession =
     spark.asInstanceOf[classic.SparkSession].cloneSession()
 
+  /** Drain the context's listener bus, then take `session`'s own
+    * StreamingQueryListenerBus off it, if it has one. Spark adds that bus
+    * to the context for good on the session's first stream (and on the
+    * clone each stream runs on), so per-call sessions would leak one
+    * listener per call. The manager and its bus are private fields.
+    */
+  def detachStreamBus(session: SparkSession): Unit = {
+    org.apache.spark.GraftBusDrain.drain(session.sparkContext)
+    val state = session.asInstanceOf[classic.SparkSession].sessionState
+    Option(privateField(classOf[internal.SessionState], "streamingQueryManager", state)).foreach { mgr =>
+      session.sparkContext.listenerBus.removeListener(
+        privateField(classOf[classic.StreamingQueryManager], "listenerBus", mgr)
+          .asInstanceOf[org.apache.spark.scheduler.SparkListenerInterface])
+    }
+  }
+
+  /** [[detachStreamBus]] for the clone a finished stream ran on. */
+  def detachStreamBus(query: streaming.StreamingQuery): Unit = query match {
+    case w: execution.streaming.runtime.StreamingQueryWrapper =>
+      detachStreamBus(w.streamingQuery.sparkSessionForStream)
+    case _ =>
+  }
+
+  private def privateField(cls: Class[_], name: String, of: AnyRef): AnyRef = {
+    val f = cls.getDeclaredField(name)
+    f.setAccessible(true)
+    f.get(of)
+  }
+
   def logicalPlan(df: DataFrame): LogicalPlan =
     df.asInstanceOf[classic.Dataset[Row]].logicalPlan
 

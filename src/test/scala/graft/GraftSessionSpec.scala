@@ -28,6 +28,7 @@ class GraftSessionSpec extends AnyFunSuite {
         "spark.sql.legacy.parquet.nanosAsLong" -> "true",
         "spark.shuffle.sort.bypassMergeThreshold" -> "1",
         "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "64kb",
+        "spark.sql.artifact.isolation.enabled" -> "false",
         "spark.sql.adaptive.enabled" -> "true",
         "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
         "spark.sql.warehouse.dir" -> "file:/tmp/graft-warehouse")
@@ -133,26 +134,28 @@ class GraftSessionSpec extends AnyFunSuite {
   private def sitesOf(re: scala.util.matching.Regex): Set[String] =
     mainSources.collect { case (f, src) if re.findFirstIn(code(src)).isDefined => f }.toSet
 
-  test("src/main unsets session conf only in the Stress tool") {
+  test("src/main never unsets session conf") {
     // an unset is the tail of a save-and-restore block on a shared
-    // session; query code scopes its conf on a clone instead
+    // session; code scopes its conf on a clone (GraftSession.scoped) instead
     val sites = sitesOf("""conf\s*\.\s*unset\s*\(""".r)
-    assert(sites == Set("graft/tools/Stress.scala"), s"conf.unset sites: $sites")
+    assert(sites.isEmpty, s"conf.unset sites: $sites")
   }
 
   test("src/main writes session conf only at its allow-listed sites") {
     // a conf write on a shared session is seen by every query planning on
-    // it at that moment; each site below owns its session or writes a clone
-    val allowed = Map(
+    // it at that moment; each site below owns its session or writes a
+    // clone. One entry per call site, so a second write in an allowed
+    // file fails too.
+    val allowed = Seq(
       "graft/GraftSession.scala" -> "the factory sets the env's extra confs on the session it builds",
-      "graft/etl/ZoloPipeline.scala" -> "catalog registration: a v2 catalog is bound by its conf",
-      "graft/Checkpoints.scala" -> "quietLoop's AQE-off loop scope",
-      "graft/tools/Stress.scala" -> "a dev tool: its own session and its A/B arms",
-      "graft/queries/Relational.scala" -> "oTopkSqlRewrite sets its rewrite conf on a clone",
-      "graft/streaming/StreamQueries.scala" -> "streamStateTws sets its state-store provider on a clone")
-    val sites = sitesOf("""conf\s*\.\s*set\s*\(""".r)
-    assert(sites.subsetOf(allowed.keySet), s"conf.set outside the allow-list: ${sites -- allowed.keySet}")
-    assert(sites.contains("graft/GraftSession.scala"))
+      "graft/GraftSession.scala" -> "scoped sets its overrides on its own clone",
+      "graft/etl/ZoloPipeline.scala" -> "catalog registration: a v2 catalog is bound by its class conf",
+      "graft/etl/ZoloPipeline.scala" -> "catalog registration: and by its root conf",
+      "graft/tools/Stress.scala" -> "a dev tool: --shuffle-parts on its own session",
+      "graft/tools/Stress.scala" -> "a dev tool: --conf on its own session")
+    val set = """conf\s*\.\s*set\s*\(""".r
+    val sites = mainSources.flatMap { case (f, src) => set.findAllIn(code(src)).map(_ => f) }
+    assert(sites.sorted == allowed.map(_._1).sorted, s"conf.set call sites: ${sites.sorted}")
   }
 
   test("Verify.main rejects a wrong argument count before building a session") {

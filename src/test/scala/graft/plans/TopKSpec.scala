@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.SparkSpec
+import graft.{GraftSession, SparkSpec}
 import graft.sim.Similarity
 import org.apache.spark.sql.functions._
 
@@ -36,13 +36,14 @@ class TopKSpec extends SparkSpec {
     val off = run(); val offRows = off.collect()
     assert(!off.queryExecution.executedPlan.toString.contains("TopKPerKey"))
     // on: the heap operator plans below the window, rows identical
-    spark.conf.set(TopKRewrite.confKey, "true")
-    try {
-      val on = run(); val onRows = on.collect()
+    GraftSession.scoped(spark, TopKRewrite.confKey -> "true") { rewriting =>
+      val on = rewriting.sql(sql); val onRows = on.collect()
       val plan = on.queryExecution.executedPlan.toString
       assert(plan.contains("TopKPerKey") && plan.contains("TopKPerKeyPartial"), plan)
       assert(onRows.map(_.toSeq).toSeq == offRows.map(_.toSeq).toSeq)
-    } finally spark.conf.unset(TopKRewrite.confKey)
+    }
+    // the caller's session never saw the rewrite conf
+    assert(!run().queryExecution.executedPlan.toString.contains("TopKPerKey"))
     spark.catalog.dropTempView("tk_orders")
   }
 
@@ -59,9 +60,8 @@ class TopKSpec extends SparkSpec {
         |WHERE rn <= 3 AND rn <= 2 AND o_totalprice > 1000.0
         |ORDER BY o_custkey, rn""".stripMargin
     val off = spark.sql(sql).collect()
-    spark.conf.set(TopKRewrite.confKey, "true")
-    try {
-      val on   = spark.sql(sql)
+    GraftSession.scoped(spark, TopKRewrite.confKey -> "true") { rewriting =>
+      val on   = rewriting.sql(sql)
       val rows = on.collect()
       val plan = on.queryExecution.executedPlan.toString
       assert(plan.contains("TopKPerKey"), plan)
@@ -73,10 +73,10 @@ class TopKSpec extends SparkSpec {
           case t: TopKPerKey => t.k }.headOption.contains(2))
       assert(rows.map(_.toSeq).toSeq == off.map(_.toSeq).toSeq)
       // disjunction must NOT rewrite: an OR branch can keep rank > k rows
-      val orPlan = spark.sql(sql.replace("rn <= 3 AND rn <= 2 AND", "rn <= 2 OR"))
+      val orPlan = rewriting.sql(sql.replace("rn <= 3 AND rn <= 2 AND", "rn <= 2 OR"))
         .queryExecution.executedPlan.toString
       assert(!orPlan.contains("TopKPerKey"), orPlan)
-    } finally spark.conf.unset(TopKRewrite.confKey)
+    }
     spark.catalog.dropTempView("tk_orders3")
   }
 
@@ -117,8 +117,7 @@ class TopKSpec extends SparkSpec {
 
   test("TopKRewrite: non-matching shapes are left alone") {
     graft.tables.Tables.orders(spark, sf0001).createOrReplaceTempView("tk_orders2")
-    spark.conf.set(TopKRewrite.confKey, "true")
-    try {
+    GraftSession.scoped(spark, TopKRewrite.confKey -> "true") { rewriting =>
       // rank() is not row_number; no partition spec; bound not a literal —
       // none may rewrite
       val plans = Seq(
@@ -128,9 +127,9 @@ class TopKSpec extends SparkSpec {
         """SELECT * FROM (SELECT o_orderkey,
           |  row_number() OVER (ORDER BY o_totalprice, o_orderkey) AS rn
           |  FROM tk_orders2) WHERE rn <= 2""".stripMargin
-      ).map(q => spark.sql(q).queryExecution.executedPlan.toString)
+      ).map(q => rewriting.sql(q).queryExecution.executedPlan.toString)
       plans.foreach(p => assert(!p.contains("TopKPerKey"), p))
-    } finally spark.conf.unset(TopKRewrite.confKey)
+    }
     spark.catalog.dropTempView("tk_orders2")
   }
 

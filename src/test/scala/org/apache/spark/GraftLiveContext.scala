@@ -5,4 +5,9 @@ package org.apache.spark
   */
 object GraftLiveContext {
   def get: Option[SparkContext] = SparkContext.getActive
+
+  /** Listeners on `sc`'s bus, over every queue (`listenerBus` is
+    * `private[spark]`).
+    */
+  def listenerCount(sc: SparkContext): Int = sc.listenerBus.listeners.size
 }
