@@ -17,7 +17,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * }}}
   *
   * Extensions apply when a session is created, and carry over to its
-  * `newSession()` and `cloneSession()` (streaming micro-batches).
+  * `cloneSession()`s (`GraftSession.scoped`, streaming micro-batches).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

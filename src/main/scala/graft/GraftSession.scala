@@ -13,8 +13,11 @@ import org.apache.spark.sql.SparkSession
   * - AQE on: runtime re-plan (skew-join splitting, shuffle coalescing,
   *   broadcast-join demotion/promotion) is the 100 TB safety net.
   * - [[GraftExtensions]] installed: the SQL functions and the top-k
-  *   planner rules are in every session it builds, and in their
-  *   `newSession()`s, so query code never registers anything.
+  *   planner rules are in every session it builds, and in that session's
+  *   `scoped` and streaming clones, so query code never registers anything.
+  *
+  * A main runs on the one session `local` returns: Verify's 4 worker
+  * threads share it, and conf changes only on `scoped` clones.
   */
 object GraftSession {
   /** `cores` (local-mode threads and shuffle partitions) defaults to
@@ -62,36 +65,23 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64kb")
       // One executor classloader for all sessions: under artifact
       // isolation (the Spark 4 default) each new session — a `scoped`
-      // clone, a Verify worker — got its own, and the codegen cache
+      // clone, a stream's batch clone — got its own, and the codegen cache
       // missed for every stage it ran (5 compiles for one cut on a fresh
       // clone, 0 on a reused one). The engine adds no session artifacts.
       .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    applyExtraConfs(spark)
-    spark
-  }
-
-  /** Runtime-SQL-conf passthrough for A/B harness runs (r13: the RocksDB
-    * state-store A/B drives graft.Verify with
-    * spark.sql.streaming.stateStore.providerClass overridden — the
-    * engine code stays identical, only the session conf differs).
-    * `SPARK_GRAFT_EXTRA_CONFS` holds semicolon-separated k=v pairs;
-    * runtime confs only (static confs need builder time and belong in
-    * javaOptions -D). ONE definition (r13 review): Verify must apply the
-    * same parsing to its parent session AND each worker `newSession()`
-    * (which seeds SQLConf from the context conf, not the parent's
-    * runtime values) — a drifted copy would silently run workers on the
-    * default provider.
-    */
-  def applyExtraConfs(spark: SparkSession): Unit =
+    // SPARK_GRAFT_EXTRA_CONFS="k=v;k=v": runtime SQL confs for an A/B run
+    // (the RocksDB state-store provider, say); static confs need -D
     sys.env.get("SPARK_GRAFT_EXTRA_CONFS").foreach { kvs =>
       kvs.split(';').filter(_.contains('=')).foreach { kv =>
         val Array(k, v) = kv.split("=", 2)
         spark.conf.set(k.trim, v.trim)
       }
     }
+    spark
+  }
 
   /** Runs `body` on a fresh clone of `s` with `confs` set on the clone —
     * the one place query code changes conf. The clone starts from `s`'s

@@ -4,19 +4,22 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
-  * r10: the sweep runs CONCURRENTLY — the 293-query wall was ~460 s
-  * sequential at sf0.01 (BENCH_LOCAL §r10), dominated by scheduling idle
-  * time between small jobs, and the driver gate that consumes this dump
-  * produced an empty CORRECTNESS_r09.json (suspected harness time
-  * budget). Each worker thread owns a `newSession()` over the shared
-  * SparkContext, so temp views, session confs, registered functions and
-  * catalog bindings stay query-private while executors stay saturated;
-  * known-slow queries are scheduled first so a straggler can't land last
-  * and stretch the makespan. Results are byte-identical to the
-  * sequential sweep (every query is deterministic and writes its own
-  * directory).
+  * The sweep runs `threads` queries at a time (run one by one, it idles
+  * between small jobs: BENCH_LOCAL §r10) on ONE session, the one
+  * `GraftSession.local` returns: the worker threads inherit it as their
+  * active session, so the oracle judges every query as one of several
+  * concurrent callers of one engine. That holds because no query leaves
+  * session state another can see: view, sink and table names are per
+  * call (`graft.syntax.callName`), and conf changes only on
+  * `GraftSession.scoped` clones. Known-slow queries are scheduled first
+  * so a straggler can't land last and stretch the makespan. Results are
+  * byte-identical to a sequential sweep (every query is deterministic
+  * and writes its own directory).
   */
 object Verify {
+  /** Queries in flight at once on the one session. */
+  private val threads = 4
+
   /** Historically slowest rows (sequential profile, BENCH_LOCAL §r10) —
     * polled first to minimize makespan. Names that disappear simply fall
     * back to map order.
@@ -45,11 +48,10 @@ object Verify {
     val ordered =
       slowFirst.flatMap(n => picked.get(n).map(n -> _)) ++
         picked.filterNot { case (n, _) => slowFirst.contains(n) }
-    def runOne(sess: SparkSession, name: String,
-               fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+    def runOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
                clearCache: Boolean): Unit = {
       val t0 = System.nanoTime()
-      try fn(sess, sfDir).coalesce(1).write.mode("overwrite")
+      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
@@ -63,25 +65,16 @@ object Verify {
       // under memory pressure, so skipping the clear trades bounded
       // extra storage for correctness isolation; the sequential retry
       // pass clears freely (it is the only runner).
-      if (clearCache) sess.catalog.clearCache()
+      if (clearCache) spark.catalog.clearCache()
       System.err.println(f"[verify] $name ${(System.nanoTime() - t0) / 1e9}%.2f s")
     }
     val queue = new java.util.concurrent.ConcurrentLinkedQueue[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)]()
     ordered.foreach(queue.add)
-    val threads = math.max(1, sys.env.getOrElse("SPARK_GRAFT_VERIFY_THREADS", "4").toInt)
     val workers = (1 to math.min(threads, ordered.size)).map { _ =>
       val t = new Thread(() => {
-        // one private session per worker: thread-local active session so
-        // SparkSession.active (DSv2 warehouse faces) resolves here too
-        val sess = spark.newSession()
-        // newSession() seeds SQLConf from the context conf, NOT the
-        // parent's runtime conf.set values — re-apply the A/B overrides
-        // or the worker sessions silently run the default provider
-        GraftSession.applyExtraConfs(sess)
-        SparkSession.setActiveSession(sess)
         var item = queue.poll()
         while (item != null) {
-          runOne(sess, item._1, item._2, clearCache = false)
+          runOne(item._1, item._2, clearCache = false)
           item = queue.poll()
         }
       })
@@ -112,13 +105,12 @@ object Verify {
     // loudly
     val empties = ordered.collect { case (name, fn) if dumpEmpty(name) => (name, fn) }
     spark.catalog.clearCache() // pool done: reclaim the whole sweep's caches at once
-    if (empties.nonEmpty) {
-      System.err.println(s"[verify] retrying ${empties.size} empty dump(s) sequentially: " +
-        empties.map(_._1).mkString(","))
-      val sess = spark.newSession()
-      SparkSession.setActiveSession(sess)
-      empties.foreach { case (name, fn) => runOne(sess, name, fn, clearCache = true) }
+    empties.foreach { case (name, fn) =>
+      runOne(name, fn, clearCache = true)
+      val after = if (dumpEmpty(name)) "still empty" else "non-empty"
+      System.err.println(s"[verify] retried $name: empty -> $after")
     }
+    System.err.println(s"[verify] retried ${empties.size} empty dump(s)")
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

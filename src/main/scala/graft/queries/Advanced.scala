@@ -603,6 +603,9 @@ object Advanced {
       .filter(
         conv(substring(md5(concat_ws("|", lit("smp"), $"lid").cast("binary")), 1, 12), 16, 10)
           .cast("long") % mod === 0)
+      // lineitem can be one row group, so one task would run the whole
+      // explode and md5; the per-`b` sums are exact DECIMAL, order-free
+      .spreadAcrossCores()
     val means = rows
       .select($"lid", $"x", explode(sequence(lit(0), lit(bootB - 1))).as("b"))
       .withColumn(

@@ -141,6 +141,14 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(sites.isEmpty, s"conf.unset sites: $sites")
   }
 
+  test("src/main never calls newSession()") {
+    // one session per main (Verify's workers share it); a newSession()
+    // starts from the context conf, not its parent's runtime conf, so
+    // it would run a caller on a conf set no other entry point has
+    val sites = sitesOf("""\.\s*newSession\s*\(""".r)
+    assert(sites.isEmpty, s"newSession() call sites: $sites")
+  }
+
   test("src/main writes session conf only at its allow-listed sites") {
     // a conf write on a shared session is seen by every query planning on
     // it at that moment; each site below owns its session or writes a

@@ -49,10 +49,10 @@ class FunctionCoverageSpec extends AnyFunSuite {
 
   test("every registered function resolves by name in a live session") {
     // no registration here: the factory's GraftExtensions put the
-    // functions and the top-k strategy into the session, and Verify's
-    // worker route (newSession) inherits both
+    // functions and the top-k strategy into the session, and the clone
+    // route (GraftSession.scoped, the stream runner) inherits both
     val spark = graft.GraftSession.local(2, "fn-coverage")
-    Seq(spark, spark.newSession()).foreach { s =>
+    Seq(spark, org.apache.spark.sql.GraftSqlBridge.cloneSession(spark)).foreach { s =>
       GraftFunctions.builders.foreach { case (name, _, _) =>
         assert(s.catalog.functionExists(name), s"$name not registered")
       }
