@@ -103,7 +103,14 @@ object Kalman {
     // superdiagonal shifting the state: α_{t+1}(i) = φ_{i+1} α_t(0) + α_t(i+1) + θ_i ε
     val rr = Array.tabulate(m, m)((i, j) => theta(i) * theta(j))
     var pMat = lyapunov(tm, rr).getOrElse(return None)
+    // the recursion's state lives in buffers allocated once per call and
+    // swapped each step; every entry sums its terms in ascending index
+    // order (KalmanSpec pins the bits against a per-step allocating copy)
+    var pNew = Array.ofDim[Double](m, m)
+    val tp   = Array.ofDim[Double](m, m)
+    val k    = new Array[Double](m)
     var aVec = new Array[Double](m)
+    var aNew = new Array[Double](m)
     var sumLogF = 0.0
     var sumV2F = 0.0
     var t = 0
@@ -113,35 +120,52 @@ object Kalman {
       if (!(f > 1e-12) || f.isNaN) return None
       sumLogF += math.log(f)
       sumV2F += v * v / f
-      // K = T P Z' / F  (Z picks column 0)
-      val k = Array.tabulate(m) { i =>
+      var i = 0
+      while (i < m) {
+        val ti = tm(i)
+        // K = T P Z' / F  (Z picks column 0)
         var s = 0.0
         var j = 0
-        while (j < m) { s += tm(i)(j) * pMat(j)(0); j += 1 }
-        s / f
+        while (j < m) { s += ti(j) * pMat(j)(0); j += 1 }
+        k(i) = s / f
+        // T P
+        j = 0
+        while (j < m) {
+          var s2 = 0.0
+          var l = 0
+          while (l < m) { s2 += ti(l) * pMat(l)(j); l += 1 }
+          tp(i)(j) = s2
+          j += 1
+        }
+        i += 1
       }
       // a' = T a + K v
-      val aNew = Array.tabulate(m) { i =>
+      i = 0
+      while (i < m) {
+        val ti = tm(i)
         var s = 0.0
         var j = 0
-        while (j < m) { s += tm(i)(j) * aVec(j); j += 1 }
-        s + k(i) * v
+        while (j < m) { s += ti(j) * aVec(j); j += 1 }
+        aNew(i) = s + k(i) * v
+        i += 1
       }
       // P' = T P T' + RR' - K F K'
-      val tp = Array.tabulate(m, m) { (i, j) =>
-        var s = 0.0
-        var l = 0
-        while (l < m) { s += tm(i)(l) * pMat(l)(j); l += 1 }
-        s
+      i = 0
+      while (i < m) {
+        val tpi = tp(i)
+        var j = 0
+        while (j < m) {
+          val tj = tm(j)
+          var s = 0.0
+          var l = 0
+          while (l < m) { s += tpi(l) * tj(l); l += 1 }
+          pNew(i)(j) = s + rr(i)(j) - k(i) * f * k(j)
+          j += 1
+        }
+        i += 1
       }
-      val pNew = Array.tabulate(m, m) { (i, j) =>
-        var s = 0.0
-        var l = 0
-        while (l < m) { s += tp(i)(l) * tm(j)(l); l += 1 }
-        s + rr(i)(j) - k(i) * f * k(j)
-      }
-      aVec = aNew
-      pMat = pNew
+      val a0 = aVec; aVec = aNew; aNew = a0
+      val p0 = pMat; pMat = pNew; pNew = p0
       t += 1
     }
     val sigma2 = sumV2F / n

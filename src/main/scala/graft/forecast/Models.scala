@@ -182,14 +182,12 @@ object Models {
     */
   def armaWalkForwardFixedD1(xs: Array[Double], phi: Double, theta: Double): (Double, Double) = {
     val (train, test) = split75(xs)
-    val history = scala.collection.mutable.ArrayBuffer.from(train)
     val preds = new Array[Double](test.length)
     var i = 0
     while (i < test.length) {
-      val w = diff(history.toArray, 1)
-      val (xhat, _) = armaStateFixed(w, phi, theta)
+      val history = java.util.Arrays.copyOf(xs, train.length + i)
+      val (xhat, _) = armaStateFixed(diff(history, 1), phi, theta)
       preds(i) = xhat + history.last // invert d=1 differencing
-      history += test(i)
       i += 1
     }
     val (xhatAll, _) = armaStateFixed(diff(xs, 1), phi, theta)
@@ -204,19 +202,6 @@ object Models {
     val (alpha, beta) = holtFit(xs)
     val (l, b) = holtStateFixed(xs, alpha, beta)
     l + b
-  }
-
-  def holtWalkForward(xs: Array[Double]): (Double, Array[Double]) = {
-    val (train, test) = split75(xs)
-    val history = scala.collection.mutable.ArrayBuffer.from(train)
-    val preds = new Array[Double](test.length)
-    var i = 0
-    while (i < test.length) {
-      preds(i) = holtForecast(history.toArray)
-      history += test(i)
-      i += 1
-    }
-    (mse(preds, test), preds)
   }
 
   // ------------------------------------------------------------------
@@ -247,7 +232,11 @@ object Models {
     var fc = fc0
     var series = xs
     var k = 0
-    while (k < d) { fc += series.last; series = diff(series, 1); k += 1 }
+    while (k < d) {
+      fc += series.last
+      k += 1
+      if (k < d) series = diff(series, 1)
+    }
     fc
   }
 
@@ -256,7 +245,10 @@ object Models {
     var cur = xs
     var k = 0
     while (k < d) {
-      cur = cur.indices.drop(1).map(i => cur(i) - cur(i - 1)).toArray
+      val next = new Array[Double](math.max(cur.length - 1, 0))
+      var i = 1
+      while (i < cur.length) { next(i - 1) = cur(i) - cur(i - 1); i += 1 }
+      cur = next
       k += 1
     }
     cur
@@ -273,51 +265,119 @@ object Models {
     olsSolveRows(n, k) { (r, buf) => System.arraycopy(x(r), 0, buf, 0, k); y(r) }
   }
 
-  /** Streaming normal-equation OLS: `fill` writes design row r into the
-    * shared buffer and returns y(r) — no materialized design matrix.
-    * X'X and X'y accumulate row-outer with each (i,j) entry summing in
-    * ascending row order, bit-identical to the materialized form (the
-    * HR replay oracles pin this); the grid's ~200k small fits per
-    * series stop allocating ~300-row matrices apiece.
+  /** Writes design row r into `buf` and returns y(r). A primitive SAM, so
+    * the per-row call boxes neither the row index nor y.
     */
-  def olsSolveRows(n: Int, k: Int)(fill: (Int, Array[Double]) => Double): Option[Array[Double]] = {
-    if (n == 0 || n < k) return None
-    val a   = Array.ofDim[Double](k, k + 1)
-    val buf = new Array[Double](k)
-    var r = 0
-    while (r < n) {
-      val yr = fill(r, buf)
+  trait RowFill { def apply(r: Int, buf: Array[Double]): Double }
+
+  /** Normal equations [X'X | X'y] of a k-regressor least-squares fit,
+    * summed row by row with no materialized design matrix. Only the upper
+    * triangle of X'X is accumulated (IEEE x·y == y·x, so the mirror is the
+    * lower triangle's exact value), and every entry sums its rows in
+    * ascending row order, so rows added over several [[add]] calls give
+    * the same bits as one pass over all of them: the materialized form,
+    * the HR replay oracles and a carried walk-forward sum all agree.
+    * [[solve]] eliminates a mirrored copy, so the sums can keep growing.
+    */
+  private final class NormalEquations(k: Int) {
+    private val a    = Array.ofDim[Double](k, k + 1)
+    private val work = Array.ofDim[Double](k, k + 1)
+    private val buf  = new Array[Double](k)
+
+    /** Add design rows `from until until`, in ascending order. */
+    def add(from: Int, until: Int, fill: RowFill): Unit = {
+      var r = from
+      while (r < until) {
+        val yr = fill(r, buf)
+        var i = 0
+        while (i < k) {
+          val ai = a(i)
+          val xi = buf(i)
+          var j = i
+          while (j < k) { ai(j) += xi * buf(j); j += 1 }
+          ai(k) += xi * yr
+          i += 1
+        }
+        r += 1
+      }
+    }
+
+    /** Gaussian elimination with partial pivoting on a mirrored copy of
+      * the sums; None on a singular system.
+      */
+    def solve(): Option[Array[Double]] = {
       var i = 0
       while (i < k) {
-        val ai = a(i)
-        val xi = buf(i)
+        val wi = work(i)
         var j = 0
-        while (j < k) { ai(j) += xi * buf(j); j += 1 }
-        ai(k) += xi * yr
+        while (j < i) { wi(j) = a(j)(i); j += 1 }
+        System.arraycopy(a(i), i, wi, i, k + 1 - i)
         i += 1
       }
-      r += 1
-    }
-    // gaussian elimination
-    var col = 0
-    while (col < k) {
-      var piv = col
-      var row = col + 1
-      while (row < k) { if (math.abs(a(row)(col)) > math.abs(a(piv)(col))) piv = row; row += 1 }
-      if (math.abs(a(piv)(col)) < 1e-10) return None
-      if (piv != col) { val t = a(piv); a(piv) = a(col); a(col) = t }
-      var r2 = 0
-      while (r2 < k) {
-        if (r2 != col) {
-          val f = a(r2)(col) / a(col)(col)
-          var c2 = col
-          while (c2 <= k) { a(r2)(c2) -= f * a(col)(c2); c2 += 1 }
+      val m = work
+      var col = 0
+      while (col < k) {
+        var piv = col
+        var row = col + 1
+        while (row < k) { if (math.abs(m(row)(col)) > math.abs(m(piv)(col))) piv = row; row += 1 }
+        if (math.abs(m(piv)(col)) < 1e-10) return None
+        if (piv != col) { val t = m(piv); m(piv) = m(col); m(col) = t }
+        var r2 = 0
+        while (r2 < k) {
+          if (r2 != col) {
+            val f = m(r2)(col) / m(col)(col)
+            var c2 = col
+            while (c2 <= k) { m(r2)(c2) -= f * m(col)(c2); c2 += 1 }
+          }
+          r2 += 1
         }
-        r2 += 1
+        col += 1
       }
-      col += 1
+      val b = new Array[Double](k)
+      i = 0
+      while (i < k) { b(i) = m(i)(k) / m(i)(i); i += 1 }
+      Some(b)
     }
-    Some(Array.tabulate(k)(i2 => a(i2)(k) / a(i2)(i2)))
+  }
+
+  /** Streaming normal-equation OLS: `fill` writes design row r into the
+    * shared buffer and returns y(r). One fresh [[NormalEquations]] pass;
+    * the grid's ~200k small fits per series allocate no design matrix.
+    */
+  def olsSolveRows(n: Int, k: Int)(fill: RowFill): Option[Array[Double]] = {
+    if (n == 0 || n < k) return None
+    val ne = new NormalEquations(k)
+    ne.add(0, n, fill)
+    ne.solve()
+  }
+
+  /** Stage-1 (long-AR) normal equations of a series that only grows at
+    * its end. A walk-forward step's differenced history is the previous
+    * step's plus one element, so while the long-AR order m holds, its
+    * design rows are the previous rows plus one, and adding that row to
+    * the carried sums repeats a fresh ascending-row accumulation bit for
+    * bit (the [[sesWalkForward]] argument). A new m (only while n < 40)
+    * starts the sums over. A single fit uses a fresh one.
+    */
+  private final class LongAr {
+    private var m    = -1
+    private var rows = 0
+    private var ne: NormalEquations = _
+
+    def fit(w: Array[Double], m: Int): Option[Array[Double]] = {
+      val nr = w.length - m
+      if (nr == 0 || nr < m + 1) return None
+      if (m != this.m) { this.m = m; rows = 0; ne = new NormalEquations(m + 1) }
+      ne.add(rows, nr, (r, buf) => {
+        val t = m + r
+        buf(0) = 1.0
+        var j = 1
+        while (j <= m) { buf(j) = w(t - j); j += 1 }
+        w(t)
+      })
+      rows = nr
+      ne.solve()
+    }
   }
 
   /** In-sample innovations recursion for parameters (c, φ, θ) on w with
@@ -383,7 +443,7 @@ object Models {
     * and the innovation array (for forecasting — computing it once here
     * replaces a second identical recursion per fit).
     */
-  private def armaFit(w: Array[Double], p: Int, q: Int): Option[(Array[Double], Array[Double], Double, Double, Array[Double])] = {
+  private def armaFit(w: Array[Double], p: Int, q: Int, longAr: LongAr): Option[(Array[Double], Array[Double], Double, Double, Array[Double])] = {
     val n = w.length
     if (p == 0 && q == 0) {
       val c = w.sum / n
@@ -397,14 +457,7 @@ object Models {
       else {
         val m = math.min(math.max(p + q + 2, 4), math.max(1, n / 4))
         if (n <= m + p + q + 1) return None
-        val nr = n - m
-        val b = olsSolveRows(nr, m + 1) { (r, buf) =>
-          val t = m + r
-          buf(0) = 1.0
-          var j = 1
-          while (j <= m) { buf(j) = w(t - j); j += 1 }
-          w(t)
-        }.getOrElse(return None)
+        val b = longAr.fit(w, m).getOrElse(return None)
         val res = new Array[Double](n)
         var t = m
         while (t < n) {
@@ -443,10 +496,13 @@ object Models {
     * 1-step-ahead case, matching `arima_models.py:203-209`'s use of
     * `forecast()`'s stderr).
     */
-  def arimaFit(xs: Array[Double], p: Int, d: Int, q: Int): Option[ArimaFit] = {
+  def arimaFit(xs: Array[Double], p: Int, d: Int, q: Int): Option[ArimaFit] =
+    arimaFit(xs, p, d, q, new LongAr)
+
+  private def arimaFit(xs: Array[Double], p: Int, d: Int, q: Int, longAr: LongAr): Option[ArimaFit] = {
     if (xs.length < d + math.max(p, q) + 5) return None
     val w = diff(xs, d)
-    armaFit(w, p, q).map { case (phi, theta, c, s2, eps) =>
+    armaFit(w, p, q, longAr).map { case (phi, theta, c, s2, eps) =>
       val fc = forecastFromEps(xs, w, d, c, phi, theta, eps)
       ArimaFit(p, d, q, phi, theta, c, s2, fc, math.sqrt(math.max(s2, 0.0)))
     }
@@ -595,16 +651,22 @@ object Models {
     }
   }
 
+  /** M3 walk-forward for ARIMA: refit on each growing prefix of `xs` and
+    * predict the next value. The prefixes share one [[LongAr]], so the
+    * stage-1 sums grow by one row per step instead of being rebuilt;
+    * every prediction equals a fresh [[arimaFit]] of the same prefix bit
+    * for bit (ModelsSpec pins it). Stage 2 is summed afresh each step:
+    * its regressors are the stage-1 residuals, which change every step.
+    */
   def arimaWalkForward(xs: Array[Double], p: Int, d: Int, q: Int): Option[(Double, Array[Double])] = {
     val (train, test) = split75(xs)
     if (train.length < d + math.max(p, q) + 5 || test.isEmpty) return None
-    val history = scala.collection.mutable.ArrayBuffer.from(train)
+    val longAr = new LongAr
     val preds = new Array[Double](test.length)
     var i = 0
     while (i < test.length) {
-      val fit = arimaFit(history.toArray, p, d, q).getOrElse(return None)
-      preds(i) = fit.forecast
-      history += test(i)
+      val history = java.util.Arrays.copyOf(xs, train.length + i)
+      preds(i) = arimaFit(history, p, d, q, longAr).getOrElse(return None).forecast
       i += 1
     }
     Some((mse(preds, test), preds))

@@ -170,27 +170,39 @@ object SqlSurfaceQueries {
     // profile_name reuses that partitioning, so the fits run spread
     // across cores. Same rows, same fold per profile, same result
     // (oracle/golden unchanged).
+    // The `> 5` week cut is a per-profile window count BELOW the
+    // aggregate, filtered before any fit: a HAVING count(*) > 5 above it
+    // ran the whole grid for groups it then threw away. The window's
+    // PARTITION BY reuses the REPARTITION's hash(profile_name) layout
+    // (no exchange), and a group's row count is its week count, so the
+    // kept groups and their series are the ones HAVING kept.
+    // REPARTITION(1) above the fit: the one-row-per-profile result is
+    // sorted in one partition, so ORDER BY plans no range exchange,
+    // whose sampling job would run every profile's grid a second time.
     "sql_arima_auto" -> ((s, d) => {
       val spread = s.sparkContext.defaultParallelism
       s.sql(
-        s"""SELECT profile_name, f.best_config, f.mse, f.prediction,
+        s"""SELECT /*+ REPARTITION(1) */ profile_name, f.best_config, f.mse, f.prediction,
            |  f.std_error, f.lower_bound, f.upper_bound
            |FROM (
            |  SELECT profile_name,
            |    forecast_arima(transform(array_sort(collect_list(struct(week_date, weight))),
            |                   x -> x.weight)) AS f
            |  FROM (
-           |    SELECT /*+ REPARTITION($spread, profile_name) */ profile_name, week_date, weight
+           |    SELECT profile_name, week_date, weight,
+           |      count(*) OVER (PARTITION BY profile_name) AS weeks
            |    FROM (
-           |      SELECT p_brand AS profile_name,
-           |        CAST(date_trunc('week', l_shipdate) AS DATE) AS week_date,
-           |        CAST(SUM(CAST(l_quantity * p_retailprice / 100.0 AS DECIMAL(18,6))) AS DOUBLE) AS weight
-           |      FROM parquet.`$d/lineitem.parquet` JOIN parquet.`$d/part.parquet`
-           |        ON l_partkey = p_partkey
-           |      WHERE l_shipdate < TIMESTAMP '2001-06-01'
-           |      GROUP BY 1, 2))
-           |  GROUP BY profile_name
-           |  HAVING count(*) > 5)
+           |      SELECT /*+ REPARTITION($spread, profile_name) */ profile_name, week_date, weight
+           |      FROM (
+           |        SELECT p_brand AS profile_name,
+           |          CAST(date_trunc('week', l_shipdate) AS DATE) AS week_date,
+           |          CAST(SUM(CAST(l_quantity * p_retailprice / 100.0 AS DECIMAL(18,6))) AS DOUBLE) AS weight
+           |        FROM parquet.`$d/lineitem.parquet` JOIN parquet.`$d/part.parquet`
+           |          ON l_partkey = p_partkey
+           |        WHERE l_shipdate < TIMESTAMP '2001-06-01'
+           |        GROUP BY 1, 2)))
+           |  WHERE weeks > 5
+           |  GROUP BY profile_name)
            |WHERE f IS NOT NULL
            |ORDER BY profile_name""".stripMargin)
     }),

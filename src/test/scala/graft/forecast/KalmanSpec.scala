@@ -40,6 +40,74 @@ class KalmanSpec extends AnyFunSuite {
     assert(math.abs(r.negLogLik - expected) < 1e-9)
   }
 
+  /** The filter recursion written with fresh arrays per time step
+    * (Array.tabulate for K, a, TP and P): the reference that the
+    * buffered [[Kalman.filter]] must reproduce bit for bit.
+    */
+  private def allocatingFilter(w: Array[Double], p: Int, q: Int, params: Array[Double]): Option[Kalman.FilterResult] = {
+    val n = w.length
+    val m = math.max(p, q + 1)
+    val mu = params(0)
+    val phi = Array.tabulate(m)(i => if (i < p) params(1 + i) else 0.0)
+    val theta = Array.tabulate(m)(i => if (i == 0) 1.0 else if (i - 1 < q) params(1 + p + i - 1) else 0.0)
+    val tm = Array.tabulate(m, m)((i, j) => if (j == 0) phi(i) else if (j == i + 1) 1.0 else 0.0)
+    val rr = Array.tabulate(m, m)((i, j) => theta(i) * theta(j))
+    var pMat = Kalman.lyapunov(tm, rr).getOrElse(return None)
+    var aVec = new Array[Double](m)
+    var sumLogF = 0.0
+    var sumV2F = 0.0
+    for (t <- 0 until n) {
+      val v = w(t) - mu - aVec(0)
+      val f = pMat(0)(0)
+      if (!(f > 1e-12) || f.isNaN) return None
+      sumLogF += math.log(f)
+      sumV2F += v * v / f
+      val k = Array.tabulate(m) { i =>
+        var s = 0.0
+        for (j <- 0 until m) s += tm(i)(j) * pMat(j)(0)
+        s / f
+      }
+      val aNew = Array.tabulate(m) { i =>
+        var s = 0.0
+        for (j <- 0 until m) s += tm(i)(j) * aVec(j)
+        s + k(i) * v
+      }
+      val tp = Array.tabulate(m, m) { (i, j) =>
+        var s = 0.0
+        for (l <- 0 until m) s += tm(i)(l) * pMat(l)(j)
+        s
+      }
+      val pNew = Array.tabulate(m, m) { (i, j) =>
+        var s = 0.0
+        for (l <- 0 until m) s += tp(i)(l) * tm(j)(l)
+        s + rr(i)(j) - k(i) * f * k(j)
+      }
+      aVec = aNew
+      pMat = pNew
+    }
+    val sigma2 = sumV2F / n
+    if (sigma2 <= 0 || sigma2.isNaN) return None
+    val nll = n * math.log(sigma2) + sumLogF
+    if (nll.isNaN) return None
+    Some(Kalman.FilterResult(nll, sigma2, mu + aVec(0), pMat(0)(0) * sigma2))
+  }
+
+  test("filter is BIT-identical to the per-step allocating recursion") {
+    def bits(r: Option[Kalman.FilterResult]) =
+      r.map(f => Seq(f.negLogLik, f.sigma2, f.forecast, f.forecastVar).map(java.lang.Double.doubleToRawLongBits))
+    val rnd = new scala.util.Random(5)
+    // (p, q) up to state dimension m = max(p, q + 1) = 5
+    for (p <- 0 to 5; q <- 0 to 4 if math.max(p, q + 1) <= 5; trial <- 1 to 6) {
+      val n = 5 + rnd.nextInt(80)
+      val w = Array.fill(n)(3.0 + rnd.nextGaussian() * 2)
+      // small coefficients stay stationary; a few large ones probe the None paths
+      val scale = if (trial == 6) 1.5 else 0.8 / math.max(1, p + q)
+      val params = Array.tabulate(1 + p + q)(i => if (i == 0) 3.0 else (rnd.nextDouble() * 2 - 1) * scale)
+      val got = bits(Kalman.filter(w, p, q, params))
+      assert(got == bits(allocatingFilter(w, p, q, params)), s"($p,$q) trial $trial n=$n")
+    }
+  }
+
   test("MLE recovers AR(1) coefficient and mean") {
     val rnd = new scala.util.Random(3)
     val n = 1500

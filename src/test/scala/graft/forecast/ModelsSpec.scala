@@ -63,6 +63,47 @@ class ModelsSpec extends AnyFunSuite {
     }
   }
 
+  test("ARIMA walk-forward carried stage-1 sums are BIT-identical to per-step fresh fits") {
+    // arimaWalkForward carries the long-AR normal equations from one
+    // prefix to the next and adds only the new row; a fresh arimaFit per
+    // prefix sums every row again. The sums are ascending-row in both, so
+    // the outcome (failure, None, or every bit of MSE and predictions)
+    // must agree for all 50 grid configs. Short series make the long-AR
+    // order m = min(max(p+q+2, 4), n/4) change as the prefix grows.
+    def bits(xs: Array[Double]) = xs.map(java.lang.Double.doubleToRawLongBits).toSeq
+    val rnd = new scala.util.Random(23)
+    for (trial <- 1 to 12) {
+      val n = if (trial <= 6) 10 + rnd.nextInt(30) else 40 + rnd.nextInt(50)
+      val xs = new Array[Double](n)
+      xs(0) = rnd.nextDouble() * 10
+      for (t <- 1 until n) xs(t) = 0.6 * xs(t - 1) + rnd.nextGaussian() + (if (trial % 2 == 0) 0.3 * t else 0.0)
+      for (p <- 0 until 5; d <- 0 until 2; q <- 0 until 5) {
+        val fresh = scala.util.Try {
+          val (train, test) = Models.split75(xs)
+          if (train.length < d + math.max(p, q) + 5 || test.isEmpty) None
+          else {
+            val fits = test.indices.map(i => Models.arimaFit(xs.take(train.length + i), p, d, q))
+            if (fits.exists(_.isEmpty)) None
+            else {
+              val preds = fits.map(_.get.forecast).toArray
+              Some((Models.mse(preds, test), preds))
+            }
+          }
+        }
+        val carried = scala.util.Try(Models.arimaWalkForward(xs, p, d, q))
+        val cfg = s"trial $trial n=$n ($p,$d,$q)"
+        assert(carried.isSuccess == fresh.isSuccess, cfg)
+        for (c <- carried; f <- fresh) {
+          assert(c.isDefined == f.isDefined, cfg)
+          for ((cm, cp) <- c; (fm, fp) <- f) {
+            assert(java.lang.Double.doubleToRawLongBits(cm) == java.lang.Double.doubleToRawLongBits(fm), s"$cfg mse")
+            assert(bits(cp) == bits(fp), s"$cfg preds")
+          }
+        }
+      }
+    }
+  }
+
   test("fixed-param Holt recursion matches hand computation") {
     // xs = [10, 12, 15]; l0=10, b0=2
     // step1: l=.8*12+.2*12=12, b=.2*(12-10)+.8*2=2
@@ -86,7 +127,10 @@ class ModelsSpec extends AnyFunSuite {
 
   test("Holt walk-forward beats SES on trending data") {
     val xs = Array.tabulate(40)(i => 10.0 + 3.0 * i)
-    val (holtMse, _) = Models.holtWalkForward(xs)
+    // M3 walk-forward with a per-prefix Holt refit
+    val (train, test) = Models.split75(xs)
+    val holtPreds = test.indices.map(i => Models.holtForecast(xs.take(train.length + i))).toArray
+    val holtMse = Models.mse(holtPreds, test)
     val (sesMse, _) = Models.sesWalkForward(xs, 0.6)
     assert(holtMse < sesMse)
   }

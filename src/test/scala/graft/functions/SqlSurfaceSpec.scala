@@ -188,6 +188,30 @@ class SqlSurfaceSpec extends SparkSpec {
     assert(n == 1, s"forecast_arima appears $n times in the optimized plan")
   }
 
+  test("sql_arima_auto filters on the per-profile week count BELOW the fit") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Count
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Window}
+    val plan = SqlSurfaceQueries.queries("sql_arima_auto")(spark, sf0001).queryExecution.optimizedPlan
+    val fit = plan.collect {
+      case a: Aggregate if a.aggregateExpressions.exists(_.exists(_.isInstanceOf[ForecastArima])) => a
+    }
+    assert(fit.size == 1, plan.treeString)
+    // a group the week cut drops must never reach forecast_arima
+    val countCut = fit.head.child.exists {
+      case f: Filter => f.child.exists {
+        case w: Window => w.windowExpressions.exists(_.exists(_.isInstanceOf[Count]))
+        case _         => false
+      }
+      case _ => false
+    }
+    assert(countCut, plan.treeString)
+  }
+
+  test("sql_arima_auto sorts without a range exchange, so no sampling job refits the grid") {
+    val physical = SqlSurfaceQueries.queries("sql_arima_auto")(spark, sf0001).queryExecution.executedPlan
+    assert(!physical.toString.contains("rangepartitioning"), physical.toString)
+  }
+
   test("sql_hw_by_profile / sql_croston_by_profile match their DataFrame jobs bit-exactly") {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getString(0), (1 until r.length).map(r.getDouble).toSeq)).toSeq
